@@ -27,6 +27,15 @@ import time
 
 
 def main() -> None:
+    # The I/O kernel's scratch goes on every exit path, not only success.
+    io_tmp = tempfile.mkdtemp(prefix="dfspark_bench_io_")
+    try:
+        _bench(io_tmp)
+    finally:
+        shutil.rmtree(io_tmp, ignore_errors=True)
+
+
+def _bench(io_tmp: str) -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from datafusion_spark import get_spark
@@ -72,8 +81,6 @@ def main() -> None:
             ).agg(F.sum("s"), F.max("n")).collect()
             runs.append(time.perf_counter() - t0)
         return min(runs)
-
-    io_tmp = tempfile.mkdtemp(prefix="dfspark_bench_io_")
 
     def measure_io(runs_n: int = 1) -> float:
         """Host I/O-phase kernel (r13, r12 verdict item 2a): a FIXED-SIZE
@@ -137,7 +144,6 @@ def main() -> None:
     calibration_end = measure_calibration(runs_n=3)
     cal_samples.append((float(len(names)), calibration_end))
     io_samples.append((float(len(names)), measure_io(runs_n=2)))
-    shutil.rmtree(io_tmp, ignore_errors=True)
     # nearest-in-time kernel sample per query (by run position)
     cal_per_query = {
         name: min(cal_samples, key=lambda pv: abs(pv[0] - (i + 0.5)))[1]

@@ -13,6 +13,7 @@ partition columns automatically, so nothing here changes — only the paths do.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +76,14 @@ def ensure_runtime_tuned(spark: SparkSession) -> None:
     # applied if still at the 1.0 default, so a deliberate caller value wins.
     if conf.get("spark.sql.sources.fileCompressionFactor", "1.0") == "1.0":
         conf.set("spark.sql.sources.fileCompressionFactor", "6.0")
+    # Not here: spark.python.sql.dataFrameDebugging.enabled (see
+    # session.py) is a static conf, so a live session rejects the set.
+
+
+def repo_root() -> str:
+    """The checkout's root: persisted artifacts live under its
+    ``spark-warehouse/``."""
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -136,6 +145,7 @@ def cached_parquet(spark: SparkSession, *paths: str) -> DataFrame:
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = _split_path(spark, sf_dir, name)
     if name == "events":
         # events.ts has shipped as either parquet TIMESTAMP(NANOS) (which
         # Spark's vectorized reader rejects outright) or TIMESTAMP(MICROS)
@@ -157,11 +167,114 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return spark.read.parquet(path)
+
+
+def _scan_splits(spark: SparkSession, file_bytes: int) -> int:
+    """Splits Spark cuts one file of ``file_bytes`` into, as
+    ``FilePartition.maxSplitBytes`` sizes them for a single-file scan."""
+    conf = spark.conf
+    as_bytes = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    max_bytes = as_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    open_cost = as_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    min_parts = conf.get("spark.sql.files.minPartitionNum", None)
+    if min_parts is None:
+        min_parts = conf.get("spark.sql.leafNodeDefaultParallelism", None)
+    parts = int(min_parts or spark.sparkContext.defaultParallelism)
+    split = min(max_bytes, max(open_cost, (file_bytes + open_cost) // parts))
+    return math.ceil(file_bytes / split)
+
+
+def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The file to scan for one table: the source, or a row-group-aligned
+    copy when the source has fewer row groups than Spark has splits.
+
+    A parquet split reads only the row groups whose midpoint falls inside
+    it, so a single-row-group file of three splits runs as one busy task
+    and two empty ones (sf0.1 lineitem: one task reads all 600k rows).  The
+    copy has the same rows, order, schema and codec, one row group per
+    split, and is written once under
+    ``spark-warehouse/derived_splits/<sf_dir basename>/<source mtime_ns>/``.
+    Files under the open cost (4 MB) stay one split and are never copied;
+    writer-sized row groups (every table at 100 TB) already cover their
+    splits, and directories are left to Spark."""
+    src = table_path(sf_dir, name)
+    try:
+        st = os.stat(src)
+    except OSError:
+        return src  # missing or unreadable: let spark.read raise
+    if not os.path.isfile(src):
+        return src
+    splits = _scan_splits(spark, st.st_size)
+    if splits < 2:
+        return src
+    import pyarrow.parquet as pq
+
+    try:
+        src_md = pq.ParquetFile(src).metadata
+    except (OSError, ValueError):
+        return src  # not readable as parquet here: let spark.read decide
+    if src_md.num_row_groups >= splits:
+        return src
+    out = os.path.join(repo_root(), "spark-warehouse", "derived_splits",
+                       os.path.basename(os.path.normpath(sf_dir)),
+                       str(st.st_mtime_ns), f"{name}.parquet")
+    try:
+        copy_md = pq.ParquetFile(out).metadata
+    except (OSError, ValueError):
+        copy_md = None
+    if copy_md is None or copy_md.num_row_groups < splits:
+        try:
+            _write_row_groups(src, out, splits)
+            copy_md = pq.ParquetFile(out).metadata
+        except (OSError, ValueError):
+            return src  # e.g. a read-only checkout: scan the source
+    return out if _same_layout(src_md, copy_md) else src
+
+
+def _write_row_groups(src: str, out: str, groups: int) -> None:
+    """Rewrite ``src`` to ``out`` with ``groups`` equal row groups, same
+    schema, order and codec; streamed one group at a time, published
+    atomically."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(src)
+    md = pf.metadata
+    per_group = max(1, math.ceil(md.num_rows / groups))
+    codec = md.row_group(0).column(0).compression if md.num_row_groups else "NONE"
+    codec = "NONE" if codec == "UNCOMPRESSED" else codec
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = f"{out}.tmp{os.getpid()}"
+    try:
+        with pq.ParquetWriter(tmp, pf.schema_arrow, compression=codec,
+                              version=md.format_version) as writer:
+            held = None
+            for batch in pf.iter_batches(batch_size=per_group):
+                part = pa.Table.from_batches([batch])
+                held = part if held is None else pa.concat_tables([held, part])
+                while held.num_rows >= per_group:
+                    writer.write_table(held.slice(0, per_group), row_group_size=per_group)
+                    held = held.slice(per_group)
+            if held is not None and held.num_rows:
+                writer.write_table(held, row_group_size=per_group)
+        os.replace(tmp, out)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _same_layout(a, b) -> bool:
+    """Same rows, physical schema and codecs in two parquet footers."""
+    def codecs(md):
+        return {md.row_group(r).column(c).compression
+                for r in range(md.num_row_groups) for c in range(md.num_columns)}
+    return (a.num_rows == b.num_rows and a.schema.equals(b.schema)
+            and codecs(a) == codecs(b))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -51,8 +51,9 @@ def cb_overview_counts(spark, sf_dir):
             F.count(F.lit(1)).alias("pn"),
             F.sum(F.col("value").cast("decimal(38,6)")).alias("ps"),
         )
+        # SUM over zero pairs is NULL; COUNT(*) over no rows is 0.
         return pairs.agg(
-            F.sum("pn").alias("n_events"),
+            F.coalesce(F.sum("pn"), F.lit(0)).alias("n_events"),
             F.count_distinct(F.col("user_id")).alias("n_users"),
             F.count_distinct(F.col("event_type")).alias("n_types"),
             F.sum("ps").cast("double").alias("total_value"),

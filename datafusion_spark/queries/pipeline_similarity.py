@@ -26,14 +26,10 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_spark.catalog import cached_parquet, load_table
+from datafusion_spark.catalog import cached_parquet, load_table, repo_root
 from datafusion_spark.queries.helpers import fan_out
 from datafusion_spark.queries.registry import query
 from datafusion_spark.queries.helpers import values_df
-
-
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_PLANES = 8
 DIM = 64
@@ -378,7 +374,7 @@ def _centroids(spark, sf_dir):
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _CENTROID_CACHE:
         dest = os.path.join(
-            _repo_root(), "spark-warehouse", "derived_ann",
+            repo_root(), "spark-warehouse", "derived_ann",
             os.path.basename(sf_dir.rstrip("/")),
             f"kmeans_k{_KM_K}i{_KM_ITERS}.json",
         )
@@ -926,7 +922,7 @@ def _pq_codebooks(spark, sf_dir, flavor="raw", emb=None):
     key = (spark.sparkContext.applicationId, sf_dir, flavor)
     if key not in _PQ_CACHE:
         dest = os.path.join(
-            _repo_root(), "spark-warehouse", "derived_ann",
+            repo_root(), "spark-warehouse", "derived_ann",
             os.path.basename(sf_dir.rstrip("/")),
             f"pq_codebooks_{flavor}_m{_PQ_M}d{_PQ_D}k{_PQ_K}i{_PQ_ITERS}.json",
         )
@@ -957,7 +953,7 @@ def _pq_assign(spark, sf_dir, flavor="raw", emb=None):
     """
     cents = _pq_codebooks(spark, sf_dir, flavor=flavor, emb=emb)
     dest = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_ann",
+        repo_root(), "spark-warehouse", "derived_ann",
         os.path.basename(sf_dir.rstrip("/")),
         f"pq_codes_{flavor}_m{_PQ_M}d{_PQ_D}k{_PQ_K}i{_PQ_ITERS}.parquet",
     )
@@ -1672,7 +1668,7 @@ def _ensure_ivf_lists(spark, sf_dir, with_meta: bool = False) -> list[str]:
 
     flavor = "ivf_lists_meta" if with_meta else "ivf_lists"
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_ann",
+        repo_root(), "spark-warehouse", "derived_ann",
         os.path.basename(sf_dir.rstrip("/")),
         f"{flavor}_{_ANN_LISTS_VERSION}",
     )
@@ -1709,7 +1705,7 @@ def _ensure_ivf_tombstones(spark, sf_dir) -> str:
     import shutil
 
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_ann",
+        repo_root(), "spark-warehouse", "derived_ann",
         os.path.basename(sf_dir.rstrip("/")),
         f"ivf_del_{_ANN_LISTS_VERSION}",
     )
@@ -1874,7 +1870,7 @@ def _ensure_ivf_delete_compacted(spark, sf_dir) -> str:
     import shutil
 
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_ann",
+        repo_root(), "spark-warehouse", "derived_ann",
         os.path.basename(sf_dir.rstrip("/")),
         f"ivf_delcmp_{_ANN_LISTS_VERSION}",
     )

@@ -21,7 +21,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_spark.catalog import cached_parquet, load_table
+from datafusion_spark.catalog import cached_parquet, load_table, repo_root
 from datafusion_spark.queries.helpers import fan_out
 from datafusion_spark.queries.registry import query
 from datafusion_spark.queries.helpers import values_df
@@ -1265,12 +1265,6 @@ _BM25_SERVE_K = 5
 _TEXT_INDEX_VERSION = "v1"  # bump on any index-layout/scoring-input change
 
 
-def _repo_root() -> str:
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-
 def _ensure_bm25_index(spark, sf_dir) -> tuple[str, int, int]:
     """Build-or-load the persisted BM25 inverted index for a corpus.
 
@@ -1290,7 +1284,7 @@ def _ensure_bm25_index(spark, sf_dir) -> tuple[str, int, int]:
     a scoring-input change must bump _TEXT_INDEX_VERSION.
     """
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_text",
+        repo_root(), "spark-warehouse", "derived_text",
         os.path.basename(sf_dir.rstrip("/")), f"bm25_{_TEXT_INDEX_VERSION}",
     )
     if not os.path.isfile(os.path.join(base, "_DONE")):
@@ -1345,7 +1339,7 @@ def _ensure_bm25_segments(spark, sf_dir) -> tuple[list[str], int, int]:
     vocabulary-sized job).  Same atomic-rename build protocol as
     _ensure_bm25_index."""
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_text",
+        repo_root(), "spark-warehouse", "derived_text",
         os.path.basename(sf_dir.rstrip("/")),
         f"bm25_seg_{_TEXT_INDEX_VERSION}",
     )
@@ -1392,7 +1386,7 @@ def _ensure_bm25_tombstones(spark, sf_dir) -> tuple[str, int, int]:
     Deletion set for the registry entry: doc_id % 7 == 3.
     Same atomic-rename protocol as the other index artifacts."""
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_text",
+        repo_root(), "spark-warehouse", "derived_text",
         os.path.basename(sf_dir.rstrip("/")),
         f"bm25_del_{_TEXT_INDEX_VERSION}",
     )
@@ -1752,7 +1746,7 @@ def _ensure_bm25_compacted(spark, sf_dir) -> tuple[str, int, int]:
       scalars:    n_docs / total_len add.
     Same atomic-rename build protocol as _ensure_bm25_index."""
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_text",
+        repo_root(), "spark-warehouse", "derived_text",
         os.path.basename(sf_dir.rstrip("/")),
         f"bm25_cmp_{_TEXT_INDEX_VERSION}",
     )
@@ -1868,7 +1862,7 @@ def _ensure_bm25_delete_compacted(spark, sf_dir) -> tuple[str, int, int]:
       scalars:    n_docs/total_len minus the recorded deltas.
     Same atomic-rename build protocol as the other index artifacts."""
     base = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_text",
+        repo_root(), "spark-warehouse", "derived_text",
         os.path.basename(sf_dir.rstrip("/")),
         f"bm25_delcmp_{_TEXT_INDEX_VERSION}",
     )

@@ -1001,12 +1001,14 @@ def _append_where(text: str, name: str, pred: str) -> str:
     """CTE text with ``pred`` conjoined to its WHERE clause (the predicate
     references BASE-table columns like o_orderdate, which the CTE's
     projection drops — so it must land inside the CTE, not around it).
-    Depth-aware scan for an existing top-level WHERE; the derive CTEs this
-    targets are plain SELECT..FROM..[WHERE] shapes (asserted)."""
+    Depth-aware scan for an existing top-level WHERE, which is wrapped as
+    ``WHERE (orig) AND (pred)`` so a top-level ``a OR b`` keeps its
+    meaning; the derive CTEs this targets are plain SELECT..FROM..[WHERE]
+    shapes (asserted)."""
     prefix = f"{name} AS ("
     assert text.startswith(prefix) and text.rstrip().endswith(")"), text[:60]
     inner = text.rstrip()[len(prefix):-1]
-    depth, has_where = 0, False
+    depth, where_at = 0, -1
     for i, ch in enumerate(inner):
         if ch == "(":
             depth += 1
@@ -1014,8 +1016,8 @@ def _append_where(text: str, name: str, pred: str) -> str:
             depth -= 1
         elif depth == 0 and inner[i:i + 6] == "WHERE " and (
                 i == 0 or not (inner[i - 1].isalnum() or inner[i - 1] == "_")):
-            has_where = True
-    for kw in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT"):
+            where_at = i
+    for kw in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT", "UNION"):
         d = 0
         for i, ch in enumerate(inner):
             if ch == "(":
@@ -1024,8 +1026,10 @@ def _append_where(text: str, name: str, pred: str) -> str:
                 d -= 1
             assert not (d == 0 and inner[i:i + len(kw)] == kw), \
                 f"{name}: cte_where cannot target a CTE with top-level {kw}"
-    conj = "AND" if has_where else "WHERE"
-    return f"{prefix}{inner}\n  {conj} ({pred})\n)"
+    if where_at < 0:
+        return f"{prefix}{inner}\n  WHERE ({pred})\n)"
+    cond = inner[where_at + len("WHERE "):].strip()
+    return f"{prefix}{inner[:where_at]}WHERE ({cond}\n  )\n  AND ({pred})\n)"
 
 
 def _kept_ctes(body: str) -> list[tuple[str, str]]:

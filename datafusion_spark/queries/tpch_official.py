@@ -38,7 +38,9 @@ from __future__ import annotations
 
 import os
 
-from datafusion_spark.catalog import note_view_shadows, register_views, view_state
+from datafusion_spark.catalog import (
+    note_view_shadows, register_views, repo_root, view_state,
+)
 from datafusion_spark.queries.registry import query
 
 # Deterministic partsupp derivation — identical SQL text for both engines.
@@ -54,10 +56,6 @@ FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
 """
 
 
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
 def _materialize(spark, sf_dir: str, sql: str, fname: str,
                  coalesce1: bool = True) -> str:
     """Materialize one derived relation to parquet, once per sf_dir; returns
@@ -69,7 +67,7 @@ def _materialize(spark, sf_dir: str, sql: str, fname: str,
     pid-suffixed temp dir and the first atomic rename wins.
     """
     dest = os.path.join(
-        _repo_root(), "spark-warehouse", "derived_tpch",
+        repo_root(), "spark-warehouse", "derived_tpch",
         os.path.basename(sf_dir.rstrip("/")), fname,
     )
     if not os.path.isdir(dest):

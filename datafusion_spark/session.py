@@ -62,6 +62,11 @@ def tune(builder: SparkSession.Builder, shuffle_partitions: int | None = None):
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4.1 wraps F.col and every Column method to record the
+        # Python call site for error messages: ~5 py4j round trips and a
+        # failing IPython import per call, a third to a half of a TPC-H
+        # query's build time.  Errors still carry the JVM-side context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
 
 

@@ -1032,3 +1032,32 @@ def test_two_level_distinct_guard_shapes(spark, monkeypatch):
                 assert "Expand" not in plan(big_df), (name, sf)
             assert got_small == got_big, (name, sf)
     monkeypatch.delenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES", raising=False)
+
+
+def test_overview_counts_empty_events_both_shapes(spark, monkeypatch, tmp_path):
+    """On an empty events table both multi-distinct shapes of
+    cb_overview_counts return the oracle's row: COUNT(*) is 0, not the NULL
+    a SUM over zero first-level pairs gives."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from datafusion_spark.catalog import table_path
+    from datafusion_spark.queries import ORACLES, QUERIES
+    from tests.conftest import SF_SMALL
+
+    empty = str(tmp_path / "events.parquet")
+    pq.write_table(pq.read_schema(table_path(SF_SMALL, "events")).empty_table(), empty)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{empty}')")
+    want = tuple(con.execute(ORACLES["cb_overview_counts"]).fetchone())
+    con.close()
+    assert want[0] == 0, want
+
+    got = {}
+    for limit in (None, "0"):
+        if limit is None:
+            monkeypatch.delenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES", raising=False)
+        else:
+            monkeypatch.setenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES", limit)
+        got[limit] = tuple(QUERIES["cb_overview_counts"](spark, str(tmp_path)).collect()[0])
+    assert got == {None: want, "0": want}, got

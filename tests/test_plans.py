@@ -504,3 +504,18 @@ def test_tpcds_q64_q67_rewrite_equivalent(spark):
     for name in ("tpcds_q64", "tpcds_q67", "tpcds_q51"):
         assert "o_orderdate" not in tx._BODIES[name]
         assert "SUM(ps)" not in tx._BODIES[name]
+
+
+def test_append_where_parenthesizes_top_level_or(spark):
+    """A pushed predicate conjoins to the whole original WHERE of its CTE:
+    ``WHERE (a OR b) AND (pred)``, never ``a OR (b AND pred)``."""
+    from datafusion_spark.queries.tpcds_exec import _append_where
+
+    cte = "t AS (SELECT x FROM VALUES (1), (2), (3) v(x) WHERE x = 1 OR x = 3)"
+    out = _append_where(cte, "t", "x > 1")
+    assert "WHERE (x = 1 OR x = 3" in out and out.rstrip().endswith("AND (x > 1)\n)")
+    rows = spark.sql(f"WITH {out} SELECT x FROM t").collect()
+    assert [r.x for r in rows] == [3]
+    # no WHERE yet: the predicate becomes the WHERE
+    bare = _append_where("t AS (SELECT x FROM VALUES (1), (2) v(x))", "t", "x > 1")
+    assert [r.x for r in spark.sql(f"WITH {bare} SELECT x FROM t").collect()] == [2]
