@@ -113,8 +113,10 @@ def _failed_of(latest: dict[str, bool]) -> set[str]:
 
 
 def _interleave_families() -> None:
-    """Reorder the registries: unverified oracle-checkable entries first,
-    round-robin across modules (families) within each tier.
+    """Reorder the registries in three tiers — latest-FAIL entries (see
+    _failed_of), then unverified oracle-checkable entries, then the rest —
+    round-robin across modules (families) within each tier.  The tiers are
+    derived from CORRECTNESS_r*.json alone; no entry is pinned by hand.
 
     The driver's correctness sweep walks the registry in insertion order and
     truncates at a 50-entry budget.  Two goals:
@@ -129,38 +131,12 @@ def _interleave_families() -> None:
     verified = _verified_of(latest)
     failed = _failed_of(latest)
 
-    # Hand-pinned front of the prefix for the CURRENT round (r12): entries
-    # that are NEW or materially CHANGED this round only — the whole r11
-    # pin list went driver-green in CORRECTNESS_r11 and unpinned itself
-    # (a verified pin would waste a tier-0 slot on a re-check).
-    # Latest-FAIL entries are NOT listed here — they are pinned at absolute
-    # positions 0..k automatically (see _failed_of).  Rotate per round;
-    # harmless if a name is not yet registered (tier() is only consulted
-    # for registered names).
-    priority = {
-        # new r12 entries: IVF delete→compact (FAISS merge_from — the
-        # vector-side analog of text_bm25_index_delete_compact, closing
-        # the lifecycle symmetry) and the filtered-ANN-over-persisted-
-        # lifecycle serve (metadata conjunct + segments + tombstones in
-        # one plan).  similarity_ivf_delete itself is UNCHANGED (its
-        # oracle text moved to a shared constant byte-identically) and
-        # stays unpinned.
-        "similarity_ivf_delete_compact",
-        "similarity_ivf_filtered_lifecycle",
-        # re-verify: its pinned DuckDB federation text regenerated for
-        # the r12 collect_list NULL-skip guard (COALESCE/FILTER wrapper
-        # — values identical, text materially changed)
-        "compat_unparser_duckdb_federation_lists",
-    }
-
     def tier(name: str) -> int:
         if name in failed:
             return -1  # latest driver record is FAIL: always re-check first
-        if name in priority and name in ORACLES:
-            return 0  # even if verified before: these changed this round
         if name not in ORACLES or name in verified:
-            return 2
-        return 1
+            return 1
+        return 0
 
     by_mod: dict[str, list[str]] = {m: [] for m in _MODULES}
     for name, fn in QUERIES.items():
@@ -170,7 +146,7 @@ def _interleave_families() -> None:
     extra = [m for m in by_mod if m not in _MODULES and by_mod[m]]
     mods = [m for m in _MODULES if by_mod.get(m)] + sorted(extra)
     order: list[str] = []
-    for t in (-1, 0, 1, 2):
+    for t in (-1, 0, 1):
         cols = [[n for n in by_mod[m] if tier(n) == t] for m in mods]
         cols = [c for c in cols if c]
         # Proportional (fair-share) interleave: entry i of an n-entry family

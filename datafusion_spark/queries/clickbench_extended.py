@@ -26,7 +26,7 @@ from __future__ import annotations
 from datafusion_spark.catalog import load_table
 from datafusion_spark.queries.clickbench_full import _hits_select, _pruned_hits_spark
 from datafusion_spark.queries.helpers import two_level_distinct
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import Plan, query
 
 
 def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
@@ -44,12 +44,14 @@ def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
     big_sql = (f"WITH hits AS ({_pruned_hits_spark(big_body)})\n{big_body}"
                if big_body else None)
 
-    def fn(spark, sf_dir, _sql=spark_sql, _big=big_sql):
+    def fn(spark, sf_dir):
         load_table(spark, sf_dir, "events").createOrReplaceTempView("events_cb")
-        if _big and two_level_distinct(sf_dir, "events"):
-            return spark.sql(_big)
-        return spark.sql(_sql)
+        if big_sql and two_level_distinct(sf_dir, "events"):
+            return spark.sql(big_sql)
+        return spark.sql(fn.plan.final)
 
+    # fn.plan is the below-crossover shape (big_sql is pinned separately)
+    fn.plan = Plan((), spark_sql, spark_sql)
     fn.__name__ = f"cbx_q{n:02d}"
     fn.__doc__ = (
         f"ClickBench extended q{n} (reference benchmarks/queries/clickbench/"

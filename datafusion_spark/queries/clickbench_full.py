@@ -30,7 +30,7 @@ from __future__ import annotations
 import re
 
 from datafusion_spark.catalog import load_table
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import Plan, query
 
 # Shared hits projection.  {EPOCH} = seconds-since-epoch of ts as BIGINT
 # (dialect macro); {SRC} = the events relation name.
@@ -178,10 +178,11 @@ def _cb(n: int, body: str, duck_body: str | None = None, tags: tuple = ()):
     spark_sql = f"WITH hits AS ({_pruned_hits_spark(body)})\n{body}"
     duck_sql = f"WITH hits AS ({_hits_select('duck')})\n{duck_body or body}"
 
-    def fn(spark, sf_dir, _sql=spark_sql):
+    def fn(spark, sf_dir):
         load_table(spark, sf_dir, "events").createOrReplaceTempView("events_cb")
-        return spark.sql(_sql)
+        return spark.sql(fn.plan.final)
 
+    fn.plan = Plan((), spark_sql, spark_sql)
     fn.__name__ = f"cb_q{n:02d}"
     fn.__doc__ = f"ClickBench q{n} (reference benchmarks/queries/clickbench/queries/q{n}.sql)."
     query(f"cb_q{n:02d}", oracle=duck_sql, tags=("clickbench_full",) + tags)(fn)

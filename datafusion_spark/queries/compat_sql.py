@@ -652,6 +652,10 @@ def _duckdb_federation_plan(spark, sf_dir):
     )
 
 
+# The scale factor every pinned federation oracle below reads (its texts
+# name these files), carried as the entries' sf-pinned tag.
+_FED_SF = "/root/testdata/sf0.01"
+
 # The ORACLE here IS the unparser's DuckDB-dialect output for the sf0.01
 # plan (pinned text): the driver executes it in DuckDB and hash-compares
 # against the Spark plan — a green row certifies the federation contract
@@ -661,10 +665,10 @@ _DUCKDB_FED_SQL = (
     "SELECT l_returnflag, count(1) AS n, "
     "CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue "
     "FROM (SELECT * FROM "
-    "read_parquet('/root/testdata/sf0.01/lineitem.parquet') AS t1 "
+    f"read_parquet('{_FED_SF}/lineitem.parquet') AS t1 "
     "WHERE (l_quantity < CAST(30 AS DOUBLE))) AS t2 "
     "INNER JOIN (SELECT * FROM "
-    "read_parquet('/root/testdata/sf0.01/orders.parquet') AS t3 "
+    f"read_parquet('{_FED_SF}/orders.parquet') AS t3 "
     "WHERE (o_orderstatus = 'F')) AS t4 "
     "ON (l_orderkey = o_orderkey) GROUP BY l_returnflag"
 )
@@ -673,7 +677,7 @@ _DUCKDB_FED_SQL = (
 @query(
     "compat_unparser_duckdb_federation",
     oracle=_DUCKDB_FED_SQL,
-    tags=("compat", "unparser", "federation"),
+    tags=("compat", "unparser", "federation", f"sf-pinned:{_FED_SF}"),
 )
 def compat_unparser_duckdb_federation(spark, sf_dir):
     """DuckDB-dialect federation, driver-certified: the registered oracle
@@ -688,7 +692,7 @@ def compat_unparser_duckdb_federation(spark, sf_dir):
 
     df = _duckdb_federation_plan(spark, sf_dir)
     emitted = to_sql(
-        _duckdb_federation_plan(spark, "/root/testdata/sf0.01"), DUCKDB)
+        _duckdb_federation_plan(spark, _FED_SF), DUCKDB)
     if emitted != _DUCKDB_FED_SQL:
         raise AssertionError(
             "unparser DuckDB output drifted from the pinned federation "
@@ -717,7 +721,7 @@ _DUCKDB_FED_FNS_SQL = (
     "SELECT (l_returnflag || '_' || l_linestatus) AS k, "
     "quantile_cont(l_quantity, CAST(CAST(0.5 AS DECIMAL(1,1)) AS DOUBLE))"
     " AS med_qty, count(1) AS n "
-    "FROM read_parquet('/root/testdata/sf0.01/lineitem.parquet') AS t1 "
+    f"FROM read_parquet('{_FED_SF}/lineitem.parquet') AS t1 "
     "WHERE (l_quantity < CAST(30 AS DOUBLE)) "
     "GROUP BY (l_returnflag || '_' || l_linestatus)"
 )
@@ -726,7 +730,7 @@ _DUCKDB_FED_FNS_SQL = (
 @query(
     "compat_unparser_duckdb_federation_fns",
     oracle=_DUCKDB_FED_FNS_SQL,
-    tags=("compat", "unparser", "federation"),
+    tags=("compat", "unparser", "federation", f"sf-pinned:{_FED_SF}"),
 )
 def compat_unparser_duckdb_federation_fns(spark, sf_dir):
     """Second driver-certified DuckDB federation entry (r10): the oracle
@@ -740,7 +744,7 @@ def compat_unparser_duckdb_federation_fns(spark, sf_dir):
 
     df = _duckdb_fed_fns_plan(spark, sf_dir)
     emitted = to_sql(
-        _duckdb_fed_fns_plan(spark, "/root/testdata/sf0.01"), DUCKDB,
+        _duckdb_fed_fns_plan(spark, _FED_SF), DUCKDB,
         validate=False)
     if emitted != _DUCKDB_FED_FNS_SQL:
         raise AssertionError(
@@ -781,7 +785,7 @@ _DUCKDB_FED_WINDOW_SQL = (
     "o_orderkey ASC NULLS FIRST ROWS BETWEEN 3 PRECEDING AND CURRENT "
     "ROW) AS _we0 FROM (SELECT o_orderkey, o_orderstatus, "
     "CAST(o_totalprice AS DECIMAL(38,6)) AS _w0 FROM "
-    "read_parquet('/root/testdata/sf0.01/orders.parquet') AS t1 "
+    f"read_parquet('{_FED_SF}/orders.parquet') AS t1 "
     "WHERE (o_orderkey < CAST(4000 AS BIGINT))) AS t2) AS t3) AS t4"
 )
 
@@ -789,7 +793,7 @@ _DUCKDB_FED_WINDOW_SQL = (
 @query(
     "compat_unparser_duckdb_federation_window",
     oracle=_DUCKDB_FED_WINDOW_SQL,
-    tags=("compat", "unparser", "federation"),
+    tags=("compat", "unparser", "federation", f"sf-pinned:{_FED_SF}"),
 )
 def compat_unparser_duckdb_federation_window(spark, sf_dir):
     """Third driver-certified DuckDB federation entry (r10): a windowed
@@ -802,7 +806,7 @@ def compat_unparser_duckdb_federation_window(spark, sf_dir):
 
     df = _duckdb_fed_window_plan(spark, sf_dir)
     emitted = to_sql(
-        _duckdb_fed_window_plan(spark, "/root/testdata/sf0.01"), DUCKDB,
+        _duckdb_fed_window_plan(spark, _FED_SF), DUCKDB,
         validate=False)
     if emitted != _DUCKDB_FED_WINDOW_SQL:
         raise AssertionError(
@@ -854,7 +858,7 @@ _DUCKDB_FED_LISTS_SQL = (
     "[]), 'ASC', 'NULLS FIRST')), lv1 -> CAST(lv1 AS STRING)), ','), "
     "'') END AS ids_desc, "
     "reverse(min(event_type)) AS rev_type "
-    "FROM read_parquet('/root/testdata/sf0.01/events.parquet') AS t1 "
+    f"FROM read_parquet('{_FED_SF}/events.parquet') AS t1 "
     "WHERE (event_id > CAST(-9223372036854775808 AS BIGINT)) "
     "GROUP BY event_type"
 )
@@ -863,7 +867,7 @@ _DUCKDB_FED_LISTS_SQL = (
 @query(
     "compat_unparser_duckdb_federation_lists",
     oracle=_DUCKDB_FED_LISTS_SQL,
-    tags=("compat", "unparser", "federation"),
+    tags=("compat", "unparser", "federation", f"sf-pinned:{_FED_SF}"),
 )
 def compat_unparser_duckdb_federation_lists(spark, sf_dir):
     """Fourth driver-certified DuckDB federation entry (r10 second
@@ -880,7 +884,7 @@ def compat_unparser_duckdb_federation_lists(spark, sf_dir):
 
     df = _duckdb_fed_lists_plan(spark, sf_dir)
     emitted = to_sql(
-        _duckdb_fed_lists_plan(spark, "/root/testdata/sf0.01"), DUCKDB,
+        _duckdb_fed_lists_plan(spark, _FED_SF), DUCKDB,
         validate=False)
     if emitted != _DUCKDB_FED_LISTS_SQL:
         raise AssertionError(

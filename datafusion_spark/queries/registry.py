@@ -10,6 +10,7 @@ order-deterministic (see helpers.py).
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,3 +33,20 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         return fn
 
     return deco
+
+
+@dataclass(frozen=True)
+class Plan:
+    """The statements an entry executes, as an inspectable value
+    (attached to the entry's callable as ``fn.plan``).
+
+    ``pre`` are ``(view, sql)`` pairs run in order before the entry returns:
+    each result is written to scratch and read back as temp view ``view``.
+    ``final`` is the SQL whose DataFrame the entry returns.  ``inline`` is
+    the oracle's Spark spelling — the text the entry would run without its
+    rewrites; an entry with ``pre`` or ``final != inline`` must return the
+    same rows as ``inline`` (pinned in tests/test_plans.py)."""
+
+    pre: tuple[tuple[str, str], ...]
+    final: str
+    inline: str

@@ -40,23 +40,46 @@ Query-text adaptations (each inline, same policy as tpch.py):
 Scale: the fact derivation is a single lineitem⋈orders equi-join on
 l_orderkey (co-partitioned); date_dim and item are dimension-sized and
 broadcast into the star join exactly as a real TPC-DS plan would.
+
+Execution: each entry's statements are an inspectable ``fn.plan``
+(registry.Plan: pre-statements, final, inline) run by one runner, _emit.
+Pre-statements write to the entry's own subdirectory of a process-local
+scratch directory that is created on first use and removed at exit.
+Re-invoking a materializing entry deletes its previous scratch, so a
+DataFrame returned by a superseded invocation must not be executed again.
 """
 
 from __future__ import annotations
 
-import itertools
+import atexit
+import functools
 import os
 import re
+import shutil
 import tempfile
 
 from datafusion_spark.catalog import load_table, register_views
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import Plan, query
 
-# process-local scratch for per-invocation CTE materializations (see
-# _register_shared_cte): fresh directory per call, nothing reused across
-# invocations, cleaned with the sandbox /tmp
-_MAT_TMP = tempfile.mkdtemp(prefix="dfspark_tpcds_mat_")
-_MAT_SEQ = itertools.count()
+# Process-local scratch for pre-statement materializations (see _emit):
+# created on first use, removed at exit.
+_MAT_TMP: str | None = None
+
+
+def _scratch(name: str) -> str:
+    """A fresh directory for one invocation of entry ``name``, under the
+    entry's own subdirectory of _MAT_TMP, after removing what the entry's
+    previous invocation wrote.  Uniquely named, so a path never names two
+    different writes."""
+    global _MAT_TMP
+    if _MAT_TMP is None:
+        _MAT_TMP = tempfile.mkdtemp(prefix="dfspark_tpcds_mat_")
+        atexit.register(shutil.rmtree, _MAT_TMP, ignore_errors=True)
+    entry = os.path.join(_MAT_TMP, name)
+    shutil.rmtree(entry, ignore_errors=True)
+    os.mkdir(entry)
+    return tempfile.mkdtemp(dir=entry)
+
 
 # The derive prelude defines a CTE named `customer` (the TPC-DS customer,
 # derived FROM the TPC-H base table).  A later CTE (customer_address) also
@@ -931,18 +954,16 @@ _BENCH_TPCDS = {"tpcds_q4", "tpcds_q14", "tpcds_q49", "tpcds_q51",
                 "tpcds_q64", "tpcds_q67", "tpcds_q78", "tpcds_q95"}
 
 
-def _split_ctes(derive_sql: str) -> list[tuple[str, str]]:
-    """Split a ``WITH a AS (...), b AS (...)`` prelude into ordered
-    (name, "name AS (...)") pairs via a paren-depth scan (no parens occur
-    inside the derive's string literals; _ctes_cover_derive() pins that)."""
-    rest = derive_sql[re.search(r"\bWITH\b", derive_sql).end():]
+def _split_ctes(sql: str) -> tuple[list[tuple[str, str]], str]:
+    """Split ``WITH a AS (...), b AS (...) <tail>`` into the ordered
+    (name, "name AS (...)") pairs and the tail after the last one, via a
+    paren-depth scan (no parens occur inside the derive's string literals;
+    the prelude-pruning test in tests/test_plans.py pins the split)."""
+    rest = sql[re.search(r"\bWITH\b", sql).end():]
     out: list[tuple[str, str]] = []
     pat = re.compile(r"[\s,]*([a-z_]+)\s+AS\s+\(")
     i = 0
-    while True:
-        m = pat.match(rest, i)
-        if not m:
-            break
+    while m := pat.match(rest, i):
         depth, j = 1, m.end()
         while depth:
             if rest[j] == "(":
@@ -952,18 +973,32 @@ def _split_ctes(derive_sql: str) -> list[tuple[str, str]]:
             j += 1
         out.append((m.group(1), rest[m.start(1):j]))
         i = j
-    return out
+    return out, rest[i:]
 
 
-_CTES = _split_ctes(_SPARK_DERIVE)
-_CTE_NAMES = [n for n, _ in _CTES]
-# inter-CTE references (none today — every derive reads parquet directly —
-# but computed so a future edit can't silently break the closure)
-_CTE_DEPS = {
-    n: {m for m in _CTE_NAMES
-        if m != n and re.search(rf"\b{re.escape(m)}\b", text)}
-    for n, text in _CTES
-}
+@functools.lru_cache(maxsize=None)
+def _refs(text: str, names: tuple[str, ...]) -> frozenset[str]:
+    """The ``names`` that ``text`` mentions as whole words (one regex pass;
+    cached, since every entry re-reads the same derive CTE texts)."""
+    return frozenset(re.findall(rf"\b(?:{'|'.join(names)})\b", text))
+
+
+def _reachable(ctes: list[tuple[str, str]], text: str) -> list[tuple[str, str]]:
+    """The (name, text) pairs of ``ctes`` that ``text`` references,
+    transitively, in chain order (no derive CTE reads another today, but
+    the closure is computed so a future edit can't silently break it)."""
+    texts = dict(ctes)
+    names = tuple(texts)
+    used = set(_refs(text, names))
+    frontier = list(used)
+    while frontier:
+        for dep in _refs(texts[frontier.pop()], names) - used:
+            used.add(dep)
+            frontier.append(dep)
+    return [(n, t) for n, t in ctes if n in used]
+
+
+_CTES = _split_ctes(_SPARK_DERIVE)[0]
 
 
 def _pruned_prelude(body: str, cte_where: dict[str, str] | None = None) -> str:
@@ -988,7 +1023,7 @@ def _pruned_prelude(body: str, cte_where: dict[str, str] | None = None) -> str:
     UNMODIFIED body and the rewritten==inline row pins in tests/
     test_plans.py enforce equivalence.
     """
-    kept = _kept_ctes(body)
+    kept = _reachable(_CTES, body)
     if cte_where:
         missing = set(cte_where) - {n for n, _ in kept}
         assert not missing, f"cte_where targets not in closure: {missing}"
@@ -1032,98 +1067,100 @@ def _append_where(text: str, name: str, pred: str) -> str:
     return f"{prefix}{inner[:where_at]}WHERE ({cond}\n  )\n  AND ({pred})\n)"
 
 
-def _kept_ctes(body: str) -> list[tuple[str, str]]:
-    """The (name, text) derive CTEs ``body`` references, transitively,
-    in original prelude order (the closure _pruned_prelude keeps)."""
-    used = {n for n in _CTE_NAMES if re.search(rf"\b{re.escape(n)}\b", body)}
-    frontier = list(used)
-    while frontier:
-        for dep in _CTE_DEPS[frontier.pop()]:
-            if dep not in used:
-                used.add(dep)
-                frontier.append(dep)
-    return [(n, text) for n, text in _CTES if n in used]
+def _emit(spark, sf_dir: str, name: str, plan: Plan):
+    """The one runner behind every tpcds_* entry: register the derive's
+    session views, write each pre-statement of ``plan`` to this
+    invocation's scratch and read it back as its temp view, then return
+    the final statement's DataFrame.  The writes run inside the timed
+    region, and every scratch read is a plain parquet scan, so the
+    unparser round-trip is preserved (a localCheckpoint would analyze to
+    LogicalRDD, a refusal class)."""
+    _ensure_views(spark, sf_dir)
+    if plan.pre:
+        dest = _scratch(name)
+        for view, sql in plan.pre:
+            path = os.path.join(dest, view)
+            spark.sql(sql).write.parquet(path)
+            spark.read.parquet(path).createOrReplaceTempView(view)
+    return spark.sql(plan.final)
 
 
-# raw body text per registered query — the inline spelling every rewrite
-# must stay row-identical to (used by tests and same-JVM A/B harnesses)
-_BODIES: dict[str, str] = {}
+def _add(name: str, body: str, doc: str, plan: Plan) -> Plan:
+    """Register ``name``: the DuckDB oracle runs ``body`` verbatim under the
+    DuckDB derive; the entry runs ``plan`` (attached as ``fn.plan``)."""
+
+    def fn(spark, sf_dir):
+        return _emit(spark, sf_dir, name, fn.plan)
+
+    fn.__name__ = name
+    fn.__doc__ = doc
+    fn.plan = plan
+    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
+    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
+    return plan
+
+
+def _plan(body: str, spark_body: str | None = None,
+          cte_where: dict[str, str] | None = None) -> Plan:
+    """One-statement plan for ``body``; ``inline`` is the oracle's Spark
+    spelling (``body`` under its pruned prelude)."""
+    sbody = spark_body or body
+    return Plan((), _pruned_prelude(sbody, cte_where) + sbody,
+                _pruned_prelude(body) + body)
+
+
+def _materialize(plan: Plan, name: str, cte: str,
+                 where: str | None = None) -> Plan:
+    """``plan`` with the body CTE ``cte`` of its final statement computed
+    ONCE per invocation (r12, guide §3.3).
+
+    Spark inlines WITH-CTEs, so a CTE consumed N times is derived N times
+    (q4's year_total six times, q14's 3-channel INTERSECT three times).
+    The added pre-statement writes ``cte`` to scratch — optionally only
+    the rows ``where`` keeps, a predicate on the CTE's OUTPUT columns the
+    final statement implies (e.g. q64 reads only syear 2000/2001 of
+    cross_sales), so equivalence is plain predicate pushdown — and the
+    final statement reads it back: the definition becomes ``SELECT * FROM
+    <view>`` and the CTEs only it referenced are dropped.  The view rows
+    are far fewer than the facts they aggregate; at 100 TB this
+    spill-to-storage materialization is exactly what engines with CTE
+    materialization do."""
+    ctes, tail = _split_ctes(plan.final)
+    stmt = tail.lstrip()
+    assert cte in dict(ctes) and stmt.startswith("SELECT"), (name, cte)
+    view = f"{cte}_{name}"
+    mat = (plan.final[:-len(stmt)] + f" SELECT * FROM {cte}"
+           + (f" WHERE {where}" if where else ""))
+    ctes = [(n, f"{cte} AS (SELECT * FROM {view})" if n == cte else t)
+            for n, t in ctes]
+    final = ("\nWITH " + ",\n".join(t for _, t in _reachable(ctes, stmt))
+             + "\n" + stmt)
+    return Plan(plan.pre + ((view, mat),), final, plan.inline)
 
 
 def _register(name: str, body: str, doc: str, *,
               spark_body: str | None = None,
-              cte_where: dict[str, str] | None = None) -> None:
+              cte_where: dict[str, str] | None = None) -> Plan:
     """``spark_body`` (r13): an equivalent respelling executed Spark-side
     while the DuckDB oracle keeps running ``body`` verbatim (e.g. q67's
-    two-phase rollup).  Every divergence between the two texts must carry a
-    call-site equivalence argument and a rewritten==inline row pin in
-    tests/test_plans.py; the oracle check enforces it on every run."""
-    _BODIES[name] = body
-    sbody = spark_body or body
-    pruned_sql = _pruned_prelude(sbody, cte_where) + sbody
-
-    def fn(spark, sf_dir, _sql=pruned_sql):
-        _ensure_views(spark, sf_dir)
-        return spark.sql(_sql.replace("__SF__", sf_dir))
-
-    fn.__name__ = name
-    fn.__doc__ = doc
-    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
-    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
+    two-phase rollup); ``cte_where``: see _pruned_prelude.  Every
+    divergence between the two texts must carry a call-site equivalence
+    argument; tests/test_plans.py pins rewritten == inline rows for every
+    entry whose plan diverges, and the oracle check enforces it on every
+    run."""
+    return _add(name, body, doc, _plan(body, spark_body, cte_where))
 
 
-def _register_shared_cte(name: str, body: str, doc: str, *,
-                         cte: str, final_marker: str,
-                         ref_prefix: str | tuple[str, ...],
+def _register_shared_cte(name: str, body: str, doc: str, *, cte: str,
                          mat_where: str | None = None,
-                         cte_where: dict[str, str] | None = None) -> None:
-    """Register a query whose final statement consumes one heavy CTE many
-    times, materializing that CTE ONCE per invocation (r12, guide §3.3).
-
-    Spark inlines WITH-CTEs, so ``year_total`` consumed six ways in q4 ran
-    the three-channel fact aggregation six times (each copy pruned to one
-    channel-year by pushdown).  The rewrite computes the CTE once — all
-    channels, both years — writes it to a process-local temp parquet
-    (customer-grain rows, far smaller than the facts it aggregates; at
-    100 TB this spill-to-storage materialization is exactly what engines
-    with CTE materialization do), and the final self-join reads that.
-    Interleaved A/B at sf0.1: q4 2.85 s → 2.35 s.  Fresh directory per
-    invocation — nothing persists across runs (the write is inside the
-    timed region), and the plan stays a plain parquet scan so the
-    unparser round-trip is preserved (a localCheckpoint would analyze to
-    LogicalRDD, a refusal class).  Results identical; same oracle.
-    """
-    _BODIES[name] = body
-    idx = body.index(final_marker)
-    ctes_part, final_part = body[:idx], body[idx:]
-    # ``mat_where`` (r13) prunes the materialization to rows the final
-    # statement can consume, when the final statement's own predicates
-    # imply it (e.g. q64 reads only syear 2000/2001 of cross_sales) — the
-    # filter is on CTE OUTPUT columns, so equivalence is plain predicate
-    # pushdown; the DuckDB oracle runs the inline text and the
-    # rewritten==inline row pin in tests/test_plans.py enforces it.
-    mat_sql = (_pruned_prelude(body, cte_where) + ctes_part
-               + f" SELECT * FROM {cte}"
-               + (f" WHERE {mat_where}" if mat_where else ""))
-    view = f"{cte}_{name}"
-    final_sql = final_part
-    for rp in ((ref_prefix,) if isinstance(ref_prefix, str) else ref_prefix):
-        final_sql = final_sql.replace(f"{cte} {rp}", f"{view} {rp}")
-        assert f"{cte} {rp}" not in final_sql
-
-    def fn(spark, sf_dir, _mat=mat_sql, _final=final_sql, _view=view):
-        _ensure_views(spark, sf_dir)  # derive CTEs read the cached views
-        dest = os.path.join(
-            _MAT_TMP, f"{name}_{os.getpid()}_{next(_MAT_SEQ)}")
-        spark.sql(_mat.replace("__SF__", sf_dir)).write.mode(
-            "overwrite").parquet(dest)
-        spark.read.parquet(dest).createOrReplaceTempView(_view)
-        return spark.sql(_final.replace("__SF__", sf_dir))
-
-    fn.__name__ = name
-    fn.__doc__ = doc
-    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
-    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
+                         cte_where: dict[str, str] | None = None) -> Plan:
+    """Register a query whose final statement consumes the heavy body CTE
+    ``cte`` many times, materializing it once per invocation (see
+    _materialize; ``mat_where`` is its ``where``).  Computed for all
+    channels and years at once: interleaved A/B at sf0.1, q4 2.85 s →
+    2.35 s.  Results identical; same oracle."""
+    return _add(name, body, doc, _materialize(
+        _plan(body, cte_where=cte_where), name, cte, mat_where))
 
 
 # Every TPC-DS fact CTE (3 sales + 3 returns channels) is a projection +
@@ -1154,83 +1191,57 @@ def _split_select_list(sel: str) -> list[str]:
     return out
 
 
-def _replace_body_cte(text: str, name: str, repl_body: str) -> str:
-    """Replace the definition of CTE ``name`` in a WITH-list with
-    ``repl_body`` (paren-depth aware; the CTE name appears as a definition
-    exactly once by construction)."""
-    start = text.index(f"{name} AS (")
-    i = text.index("(", start)
-    depth = 0
-    for j in range(i, len(text)):
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return text[:start] + f"{name} AS ({repl_body})" + text[j + 1:]
-    raise ValueError(f"unbalanced CTE definition for {name}")
-
-
 def _register_shared_fact(name: str, body: str, doc: str, *,
-                          facts: list[str],
                           mat_where: str | None = None,
-                          fact_where: dict[str, str] | None = None,
-                          mat_ctes: list[str] | None = None,
-                          mat_final_marker: str | None = None) -> None:
+                          cte_where: dict[str, str] | None = None,
+                          mat_ctes: tuple[str, ...] = ()) -> Plan:
     """Register a query whose body consumes several fact-channel CTEs,
     materializing their SHARED base join once per invocation (r12,
     guide §2.4/§3.3: do fewer passes — every channel is a projection of
     the one lineitem⋈orders join, so N textual fact references need ONE
     physical pass, not N).
 
-    Mechanics: at registration, each fact CTE named in ``facts`` is parsed
-    into its per-column expressions and channel predicate (they all match
-    _FACT_SRC_RE by construction).  The invocation (a) executes ONE
-    ``SELECT <base cols> FROM lineitem JOIN orders`` pass — base cols
-    pruned to what the body-referenced channel columns actually derive
-    from — into a fresh process-local temp parquet, then (b) runs the
+    Mechanics: at registration, each fact CTE in the body's prelude
+    closure is parsed into its per-column expressions and channel
+    predicate (they all match _FACT_SRC_RE by construction).  The
+    pre-statement executes ONE ``SELECT <base cols> FROM lineitem JOIN
+    orders`` pass — base cols pruned to what the body-referenced channel
+    columns actually derive from — and the final statement runs the
     UNCHANGED body under a prelude in which each fact CTE is redefined to
     compute its original column expressions FROM that materialization
-    (original channel WHERE kept verbatim).  The body text is
-    byte-identical to the inline spelling, so results are identical as
+    (original channel WHERE kept verbatim).  Results are identical as
     long as each redefined CTE produces the same rows — which it does by
     construction, column for column.
 
-    ``mat_where`` / ``fact_where`` optionally push a date predicate that
+    ``mat_where`` / ``cte_where`` optionally push a date predicate that
     the BODY already implies into the shared scan / one channel's
     redefinition (e.g. every q14 fact reference joins date_dim on
     sold_date_sk with d_year constrained; sold_date_sk = f(o_orderdate)
     with f injective, so the o_orderdate window is exactly the rows that
-    can survive).  Each caller documents its implication; the DuckDB
-    oracle (which runs the original inline text) plus the
-    rewritten==inline row pin in tests/test_plans.py enforce it.
-
-    Fresh scratch dir per invocation — the materialization write happens
-    inside the timed region and nothing persists across runs.
+    can survive).  Each caller documents its implication.  ``mat_ctes``
+    are body CTEs additionally materialized once each (see _materialize).
     """
-    _BODIES[name] = body
-    fact_where = fact_where or {}
-    cte_map = dict(_CTES)
+    cte_where = cte_where or {}
+    kept = _reachable(_CTES, body)
     parsed: dict[str, tuple[dict[str, str], str | None]] = {}
-    for f in facts:
-        m = _FACT_SRC_RE.match(cte_map[f])
-        assert m, f"{name}: fact CTE {f} no longer matches the shared-join pattern"
-        amap: dict[str, str] = {}
-        for item in _split_select_list(m.group(2)):
-            am = re.search(r"\bAS\s+(\w+)\s*$", item)
-            assert am, f"{name}: unaliased column in {f}: {item!r}"
-            amap[am.group(1)] = item[: am.start()].rstrip()
-        parsed[f] = (amap, m.group(3))
+    for f, text in kept:
+        if m := _FACT_SRC_RE.match(text):
+            amap: dict[str, str] = {}
+            for item in _split_select_list(m.group(2)):
+                am = re.search(r"\bAS\s+(\w+)\s*$", item)
+                assert am, f"{name}: unaliased column in {f}: {item!r}"
+                amap[am.group(1)] = item[: am.start()].rstrip()
+            parsed[f] = (amap, m.group(3))
+    assert parsed and set(cte_where) <= set(parsed), name
 
     used_cols: dict[str, list[str]] = {}
     base_cols: set[str] = set()
-    for f in facts:
-        amap, pred = parsed[f]
+    for f, (amap, pred) in parsed.items():
         used = [a for a in amap if re.search(rf"\b{a}\b", body)]
         assert used, f"{name}: no column of {f} referenced by the body"
         used_cols[f] = used
         texts = [amap[a] for a in used]
-        texts += [p for p in (pred, fact_where.get(f)) if p]
+        texts += [p for p in (pred, cte_where.get(f)) if p]
         for t in texts:
             base_cols.update(re.findall(r"\b[lo]_\w+\b", t))
     if mat_where:
@@ -1240,12 +1251,12 @@ def _register_shared_fact(name: str, body: str, doc: str, *,
     # fact carries a predicate, their disjunction prunes the shared write
     # (each channel re-applies its own conjunction on read, so a row that
     # satisfies no channel's predicate is dead weight).  Single-table
-    # conjuncts (e.g. q95's shared l_suppkey % 4 = 1) additionally push
-    # below the join and shrink the join itself.  Skipped when any fact is
-    # unfiltered (the disjunction would be vacuously true).
+    # conjuncts additionally push below the join and shrink the join
+    # itself.  Skipped when any fact is unfiltered (the disjunction would
+    # be vacuously true).
     per_fact_conj = []
-    for f in facts:
-        preds = [p for p in (parsed[f][1], fact_where.get(f)) if p]
+    for f, (_, pred) in parsed.items():
+        preds = [p for p in (pred, cte_where.get(f)) if p]
         per_fact_conj.append(" AND ".join(f"({p})" for p in preds)
                              if preds else None)
     mat_preds = [p for p in (mat_where,) if p]
@@ -1257,56 +1268,18 @@ def _register_shared_fact(name: str, body: str, doc: str, *,
                + ("\nWHERE " + " AND ".join(mat_preds) if mat_preds else ""))
     matview = f"shared_fact_{name}"
     redefs: dict[str, str] = {}
-    for f in facts:
-        amap, pred = parsed[f]
+    for f, (amap, pred) in parsed.items():
         sel = ",\n         ".join(f"{amap[a]} AS {a}" for a in used_cols[f])
-        preds = [p for p in (pred, fact_where.get(f)) if p]
+        preds = [p for p in (pred, cte_where.get(f)) if p]
         w = ("\n  WHERE " + " AND ".join(f"({p})" for p in preds)) if preds else ""
         redefs[f] = f"{f} AS (\n  SELECT {sel}\n  FROM {matview}{w}\n)"
-    kept = _kept_ctes(body)
-    kept_names = {n for n, _ in kept}
-    assert all(f in kept_names for f in facts), f"{name}: fact not in closure"
     prelude = "\nWITH " + ",\n".join(
         redefs.get(n, text) for n, text in kept) + "\n"
-    final_sql = prelude + body
-
-    # Optional second-level materialization (§3.3, the year_total trick
-    # applied inside a shared-fact query): each named body CTE is computed
-    # ONCE per invocation into its own scratch parquet and its definition
-    # replaced by a scan, instead of being re-inlined at every reference
-    # (q14's cross_items is consumed by all three channel legs — inline,
-    # Spark derives the 3-channel INTERSECT three times).  Results
-    # identical by construction; rows pinned in test_plans.py.
-    cte_mats: list[tuple[str, str]] = []  # (view_name, mat_sql)
-    if mat_ctes:
-        assert mat_final_marker and mat_final_marker in final_sql
-        idx = final_sql.index(mat_final_marker)
-        ctes_part, final_stmt = final_sql[:idx], final_sql[idx:]
-        for cte in mat_ctes:
-            cte_view = f"{cte}_m_{name}"
-            cte_mats.append((cte_view, ctes_part + f" SELECT * FROM {cte}"))
-            ctes_part = _replace_body_cte(ctes_part, cte,
-                                          f"SELECT * FROM {cte_view}")
-        final_sql = ctes_part + final_stmt
-
-    def fn(spark, sf_dir, _mat=mat_sql, _final=final_sql, _view=matview,
-           _cte_mats=tuple(cte_mats)):
-        _ensure_views(spark, sf_dir)  # lineitem/orders session views
-        dest = os.path.join(
-            _MAT_TMP, f"{name}_{os.getpid()}_{next(_MAT_SEQ)}")
-        spark.sql(_mat).write.mode("overwrite").parquet(dest)
-        spark.read.parquet(dest).createOrReplaceTempView(_view)
-        for i, (cv, cm) in enumerate(_cte_mats):
-            cdest = f"{dest}_c{i}"
-            spark.sql(cm.replace("__SF__", sf_dir)).write.mode(
-                "overwrite").parquet(cdest)
-            spark.read.parquet(cdest).createOrReplaceTempView(cv)
-        return spark.sql(_final.replace("__SF__", sf_dir))
-
-    fn.__name__ = name
-    fn.__doc__ = doc
-    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
-    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
+    plan = Plan(((matview, mat_sql),), prelude + body,
+                _pruned_prelude(body) + body)
+    for cte in mat_ctes:
+        plan = _materialize(plan, name, cte)
+    return _add(name, body, doc, plan)
 
 
 _register(
@@ -2797,8 +2770,7 @@ _register_shared_cte(
     below both channel base joins (injective sold_date_sk = f(o_orderdate),
     calendar ends 2001-12-31).  A/B at sf0.1: 0.82 -> 0.72 s min, rows
     identical; pinned with q4/q11 in test_plans.py.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
+    cte="year_total",
     cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
                "web_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
@@ -2882,8 +2854,7 @@ _register_shared_cte(
     r13: o_orderdate >= 2000-01-01 pushed below both channel base joins
     (same injectivity argument as q74).  A/B at sf0.1: 1.42 -> 1.21 s
     min, rows identical.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
+    cte="year_total",
     cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
                "web_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
@@ -2979,8 +2950,7 @@ _register_shared_cte(
     r13: o_orderdate >= 2000-01-01 pushed below all three channel base
     joins (same injectivity argument as q74).  A/B at sf0.1:
     1.64 -> 1.38 s min, rows identical.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
+    cte="year_total",
     cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
                "web_sales": "o_orderdate >= DATE '2000-01-01'",
                "catalog_sales": "o_orderdate >= DATE '2000-01-01'"},
@@ -5066,15 +5036,13 @@ _register_shared_fact(
     threshold retargets to > 1000 (the derived 0.1x-extendedprice
     refunds cap near 10k, selecting nothing); ordinal ORDER BY
     1,4,5,2 verbatim.""",
-    facts=["store_sales", "web_sales", "catalog_sales",
-           "store_returns", "web_returns", "catalog_returns"],
     # Each in_* leg constrains its SALES side with {p}_sold_date_sk =
     # d_date_sk AND d_year = 2000 AND d_moy = 12 (December 2000 lies in
     # date_dim's domain; the sk mapping is injective in o_orderdate), so
     # sales rows outside that month never join.  The RETURNS sides carry
     # no date predicate of their own (they are keyed to the sales rows by
     # order/item), so they stay unfiltered.
-    fact_where={
+    cte_where={
         "store_sales": "o_orderdate >= DATE '2000-12-01'"
                        " AND o_orderdate <= DATE '2000-12-31'",
         "web_sales": "o_orderdate >= DATE '2000-12-01'"
@@ -5725,8 +5693,6 @@ _register_shared_fact(
     engines.  The three channel aggregations shuffle once each on
     (year, item, customer) and the two LEFT JOINs reuse that
     partitioning.""",
-    facts=["store_sales", "web_sales", "catalog_sales",
-           "store_returns", "web_returns", "catalog_returns"],
     # The ss aggregate groups by d_year and the final WHERE keeps only
     # ss_sold_year = 2000, so store fact rows outside calendar-2000 feed
     # only discarded groups; ws/cs groups join ss on ws/cs_sold_year =
@@ -5735,7 +5701,7 @@ _register_shared_fact(
     # non-matching groups and nothing else.  The RETURNS channels feed
     # the never-returned anti-joins (IS NULL) with no date constraint:
     # a return in ANY year disqualifies a sale, so they stay unfiltered.
-    fact_where={
+    cte_where={
         "store_sales": "o_orderdate >= DATE '2000-01-01'"
                        " AND o_orderdate <= DATE '2000-12-31'",
         "web_sales": "o_orderdate >= DATE '2000-01-01'"
@@ -5967,7 +5933,6 @@ _register_shared_fact(
     list_price products decimal-exact (q17 macro shape); the unnamed
     sum()s alias sum_sales / sum_number_sales on both sides; NULLS
     FIRST pins the rollup under LIMIT 100.  Constants verbatim.""",
-    facts=["store_sales", "web_sales", "catalog_sales"],
     # Every q14 fact reference joins date_dim on {p}_sold_date_sk =
     # d_date_sk with d_year BETWEEN 1998 AND 2000 (cross_items,
     # avg_sales) or d_year = 2000 AND d_moy = 11 (channel legs).
@@ -5984,8 +5949,7 @@ _register_shared_fact(
     # avg_sales was measured too: the extra write+read round-trip cost
     # more than the saved recomputation (interleaved A/B min 4.02 vs
     # 3.90 with both mats, 3.54 vs 3.98 with cross_items only).
-    mat_ctes=["cross_items"],
-    mat_final_marker="SELECT channel, i_brand_id",
+    mat_ctes=("cross_items",),
 )
 
 _Q23_CTES = """
@@ -6235,8 +6199,6 @@ _register_shared_cte(
     r13 interleaved A/B at sf0.1: inline 2.70/3.87 (min/med) ->
     2.28/2.36 s, rows identical every cycle; pinned at 2 SFs.""",
     cte="cross_sales",
-    final_marker="SELECT cs1.product_name",
-    ref_prefix=("cs1", "cs2"),
     mat_where="syear IN (2000, 2000 + 1)",
     cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'"},
 )

@@ -3,6 +3,12 @@ that make the queries scale, checked structurally."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
@@ -13,7 +19,7 @@ from datafusion_spark.plans import (
     shuffle_count,
 )
 from datafusion_spark.queries import QUERIES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -325,6 +331,7 @@ def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
 
     # (a) the split reconstructs the original WITH list byte-exactly
     joined = ",\n".join(t for _, t in tx._CTES)
+    assert tx._split_ctes(tx._SPARK_DERIVE)[1].strip() == ""
     orig = tx._SPARK_DERIVE[re.search(r"\bWITH\b", tx._SPARK_DERIVE).end():]
     norm = lambda s: re.sub(r"[\s,]+", "", s)
     assert norm(joined) == norm(orig)
@@ -338,7 +345,7 @@ def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
     assert "inventory AS (" not in pruned
 
     # (c) pruned and full spellings return identical rows (q3 at sf0.001)
-    body = QUERIES["tpcds_q3"].__defaults__[0]
+    body = QUERIES["tpcds_q3"].plan.final
     body_tail = body[body.index("SELECT dt.d_year"):]
     full_sql = (tx._SPARK_DERIVE + body_tail).replace("__SF__", SF_SMALL)
     tx._ensure_views(spark, SF_SMALL)  # derive CTEs read the session views
@@ -383,7 +390,7 @@ def test_clickbench_hits_pruning_exact_and_equivalent(spark):
         fn = QUERIES[name]
         got_pruned = sorted(
             map(tuple, fn(spark, SF_SMALL).collect()))  # registers events_cb
-        sql = fn.__defaults__[0]
+        sql = fn.plan.final
         _, sep, body = sql.partition("\nFROM events_cb\n)\n")
         assert sep, f"{name}: unexpected spark_sql shape"
         got_full = sorted(
@@ -391,119 +398,109 @@ def test_clickbench_hits_pruning_exact_and_equivalent(spark):
         assert got_pruned == got_full, name
 
 
-def test_tpcds_shared_cte_materialization_equivalent(spark):
-    """r12 (+r13 o_orderdate push): q4/q11/q74 materialize year_total once
-    per invocation instead of inlining it per reference, with the year
-    window pushed below the fact base joins.  The materialized spelling
-    must return exactly the INLINE spelling's rows (the unmodified body
-    the DuckDB oracle runs — no pushed predicate), and each invocation
-    must write a FRESH scratch directory (no cross-run reuse)."""
-    import os
+# Every entry whose executed statements differ from its oracle's Spark
+# spelling (pre-statements, or a final text != inline), derived from the
+# attached plans rather than listed by hand.
+_REWRITTEN = sorted(
+    name for name, fn in QUERIES.items()
+    if (p := getattr(fn, "plan", None)) and (p.pre or p.final != p.inline))
+
+
+def test_rewritten_entries_derived():
+    assert len(_REWRITTEN) >= 9, _REWRITTEN
+    assert "tpcds_q78" in _REWRITTEN
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_ORACLE], ids=os.path.basename)
+@pytest.mark.parametrize("name", _REWRITTEN)
+def test_rewritten_rows_match_inline(spark, name, sf):
+    """A rewritten entry returns exactly the rows of its inline spelling
+    (the text the DuckDB oracle's body runs as in Spark, no pushed
+    predicate, no materialization).  The entry runs first: it registers
+    the session views the inline text reads."""
+    got = Counter(map(repr, QUERIES[name](spark, sf).collect()))
+    inline = Counter(map(repr, spark.sql(QUERIES[name].plan.inline).collect()))
+    assert got == inline
+
+
+def test_rewritten_plan_shapes():
+    """Structural pins on the attached plans: the executed statements
+    carry the pushed windows, materializations and the two-phase shape;
+    the inline spellings do not."""
+    import re
 
     import datafusion_spark.queries.tpcds_exec as tx
 
-    tx._ensure_views(spark, SF_SMALL)  # derive CTEs read the session views
-    for name in ("tpcds_q74", "tpcds_q11", "tpcds_q4"):
-        body = tx._BODIES[name]
-        assert "o_orderdate" not in body  # the oracle body carries no push
-        inline_sql = (tx._pruned_prelude(body) + body).replace(
-            "__SF__", SF_SMALL)
-        got_inline = [tuple(r) for r in spark.sql(inline_sql).collect()]
-        mat_sql = QUERIES[name].__defaults__[0]
-        assert "o_orderdate >= DATE '2000-01-01'" in mat_sql  # push present
-        before = (set(os.listdir(tx._MAT_TMP))
-                  if os.path.isdir(tx._MAT_TMP) else set())
-        got_mat = [tuple(r) for r in QUERIES[name](spark, SF_SMALL).collect()]
-        got_mat2 = [tuple(r) for r in QUERIES[name](spark, SF_SMALL).collect()]
-        after = set(os.listdir(tx._MAT_TMP))
-        assert got_mat == got_inline == got_mat2, name
-        assert len(after - before) == 2, "each invocation must write fresh scratch"
+    plan = {n: QUERIES[n].plan for n in _REWRITTEN}
+    for p in plan.values():
+        assert not re.search(r"o_orderdate (>=|BETWEEN)|SUM\(ps\)", p.inline)
+    # q4/q11/q74/q64: the heavy CTE is written once, with the o_orderdate
+    # window pushed below the fact base joins; the final only scans it
+    for name, cte in (("tpcds_q4", "year_total"), ("tpcds_q11", "year_total"),
+                      ("tpcds_q74", "year_total"), ("tpcds_q64", "cross_sales")):
+        ((view, mat),) = plan[name].pre
+        assert view == f"{cte}_{name}"
+        assert "o_orderdate >= DATE '2000-01-01'" in mat
+        assert tx._split_ctes(plan[name].final)[0] == [
+            (cte, f"{cte} AS (SELECT * FROM {view})")]
+    assert plan["tpcds_q64"].pre[0][1].endswith("WHERE syear IN (2000, 2000 + 1)")
+    # q14/q49/q78: one shared lineitem⋈orders pass, read by every channel
+    for name in ("tpcds_q14", "tpcds_q49", "tpcds_q78"):
+        view, mat = plan[name].pre[0]
+        assert view == f"shared_fact_{name}" and view in plan[name].final
+        assert mat.count("JOIN orders") == 1
+        assert "JOIN orders" not in plan[name].final
+        assert name == "tpcds_q78" or "l_linenumber" not in mat
+    # q14: cross_items is materialized too, so the 3-channel INTERSECT
+    # runs once in its pre-statement, never in the final
+    assert plan["tpcds_q14"].pre[1][0] == "cross_items_tpcds_q14"
+    assert "INTERSECT" in plan["tpcds_q14"].pre[1][1]
+    assert "INTERSECT" not in plan["tpcds_q14"].final
+    assert "cross_items AS (SELECT * FROM cross_items_tpcds_q14)" \
+        in plan["tpcds_q14"].final
+    # q67 two-phase rollup and q51 both-channel window push
+    q67 = plan["tpcds_q67"].final
+    assert "o_orderdate BETWEEN DATE '1996-01-01'" in q67
+    assert q67.count("GROUP BY ROLLUP") == 1 and "SUM(ps) AS sumsales" in q67
+    assert plan["tpcds_q51"].final.count(
+        "o_orderdate BETWEEN DATE '1996-01-01'") == 2
 
 
-def test_tpcds_shared_fact_materialization_equivalent(spark):
-    """r12: q14/q49/q78/q95 materialize the shared lineitem⋈orders fact
-    base once per invocation; every consuming channel CTE is redefined to
-    project its original expressions from that materialization (body text
-    unchanged).  The rewritten spelling must return exactly the inline
-    spelling's rows — including under the per-channel date predicates the
-    registration pushes into the materialization — and each invocation
-    must write a FRESH scratch directory (no cross-run reuse)."""
-    import os
-    from collections import Counter
-
-    import datafusion_spark.queries.tpcds_exec as tx
-    from datafusion_spark.queries import ORACLES
-
-    tx._ensure_views(spark, SF_SMALL)
-    for name in ("tpcds_q14", "tpcds_q49"):
-        body = ORACLES[name][len(tx._DUCK_DERIVE):]
-        inline_sql = (tx._pruned_prelude(body) + body).replace("__SF__", SF_SMALL)
-        got_inline = Counter(map(repr, spark.sql(inline_sql).collect()))
-        before = set(os.listdir(tx._MAT_TMP)) if os.path.isdir(tx._MAT_TMP) else set()
-        got_mat = Counter(map(repr, QUERIES[name](spark, SF_SMALL).collect()))
-        after = set(os.listdir(tx._MAT_TMP))
-        assert got_mat == got_inline, name
-        n_mats = 1 + len(QUERIES[name].__defaults__[3])  # fact mat + cte mats
-        assert len(after - before) == n_mats, "each invocation writes fresh scratch"
-        # the registered final statement reads the shared view, never the join
-        final_sql = QUERIES[name].__defaults__[1]
-        assert f"shared_fact_{name}" in final_sql
-        assert "JOIN orders" not in final_sql
-        if name == "tpcds_q14":
-            # cross_items is second-level materialized: the 3-channel
-            # INTERSECT runs once in its mat, never in the final statement
-            assert "INTERSECT" not in final_sql
-            assert "cross_items AS (SELECT * FROM cross_items_m_tpcds_q14)" \
-                in final_sql
-        # the materialization statement is the single base-join pass, pruned
-        mat_sql = QUERIES[name].__defaults__[0]
-        assert mat_sql.count("JOIN orders") == 1
-        assert "l_linenumber" not in mat_sql  # q14/q49 never derive from it
-
-
-def test_tpcds_q64_q67_rewrite_equivalent(spark):
-    """r13: q64 materializes cross_sales once per invocation with the
-    syear window pruned into the mat and the equivalent o_orderdate window
-    pushed below the fact base join; q67 executes a two-phase rollup with
-    the same o_orderdate push.  Both rewrites must return exactly the
-    inline spelling's rows (the spelling the DuckDB oracle runs) at two
-    SFs, and q64 must write fresh scratch per invocation."""
-    import os
-    from collections import Counter
-
+def test_scratch_keeps_only_latest_invocation(spark):
+    """Re-invoking a materializing entry removes its previous scratch:
+    only the latest invocation's directories remain under the entry's
+    subdirectory."""
     import datafusion_spark.queries.tpcds_exec as tx
 
-    for sf in (SF_SMALL, "/root/testdata/sf0.01"):
-        tx._ensure_views(spark, sf)
-        for name in ("tpcds_q64", "tpcds_q67", "tpcds_q51"):
-            body = tx._BODIES[name]
-            inline_sql = (tx._pruned_prelude(body) + body).replace("__SF__", sf)
-            got_inline = Counter(map(repr, spark.sql(inline_sql).collect()))
-            before = (set(os.listdir(tx._MAT_TMP))
-                      if os.path.isdir(tx._MAT_TMP) else set())
-            got_new = Counter(map(repr, QUERIES[name](spark, sf).collect()))
-            after = set(os.listdir(tx._MAT_TMP))
-            assert got_new == got_inline, (name, sf)
-            if name == "tpcds_q64":
-                assert len(after - before) == 1, "q64 writes fresh scratch"
+    name = "tpcds_q74"
+    views = [v for v, _ in QUERIES[name].plan.pre]
 
-    # structural pins: the executed texts carry the pushed windows and the
-    # two-phase shape; the oracle bodies do NOT (they stay the inline text)
-    q64_mat = QUERIES["tpcds_q64"].__defaults__[0]
-    q64_final = QUERIES["tpcds_q64"].__defaults__[1]
-    assert "o_orderdate >= DATE '2000-01-01'" in q64_mat
-    assert "syear IN (2000, 2000 + 1)" in q64_mat
-    assert "cross_sales_tpcds_q64 cs1" in q64_final
-    assert "cross_sales" not in q64_final.replace("cross_sales_tpcds_q64", "")
-    q67_sql = QUERIES["tpcds_q67"].__defaults__[0]
-    assert "o_orderdate BETWEEN DATE '1996-01-01'" in q67_sql
-    assert q67_sql.count("GROUP BY ROLLUP") == 1
-    assert "SUM(ps) AS sumsales" in q67_sql  # two-phase: ROLLUP over sums
-    q51_sql = QUERIES["tpcds_q51"].__defaults__[0]
-    assert q51_sql.count("o_orderdate BETWEEN DATE '1996-01-01'") == 2
-    for name in ("tpcds_q64", "tpcds_q67", "tpcds_q51"):
-        assert "o_orderdate" not in tx._BODIES[name]
-        assert "SUM(ps)" not in tx._BODIES[name]
+    def invoke():
+        QUERIES[name](spark, SF_SMALL).collect()
+        (inv,) = os.listdir(os.path.join(tx._MAT_TMP, name))
+        inv = os.path.join(tx._MAT_TMP, name, inv)
+        assert sorted(os.listdir(inv)) == views
+        return inv
+
+    first = invoke()
+    second = invoke()
+    assert first != second and not os.path.exists(first)
+
+
+def test_scratch_lazy_and_removed_at_exit(tmp_path):
+    """Importing the registry creates no scratch directory, and scratch
+    allocated through the runner's helper is gone once the process exits."""
+    code = (
+        "import glob, os, tempfile\n"
+        "from datafusion_spark.queries import tpcds_exec as tx\n"
+        "mats = os.path.join(tempfile.gettempdir(), 'dfspark_tpcds_mat_*')\n"
+        "assert not glob.glob(mats), glob.glob(mats)\n"
+        "open(os.path.join(tx._scratch('tpcds_q4'), 'part'), 'w').close()\n"
+        "assert glob.glob(mats + '/tpcds_q4/*/part')\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                   env=dict(os.environ, TMPDIR=str(tmp_path)))
+    assert not list(tmp_path.glob("dfspark_tpcds_mat_*"))
 
 
 def test_append_where_parenthesizes_top_level_or(spark):

@@ -6,17 +6,33 @@ smoke); the oracle comparison lives in test_oracle_parity.py.
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from datafusion_spark.queries import ORACLES, QUERIES
-from tests.conftest import SF_SMALL
+from datafusion_spark.queries import ORACLES, QUERIES, TAGS
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def test_registry_nonempty():
     assert len(QUERIES) >= 80
     # every oracle belongs to a registered query
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_sf_literal_oracles_are_sf_pinned():
+    """An oracle text that names one scale factor's files compares against
+    the wrong data at any other SF, so it must carry the matching
+    ``sf-pinned:`` tag (oracle_check then skips it elsewhere)."""
+    sf_dir = re.compile(re.escape(os.path.dirname(SF_ORACLE)) + r"/sf[\d.]+")
+    unpinned = {
+        name: dirs for name, sql in ORACLES.items()
+        if (dirs := {f"sf-pinned:{d}" for d in sf_dir.findall(sql)})
+        - set(TAGS[name])
+    }
+    assert not unpinned, unpinned
 
 
 def _contains_list_or_map(dt: DataType) -> bool:

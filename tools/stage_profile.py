@@ -14,11 +14,20 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _epoch(ts: str) -> float:
+    """Epoch seconds of a Spark REST timestamp such as
+    ``2026-01-01T12:34:56.789GMT`` (a fraction of any length, or none)."""
+    frac = re.search(r"\.(\d+)", ts)
+    return (time.mktime(time.strptime(ts[:19], "%Y-%m-%dT%H:%M:%S"))
+            + (float("0." + frac.group(1)) if frac else 0.0))
 
 
 def _api(base: str, path: str):
@@ -68,8 +77,8 @@ def main() -> None:
         t_origin = None
         print(f"\n=== {name}  wall={wall:.3f}s  jobs={len(jobs)} ===", flush=True)
         for j in jobs:
-            sub = time.mktime(time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")) + float(j["submissionTime"][20:23] or 0) / 1000.0
-            end = time.mktime(time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")) + float(j["completionTime"][20:23] or 0) / 1000.0
+            sub = _epoch(j["submissionTime"])
+            end = _epoch(j["completionTime"])
             if t_origin is None:
                 t_origin = sub
             jname = (j.get("name") or "")[:90]
@@ -79,8 +88,8 @@ def main() -> None:
                 s = stages.get(sid)
                 if not s or not s.get("submissionTime"):
                     continue
-                ssub = time.mktime(time.strptime(s["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")) + float(s["submissionTime"][20:23] or 0) / 1000.0
-                send = time.mktime(time.strptime(s["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")) + float(s["completionTime"][20:23] or 0) / 1000.0
+                ssub = _epoch(s["submissionTime"])
+                send = _epoch(s["completionTime"])
                 sname = (s.get("name") or "")[:70]
                 print(f"    stage {sid:4d} [{ssub - t_origin:7.3f} -> {send - t_origin:7.3f}] "
                       f"({send - ssub:6.3f}s, {s['numTasks']:4d}t, "
