@@ -17,6 +17,7 @@ at sf0.1 it dominates several queries.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -40,7 +41,7 @@ def _bench(io_tmp: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from datafusion_spark import get_spark
     from datafusion_spark.queries import QUERIES, TAGS
-    from pyspark.sql import functions as F
+    from tools.measure import cpu_kernel, floor_kernel, io_kernel
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -48,62 +49,12 @@ def _bench(io_tmp: str) -> None:
     # warm-up: touch the biggest table so JVM + parquet footers are hot
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
-    def measure_floor() -> float:
-        """Fixed per-query floor: minimal fresh-built two-stage job, same
-        harness.  min of 5 — job scheduling + AQE orchestration + codegen,
-        independent of data volume."""
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(1000).groupBy((F.col("id") % 7).alias("k")).agg(
-                F.sum("id").alias("s")
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        return min(runs)
-
-    def measure_calibration(runs_n: int = 2) -> float:
-        """Host-phase calibration kernel: a FIXED-SIZE, CPU-bound,
-        zero-I/O hash aggregate (~1 s on an unloaded host).  The floor
-        samples measure scheduling overhead, not CPU throughput — the
-        hypervisor alternates fast/slow phases that scale every
-        CPU-bound query by the same factor (r7 burned a session on a
-        phantom 1.8× "regression").  Cross-round comparisons divide by
-        this number to normalize host state mechanically
-        (tools/bench_compare.py --calibrate)."""
-        runs = []
-        for _ in range(runs_n):
-            t0 = time.perf_counter()
-            spark.range(0, 30_000_000, 1, 8).select(
-                ((F.col("id") * 2654435761) % 1000003).alias("k"),
-                (F.col("id") % 97).alias("v"),
-            ).groupBy("k").agg(
-                F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")
-            ).agg(F.sum("s"), F.max("n")).collect()
-            runs.append(time.perf_counter() - t0)
-        return min(runs)
-
-    def measure_io(runs_n: int = 1) -> float:
-        """Host I/O-phase kernel (r13, r12 verdict item 2a): a FIXED-SIZE
-        parquet write + full column read-back (~20 MB).  The CPU kernel
-        cannot normalize I/O host phases — both r12 watch-item
-        adjudications (tpcds_q78, text_bm25_index_compact, both
-        materialization-write-bound) needed an ad hoc I/O bracket and
-        showed corr(query, io_kernel) = +0.99 while the CPU kernel held
-        flat.  Sampled at the calibration positions so I/O-bound entries
-        (the shared-fact/CTE materializations, BM25/IVF compactions) get
-        a nearest-in-time I/O sample natively."""
-        dest = os.path.join(io_tmp, "io_kernel")
-        runs = []
-        for _ in range(runs_n):
-            t0 = time.perf_counter()
-            spark.range(0, 2_000_000, 1, 8).select(
-                F.col("id"),
-                (F.col("id") % 1000).alias("k"),
-                ((F.col("id") * 2654435761) % 1000003).alias("v"),
-            ).write.mode("overwrite").parquet(dest)
-            spark.read.parquet(dest).agg(F.sum("v")).collect()
-            runs.append(time.perf_counter() - t0)
-        return min(runs)
+    # The kernels live once, in tools/measure.py; their docstrings say
+    # what each one normalizes.
+    measure_floor = functools.partial(floor_kernel, spark)
+    measure_calibration = functools.partial(cpu_kernel, spark)
+    measure_io = functools.partial(
+        io_kernel, spark, os.path.join(io_tmp, "io_kernel"))
 
     floor_start = measure_floor()
     calibration_start = measure_calibration(runs_n=3)

@@ -1632,7 +1632,7 @@ _register(
       AND CAST(sc.revenue AS DOUBLE) <= 0.1 * sb.ave
       AND s_store_sk = sc.ss_store_sk
       AND i_item_sk = sc.ss_item_sk
-    ORDER BY s_store_name, i_item_desc
+    ORDER BY s_store_name, i_item_desc, sc.ss_store_sk, sc.ss_item_sk
     LIMIT 100
     """,
     doc="""TPC-DS q65 (reference tpcds_sql/65.sql) executed: per-(store,
@@ -1643,7 +1643,11 @@ _register(
     accumulate in DECIMAL(38,6) and the average is spelled exact-sum /
     count, so the <= threshold compares IEEE-identical doubles on both
     engines.  i_wholesale_cost derives as p_retailprice * 0.6
-    (deterministic double product).""",
+    (deterministic double product).  A second retarget: the ORDER BY gains
+    the unique tiebreak (sc.ss_store_sk, sc.ss_item_sk).  The reference's
+    (s_store_name, i_item_desc) is not a total order — at sf0.1 the 100th
+    row's key is shared by 5 rows — so LIMIT 100 would keep an
+    engine-dependent 1 of the 5.""",
 )
 
 _register(
@@ -5521,7 +5525,7 @@ _register(
     join: inventory is fact-sized at every real SF, but the static
     estimate of the pre-joined subquery can fall under the broadcast
     threshold — at sf1 that misestimated broadcast OOMed an 8 GB
-    driver (found by tools/scale_check.py, r7); a fact side must never
+    driver (found by a multi-SF timing run); a fact side must never
     be broadcast regardless of what the estimator says.""",
 )
 

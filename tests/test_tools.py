@@ -1,14 +1,21 @@
-"""Unit checks for the helpers in tools/ that need no Spark session."""
+"""Every CLI in tools/ still imports and parses its arguments."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
-from tools.stage_profile import _epoch
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = sorted(f for f in os.listdir(os.path.join(ROOT, "tools"))
+               if f.endswith(".py"))
 
 
-def test_stage_profile_epoch_reads_any_fraction():
-    whole = _epoch("2026-01-01T12:34:56GMT")
-    assert _epoch("2026-01-01T12:34:56.7GMT") - whole == pytest.approx(0.7)
-    assert _epoch("2026-01-01T12:34:56.789GMT") - whole == pytest.approx(0.789)
-    assert _epoch("2026-01-01T12:34:57.000GMT") - whole == pytest.approx(1.0)
+@pytest.mark.parametrize("tool", TOOLS)
+def test_tool_help_exits_zero(tool):
+    r = subprocess.run([sys.executable, os.path.join("tools", tool), "--help"],
+                       cwd=ROOT, capture_output=True, text=True, timeout=30)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "usage:" in r.stdout

@@ -18,7 +18,7 @@ workload rather than scale it:
     see 10x distinct vectors, not tied duplicates.
 
 Output: ``/root/repo/.scale/sf1`` (gitignored scratch; ~170 MB).  This data
-is for ``tools/scale_check.py`` wall-time slopes ONLY — it is NOT a
+is for ``tools/measure.py --sf`` wall-time slopes ONLY — it is NOT a
 correctness input and no oracle ever reads it (the driver's read-only
 ``/root/testdata`` stays the single source of truth for correctness).
 

@@ -9,6 +9,7 @@ the quick way to cross-check SURVEY.md §2 against what actually registers.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 from collections import defaultdict
@@ -17,6 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--list", action="store_true", help="print every entry")
+    args = ap.parse_args()
+
     from datafusion_spark.queries import ORACLES, QUERIES, TAGS
 
     by_family: dict[str, list[str]] = defaultdict(list)
@@ -35,7 +40,7 @@ def main() -> None:
         names = by_family[fam]
         n_oracle = sum(1 for n in names if n in ORACLES)
         print(f"{fam:12s} {len(names):3d} entries ({n_oracle} oracle)")
-        if "--list" in sys.argv:
+        if args.list:
             for n in names:
                 mark = "  " if n in ORACLES else " ?"
                 print(f"  {mark} {n}")
