@@ -3,17 +3,19 @@
 from datafusion_spark.plans.audit import (
     explain_analyze,
     explain_str,
-    has_broadcast_join,
+    operator_counts,
+    plan_nodes,
     pushed_filters,
     scan_columns,
-    shuffle_count,
+    statement_counts,
 )
 
 __all__ = [
     "explain_str",
     "explain_analyze",
+    "operator_counts",
+    "plan_nodes",
     "pushed_filters",
     "scan_columns",
-    "shuffle_count",
-    "has_broadcast_join",
+    "statement_counts",
 ]

@@ -619,7 +619,8 @@ def join_sort_merge_hint(spark, sf_dir):
     100 TB neither side of lineitem⋈orders fits a broadcast; SMJ is the
     strategy that spills gracefully (sort buffers, no hash table) — the
     MERGE hint pins it so the plan is the one a big cluster would run,
-    and tests/test_plans.py asserts SortMergeJoin is actually chosen.
+    and plans/manifest.json pins the SortMergeJoin (no broadcast join)
+    with its two input exchanges.
     Both sides shuffle-partition on the join key; the following
     aggregation is keyed on the orders side, partial-agged before its
     exchange."""
@@ -727,8 +728,8 @@ def job_style_join_ordering(spark, sf_dir):
     roles for nation, selective predicates on three different legs.  The
     Spark side declares joins in a deliberately naive order and lets
     Catalyst's CBO + AQE reorder: every dimension leg broadcasts, the
-    fact table never shuffles for a join (asserted via plan budget in
-    tests/test_plan_budgets.py) — at 100 TB the only exchange left is the
+    fact table never shuffles for a join (operator counts pinned in
+    plans/manifest.json) — at 100 TB the only exchange left is the
     final aggregation."""
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
@@ -991,7 +992,7 @@ def agg_partition_subset_reuse(spark, sf_dir):
     keyed on the pair.  At 100 TB this is one full-fact-table shuffle
     saved every time a pipeline pre-partitions on a coarse key and then
     aggregates on refinements of it (per-customer → per-customer-status
-    rollups).  tests/test_plan_budgets.py pins the plan: exactly one
+    rollups).  tests/test_plans.py pins the plan: exactly one
     exchange, and no hashpartitioning on the two-column pair anywhere."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 500)
     return (

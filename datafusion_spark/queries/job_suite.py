@@ -26,7 +26,7 @@ exercises on Spark: Catalyst's join-graph extraction from WHERE equalities,
 CBO+AQE join reordering, broadcast selection for the dim legs, and transitive
 predicate inference.  At 100 TB the wanted plan per query: every dim leg
 broadcast, bridge-bridge joins co-partitioned on l_orderkey, zero shuffles
-before the single-row aggregate (asserted in tests/test_plan_budgets.py).
+before the single-row aggregate (operator counts pinned in plans/manifest.json).
 """
 
 from __future__ import annotations

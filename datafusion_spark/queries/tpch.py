@@ -271,16 +271,17 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "semi-join"),
 )
 def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The merge hint pins a sort-merge semi join: Spark's size estimate of
+    the 2-column lineitem projection sits under the broadcast threshold,
+    so without the hint the FACT side becomes the semi-join's broadcast
+    build — a hash relation that grows linearly with lineitem (measured
+    4.0x/decade at sf1, and unrunnable at 100 TB).  The sort-merge semi
+    join shuffles both sides on orderkey (lineitem as 2 narrow columns)
+    and spills gracefully — the correct shape at every scale (measured
+    2.71s -> 0.64s at sf1)."""
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1996-07-01")) & (F.col("o_orderdate") < _ts("1996-10-01"))
     )
-    # merge hint: Spark's size estimate of the 2-column lineitem projection
-    # sits under the broadcast threshold, so without the hint the FACT side
-    # becomes the semi-join's broadcast build — a hash relation that grows
-    # linearly with lineitem (measured 4.0x/decade at sf1, and unrunnable at
-    # 100 TB).  The sort-merge semi join shuffles both sides on orderkey
-    # (lineitem as 2 narrow columns) and spills gracefully — the correct
-    # shape at every scale (measured 2.71s -> 0.64s at sf1).
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate").hint("merge")
     return (
         orders.join(

@@ -21,8 +21,8 @@ equivalent:
   - first_value OVER (ORDER BY id3)
                            -> min_by scalar, broadcast
 
-tests/test_plan_budgets.py pins that none of these plans contain a
-whole-table Window, and that the top-k sorts plan as TakeOrderedAndProject
+plans/manifest.json pins their operator counts: keyed exchanges only (no
+whole-table Window), and the top-k sorts plan as TakeOrderedAndProject
 (Spark's sort-pushdown/TopK equivalent), never a global sort.
 """
 
@@ -225,7 +225,7 @@ def sort_pushdown_topk_asc(spark, sf_dir):
     Plan must be TakeOrderedAndProject (per-partition top-k heaps merged on
     one reducer — k rows, not the table, cross the wire), never a global
     SortExec; the projection prunes to 3 columns at the scan
-    (tests/test_plan_budgets.py asserts both)."""
+    (plans/manifest.json pins the TakeOrderedAndProject and no Sort)."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     return e.orderBy("event_id").limit(100)
 
@@ -445,7 +445,7 @@ def agg_topk_min_max_groups(spark, sf_dir):
     (lim=[k] pushed INTO the partial aggregate) has a Spark analogue in
     plan shape: partial+final HashAggregate under TakeOrderedAndProject
     — per-partition k-row heaps, never a global sort
-    (tests/test_plan_budgets.py pins all four branches).  NULLS
+    (plans/manifest.json pins all four branches).  NULLS
     FIRST/LAST is spelled explicitly everywhere: Spark defaults ASC→
     NULLS FIRST while DuckDB defaults NULLS LAST — a real cross-engine
     divergence this entry would otherwise hash."""

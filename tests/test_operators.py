@@ -885,13 +885,13 @@ def test_repetition_filter_rowlocal_rewrite_semantics(spark):
     carries no Exchange at all."""
     from datafusion_spark.catalog import load_table
     from datafusion_spark.queries import QUERIES
-    from datafusion_spark.plans import shuffle_count
+    from datafusion_spark.plans import operator_counts
     from tests.conftest import SF_SMALL
 
     df = QUERIES["text_repetition_filter"](spark, SF_SMALL)
     # the only allowed exchange is fan_out's single-split spread; the old
     # shape had keyed exchanges for the window, two aggregations and a join
-    assert shuffle_count(df) <= 1, "rewrite must stay narrow per-row"
+    assert operator_counts(df).get("Exchange", 0) <= 1, "rewrite must stay narrow per-row"
 
     rows = {r.doc_id: r for r in df.collect()}
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")

@@ -12,14 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
-from datafusion_spark.plans import (
-    has_broadcast_join,
-    pushed_filters,
-    scan_columns,
-    shuffle_count,
-)
+from datafusion_spark.plans import operator_counts, pushed_filters, scan_columns
 from datafusion_spark.queries import QUERIES
 from tests.conftest import SF_ORACLE, SF_SMALL
+from tools.capture_plans import load_manifest
+
+# the final statement's operator counts of each registry entry, which
+# tests/test_registry_smoke.py::test_query_runs pins to the live plan
+FINAL = {name: stmts[-1] for name, stmts in load_manifest().items()}
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -52,56 +52,56 @@ def test_q6_scan_only_needed_columns(spark):
     assert all(len(cols) <= 4 for cols in scans), scans
 
 
-def test_dimension_join_broadcasts(spark):
-    df = QUERIES["tpch_q5"](spark, SF_SMALL)
-    assert has_broadcast_join(df)
+def test_dimension_join_broadcasts():
+    assert FINAL["tpch_q5"].get("BroadcastHashJoin", 0), FINAL["tpch_q5"]
 
 
-def test_topk_has_no_global_sort_shuffle(spark):
-    df = QUERIES["tpch_q3"](spark, SF_SMALL)
+def test_topk_has_no_global_sort_shuffle():
     # TakeOrderedAndProject handles the LIMIT; the only exchanges should be
     # for joins/aggregations, and a small fixed number of them.
-    assert "TakeOrderedAndProject" in str(df._jdf.queryExecution().executedPlan().toString())
+    assert FINAL["tpch_q3"].get("TakeOrderedAndProject", 0), FINAL["tpch_q3"]
 
 
-def test_single_shuffle_sessionization(spark):
-    df = QUERIES["events_sessionization"](spark, SF_SMALL)
+def test_single_shuffle_sessionization():
     # one hash exchange on user_id feeds both window passes + the aggregate
-    assert shuffle_count(df) <= 2
+    assert FINAL["events_sessionization"].get("Exchange", 0) <= 2
 
 
 def test_explain_analyze_reports_final_plan(spark):
+    """explain_analyze executes the DataFrame's own query execution, so the
+    plan it reports is the final adaptive plan, with per-operator rows."""
     from datafusion_spark.plans import explain_analyze
 
     out = explain_analyze(QUERIES["tpch_q6"](spark, SF_SMALL))
     assert out["rows"] == 1
-    assert "AdaptiveSparkPlan" in out["initial_plan"] or out["initial_plan"]
-    assert "HashAggregate" in out["final_plan"]
+    assert "isFinalPlan=true" in out["final_plan"], out["final_plan"]
+    assert out["initial"]["Exchange"] == out["final"]["Exchange"] == 1
+    ops = {o["op"]: o for o in out["operators"]}
+    assert ops["FileSourceScan"]["rows"] > 0
+    assert [o["rows"] for o in out["operators"] if o["op"] == "HashAggregate"][0] == 1
 
 
-def test_binned_range_join_is_equi_hash_join(spark):
+def test_binned_range_join_is_equi_hash_join():
     """The binned range join must plan as a (broadcast) HASH join on
     bin_id — the whole point is avoiding the nested-loop inequality join
     the naive formulation produces."""
-    df = QUERIES["join_range_binned"](spark, SF_SMALL)
-    plan = str(df._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "HashJoin" in plan
+    c = FINAL["join_range_binned"]
+    assert "BroadcastNestedLoopJoin" not in c, c
+    assert c.get("BroadcastHashJoin", 0) + c.get("ShuffledHashJoin", 0), c
 
 
-def test_lateral_join_decorrelated(spark):
+def test_lateral_join_decorrelated():
     """LATERAL correlated subquery must decorrelate to WindowGroupLimit
     (partial per-partition top-1), never a per-row re-execution."""
-    df = QUERIES["join_lateral_topk"](spark, SF_SMALL)
-    plan = str(df._jdf.queryExecution().executedPlan().toString())
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    c = FINAL["join_lateral_topk"]
+    assert "WindowGroupLimit" in c, c
+    assert "BroadcastNestedLoopJoin" not in c, c
 
 
-def test_sort_merge_hint_plan_uses_smj(spark):
-    plan = QUERIES["join_sort_merge_hint"](spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
+def test_sort_merge_hint_plan_uses_smj():
+    c = FINAL["join_sort_merge_hint"]
+    assert "SortMergeJoin" in c, c
+    assert "BroadcastHashJoin" not in c, c
 
 
 def test_range_partitioned_sort_invariant(spark):
@@ -166,28 +166,25 @@ def test_subset_partitioning_reuses_exchange(spark):
     o_custkey must NOT insert a second exchange — HashPartitioning(a)
     satisfies ClusteredDistribution([a, b]) because (a, b) groups refine
     a-partitions.  One exchange total, and none keyed on the pair."""
-    from datafusion_spark.plans import explain_str, shuffle_count
+    from datafusion_spark.plans import explain_str
 
     df = QUERIES["agg_partition_subset_reuse"](spark, SF_SMALL)
-    assert shuffle_count(df) == 1, explain_str(df)
+    assert operator_counts(df)["Exchange"] == 1, explain_str(df)
     txt = explain_str(df).lower()
     assert "hashpartitioning(o_custkey" in txt
     assert "hashpartitioning(custkey, status" not in txt
     assert "hashpartitioning(o_custkey, o_orderstatus" not in txt
 
 
-def test_join_strategy_invariance_plans_both_operators(spark):
+def test_join_strategy_invariance_plans_both_operators():
     """join_disable_repartition_joins.slt mirror pin: the strategy toggle
     really does produce two different physical joins — the merge-hinted
     leg plans SortMergeJoin, the broadcast-hinted leg plans
     BroadcastHashJoin — and the entry's value-equality flag compares
     them (oracle pins strategies_agree = true)."""
-    from datafusion_spark.plans import explain_str
-
-    df = QUERIES["join_strategy_invariance"](spark, SF_SMALL)
-    txt = explain_str(df)
-    assert "SortMergeJoin" in txt, txt
-    assert "BroadcastHashJoin" in txt, txt
+    c = FINAL["join_strategy_invariance"]
+    assert "SortMergeJoin" in c, c
+    assert "BroadcastHashJoin" in c, c
 
 
 def test_ordering_propagates_through_filter_no_sort(spark):
@@ -197,12 +194,10 @@ def test_ordering_propagates_through_filter_no_sort(spark):
     bucketed sortBy) keeps that ordering through projections and filters,
     so ORDER BY on the same key plans NO Sort node.  A different key must
     still sort — exactly one."""
-    import re
-
     from datafusion_spark.plans import explain_str
 
     def sorts(q):
-        return len(re.findall(r"^\(\d+\) Sort", explain_str(q), re.MULTILINE))
+        return operator_counts(q).get("Sort", 0)
 
     df = spark.range(1000).select(
         (F.col("id") % 7).alias("t"), F.col("id").alias("d")
@@ -223,14 +218,11 @@ def test_monotonic_projection_resort_divergence(spark):
     output plans one Sort.  Cost-only divergence — values identical
     either way — pinned so a future Spark that learns the inference shows
     up as a plan improvement, not silent drift."""
-    import re
-
     from datafusion_spark.plans import explain_str
 
     df = spark.range(1000).select(F.col("id").alias("d"))
     q = df.orderBy("d").select(F.col("d").cast("double").alias("dd")).orderBy("dd")
-    n = len(re.findall(r"^\(\d+\) Sort", explain_str(q), re.MULTILINE))
-    assert n == 1, explain_str(q)
+    assert operator_counts(q).get("Sort", 0) == 1, explain_str(q)
     rows = [r.dd for r in q.collect()]
     assert rows == sorted(rows) and len(rows) == 1000
 
@@ -263,14 +255,12 @@ def test_grouping_sets_single_expand_shuffle(spark):
     ONE exchange keyed on the grouping-id-extended key — never one
     aggregation+shuffle per set.  At 100 TB an N-set rollup that shuffles
     N times instead of once is the difference between one pass and N."""
-    from datafusion_spark.plans import explain_str, shuffle_count
-
-    import re
+    from datafusion_spark.plans import explain_str
 
     df = QUERIES["agg_grouping_sets"](spark, SF_SMALL)
     txt = explain_str(df)
-    assert shuffle_count(df) == 1, txt
-    assert len(re.findall(r"^\(\d+\) Expand", txt, re.MULTILINE)) == 1, txt
+    counts = operator_counts(df)
+    assert counts["Exchange"] == 1 and counts["Expand"] == 1, txt
     assert "spark_grouping_id" in txt, txt
 
 

@@ -1,4 +1,5 @@
-"""Every registered query runs at sf0.001 and returns a stable schema.
+"""Every registered query runs at sf0.001, returns a stable schema and
+plans exactly the operator counts plans/manifest.json records for it.
 
 This is the cheap half of the correctness gate (the driver's entry()
 smoke); the oracle comparison lives in test_oracle_parity.py.
@@ -8,18 +9,46 @@ from __future__ import annotations
 
 import os
 import re
+from itertools import zip_longest
 
 import pytest
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
+from datafusion_spark.plans import statement_counts
 from datafusion_spark.queries import ORACLES, QUERIES, TAGS
 from tests.conftest import SF_ORACLE, SF_SMALL
+from tools.capture_plans import load_manifest
 
 
 def test_registry_nonempty():
     assert len(QUERIES) >= 80
     # every oracle belongs to a registered query
     assert set(ORACLES) <= set(QUERIES)
+
+
+@pytest.fixture(scope="module")
+def manifest():
+    return load_manifest()
+
+
+def test_manifest_covers_registry(manifest):
+    assert set(manifest) == set(QUERIES), (
+        "plans/manifest.json is out of step with the registry: "
+        f"missing {sorted(set(QUERIES) - set(manifest))}, "
+        f"stale {sorted(set(manifest) - set(QUERIES))}; "
+        "regenerate with python tools/capture_plans.py")
+
+
+def _counts_diff(name: str, want: list[dict] | None, got: list[dict]) -> str:
+    """The manifest fields that differ, per statement, as ``old -> new``."""
+    lines = [f"{name}: plan differs from plans/manifest.json"]
+    for i, (w, g) in enumerate(zip_longest(want or [], got, fillvalue={})):
+        fields = [f"{k} {w.get(k, 0)} -> {g.get(k, 0)}"
+                  for k in sorted(set(w) | set(g)) if w.get(k, 0) != g.get(k, 0)]
+        if fields:
+            lines.append(f"  statement {i + 1}/{len(got)}: " + ", ".join(fields))
+    lines.append(f"  if intended: python tools/capture_plans.py {name}")
+    return "\n".join(lines)
 
 
 def test_sf_literal_oracles_are_sf_pinned():
@@ -53,7 +82,7 @@ def _contains_list_or_map(dt: DataType) -> bool:
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(spark, name):
+def test_query_runs(spark, manifest, name):
     df = QUERIES[name](spark, SF_SMALL)
     # Driver-harness contract: oracle-checked entries must not expose
     # ARRAY/MAP-typed output columns — render them to text (array_join /
@@ -72,6 +101,10 @@ def test_query_runs(spark, name):
     # stable schema: re-planning yields identical columns
     df2 = QUERIES[name](spark, SF_SMALL)
     assert df.columns == df2.columns
+    # plan shape, warm: exact operator counts per statement
+    counts = statement_counts(spark, QUERIES[name], df2)
+    assert counts == manifest.get(name), _counts_diff(
+        name, manifest.get(name), counts)
 
 
 def test_failed_entries_pinned_first():

@@ -33,48 +33,39 @@ from contextlib import contextmanager
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from datafusion_spark.plans import explain_analyze
+
 
 @contextmanager
 def _confs(spark, **kv):
-    """Set SQLConfs for the block, always restoring afterwards."""
+    """Set SQLConfs for the block, then restore each one's prior value
+    (unsetting would drop a session-built value to Spark's default)."""
+    saved = {k: spark.conf.get(k, None) for k in kv}
     try:
         for k, v in kv.items():
-            spark.conf.set(k.replace("__", "."), str(v))
+            spark.conf.set(k, str(v))
         yield
     finally:
-        for k in kv:
-            spark.conf.unset(k.replace("__", "."))
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def _executed_metrics(df, substrings):
-    """Harvest executed-plan SQLMetrics whose name contains any substring.
+def _metrics(df, op, substring):
+    """Nonzero SQLMetrics of ``op`` nodes whose name contains ``substring``,
+    from ``explain_analyze``."""
+    return {k: v for o in explain_analyze(df)["operators"] if o["op"] == op
+            for k, v in o["metrics"].items() if substring in k.lower()}
 
-    Walks through AQE wrappers (AdaptiveSparkPlanExec / *QueryStageExec)
-    the same way the plan-budget helpers do.
-    """
-    root = df._jdf.queryExecution().executedPlan()
-    stack, hits = [root], []
-    while stack:
-        n = stack.pop()
-        cls = n.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(n.executedPlan())
-            continue
-        if cls.endswith("QueryStageExec"):
-            stack.append(n.plan())
-            continue
-        it = n.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            name = kv._1()
-            if any(s in name.lower() for s in substrings):
-                v = kv._2().value()
-                if v > 0:
-                    hits.append((cls, name, v))
-        ch = n.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return hits
+
+def test_confs_restores_prior_value(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    with _confs(spark, **{key: -1}):
+        assert spark.conf.get(key) == "-1"
+    assert spark.conf.get(key) == prior
 
 
 def test_window_buffer_spill_parity(spark):
@@ -109,9 +100,9 @@ def test_window_buffer_spill_parity(spark):
     ):
         df = build()
         throttled = df.collect()
-        spills = _executed_metrics(df, ["spill"])
+        spills = _metrics(df, "Window", "spill")
     assert throttled == base
-    assert any(cls == "WindowExec" for cls, _, _ in spills), (
+    assert spills, (
         "window buffer never spilled despite threshold 256 < 2000-row "
         f"partitions: {spills}"
     )
@@ -140,9 +131,9 @@ def test_object_hash_agg_fallback_parity(spark):
     ):
         df = build()
         throttled = df.collect()
-        fallbacks = _executed_metrics(df, ["fallback"])
+        fallbacks = _metrics(df, "ObjectHashAggregate", "fallback")
     assert throttled == base
-    assert any(cls == "ObjectHashAggregateExec" for cls, _, _ in fallbacks), (
+    assert fallbacks, (
         f"aggregate never fell back to the sort-based path: {fallbacks}"
     )
 

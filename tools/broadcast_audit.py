@@ -75,26 +75,6 @@ def _subtree_scans_fact(node, marker: str) -> bool:
     return False
 
 
-def _iter_nodes(root):
-    """Yield every physical node under root, INCLUDING subquery plan
-    fragments (scalar/IN subqueries hang off expressions via
-    node.subqueries(), not children() — a broadcast hosted inside one
-    would otherwise never be walked)."""
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        yield n
-        ch = n.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-        try:
-            sq = n.subqueries()
-            for i in range(sq.size()):
-                stack.append(sq.apply(i))
-        except Exception:  # noqa: BLE001 - node type without subqueries()
-            pass
-
-
 def audit(df, marker: str = "lineitem.parquet"):
     """Return list of flagged fact-side-broadcast join descriptions in
     df's static plan.
@@ -103,10 +83,11 @@ def audit(df, marker: str = "lineitem.parquet"):
     BroadcastExchange nodes yet — the signal is the JOIN operator's
     declared build side: BroadcastHashJoin/BroadcastNestedLoopJoin with
     BuildLeft/BuildRight naming which child will be broadcast."""
+    from datafusion_spark.plans import plan_nodes
+
     root = df._jdf.queryExecution().sparkPlan()
     flagged = []
-    for n in _iter_nodes(root):
-        cls = n.getClass().getSimpleName()
+    for cls, n in plan_nodes(root):
         if cls in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
             # Read the build side from the node itself, not the toString
             # head line (which truncates and could silently pick the wrong

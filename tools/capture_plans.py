@@ -1,61 +1,75 @@
-"""Capture .explain("formatted") for named queries into plans/<tag>/.
+"""Write plans/manifest.json: the operator counts of every registry entry.
 
 Usage:
-    python tools/capture_plans.py --tag r12 --suffix before [--sf DIR] name...
-    python tools/capture_plans.py --tag r12 --suffix before --bench
+    python tools/capture_plans.py            # every entry
+    python tools/capture_plans.py name...    # only these; other lines kept
 
-Writes plans/<tag>/<name>_<suffix>.txt with the formatted physical plan
-(pre-execution AQE plan).  Building a query DataFrame may eagerly build
-persisted index artifacts (similarity/text lifecycles) — that is part of
-the entry's contract and happens here exactly as in bench.py.
+The manifest has one line per entry, keys sorted.  Each line lists, per
+statement the entry runs (every pre-statement of ``fn.plan.pre`` in order,
+then the final one), the nonzero ``operator_counts`` of its plan.  Counts
+are taken warm, in the state tests/test_registry_smoke.py::test_query_runs
+compares them in: invoke, collect, invoke again, count — on the tier-1
+session (local[4], 4 shuffle partitions) at SF_SMALL.  A plan change is a
+one-line diff of the entry whose plan changed; review it before
+committing.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MANIFEST = os.path.join(ROOT, "plans", "manifest.json")
+
+
+def load_manifest() -> dict:
+    if not os.path.exists(MANIFEST):
+        return {}
+    with open(MANIFEST) as f:
+        return json.load(f)
+
+
+def write_manifest(manifest: dict) -> None:
+    lines = [f"{json.dumps(name)}: {json.dumps(counts, sort_keys=True)}"
+             for name, counts in sorted(manifest.items())]
+    with open(MANIFEST, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default="r12")
-    ap.add_argument("--suffix", default="before")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--bench", action="store_true",
-                    help="capture every bench-tagged query")
-    ap.add_argument("names", nargs="*")
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="registry entries (default: all)")
     args = ap.parse_args()
 
+    sys.path.insert(0, ROOT)
     from datafusion_spark import get_spark
-    from datafusion_spark.queries import QUERIES, TAGS
+    from datafusion_spark.plans import statement_counts
+    from datafusion_spark.queries import QUERIES
+    from tests.conftest import SESSION, SF_SMALL
 
-    names = list(args.names)
-    if args.bench:
-        names += [n for n in sorted(QUERIES)
-                  if "bench" in TAGS.get(n, ()) or n.startswith("tpch_")]
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", args.tag)
-    os.makedirs(out_dir, exist_ok=True)
-
-    spark = get_spark("capture-plans")
+    names = args.names or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"not registered: {' '.join(unknown)}")
+    spark = get_spark("capture-plans", **SESSION)
     spark.sparkContext.setLogLevel("ERROR")
+    manifest = {k: v for k, v in load_manifest().items() if k in QUERIES}
+    failed = 0
     for name in names:
-        if name not in QUERIES:
-            print(f"skip {name}: not registered", file=sys.stderr)
-            continue
+        fn = QUERIES[name]
         try:
-            df = QUERIES[name](spark, args.sf)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
-        except Exception as e:  # capture the failure for the record
-            txt = f"EXPLAIN FAILED: {type(e).__name__}: {e}\n"
-        path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
-        with open(path, "w") as f:
-            f.write(txt)
-        print(f"wrote {path}")
+            fn(spark, SF_SMALL).collect()
+            manifest[name] = statement_counts(spark, fn, fn(spark, SF_SMALL))
+        except Exception as e:  # noqa: BLE001 - keep the old line, report
+            failed += 1
+            print(f"FAIL {name}: {str(e).splitlines()[0][:160]}", file=sys.stderr)
+    write_manifest(manifest)
+    print(f"wrote {MANIFEST}: {len(names) - failed} of {len(names)} captured",
+          file=sys.stderr)
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
