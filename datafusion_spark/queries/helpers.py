@@ -126,18 +126,36 @@ def units6(col: Column) -> Column:
 
     This is the DataFusion accumulator design (functions-aggregate/src/
     sum.rs: i64/i128 partial sums, widened merge) expressed in Spark: long
-    partial sums stay on the fast vectorized hash-agg path (wide decimal
-    sum buffers fall off it), and only the tiny merge stage touches
-    decimals.  Per-partition long sums cannot overflow (≤4M rows × 1.3e11
-    units ≈ 5e17 < 2^63); the cross-partition merge must sum as
-    DECIMAL(38,0) — see q1 for the two-level pattern.
+    sums stay on the fast vectorized hash-agg path (wide decimal sum
+    buffers fall off it), and only the final merge touches decimals — see
+    ``sum_limbs``.
     """
     return F.rint(col * 1000000.0).cast("long")
 
 
-def sum_units6(col: str) -> Column:
-    """Merge-side exact sum of units6 partials → double (divide by 1e6)."""
-    return (F.sum(F.col(col).cast("decimal(38,0)")) / 1000000).cast("double")
+LIMB_BITS = 20
+
+
+def sum_limbs(units: Column) -> Column:
+    """Exact sum of a units6 column → double, as ONE aggregate (no
+    per-partition level, no second exchange).
+
+    Each value splits into two long limbs, ``hi = u >> 20`` (arithmetic
+    shift: floor) and ``lo = u & (2^20 - 1)`` (in [0, 2^20)), so
+    ``hi * 2^20 + lo == u`` for every long, negative ones included.  Both
+    limbs sum as plain longs in the hash aggregate; the merge
+    ``(CAST(Σhi AS DECIMAL(38,0)) * 2^20 + Σlo) / 1e6`` is the same exact
+    integer a DECIMAL(38,0) sum of ``u`` gives, so the result is
+    bit-identical to direct decimal accumulation.  Exact while the long
+    sums cannot overflow: a group has fewer than 2^43 ≈ 8.8e12 rows (Σlo)
+    and N·max|value| < 2^63·2^20/1e6 ≈ 9.7e18 (Σhi).  TPC-H's largest money
+    term is ~1.14e5, i.e. N < 8.5e13 rows per group; a 100 TB lineitem has
+    ~6e11.  Under ANSI mode an overflow raises instead of wrapping.
+    """
+    hi = F.sum(F.shiftright(units, LIMB_BITS))
+    lo = F.sum(units.bitwiseAND(F.lit((1 << LIMB_BITS) - 1)))
+    exact = hi.cast("decimal(38,0)") * (1 << LIMB_BITS) + lo
+    return (exact / 1000000).cast("double")
 
 
 def revenue_expr() -> Column:

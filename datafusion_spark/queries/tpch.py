@@ -69,7 +69,7 @@ from datafusion_spark.queries.helpers import (
     revenue_expr,
     sql_davg,
     sql_dsum,
-    sum_units6,
+    sum_limbs,
     units6,
 )
 from datafusion_spark.queries.registry import query
@@ -87,7 +87,7 @@ def _ts(lit: str) -> F.Column:
 # q1: pricing summary report — full scan, wide aggregation.
 # Reference parity: benchmarks/queries/q1.sql. Scan-side: the shipdate filter
 # is pushed into the parquet scan; partial aggregation happens map-side so the
-# shuffle carries only (flag,status) x 8 aggregate states.
+# one shuffle carries only per-(flag,status) long partial sums.
 # ---------------------------------------------------------------------------
 @query(
     "tpch_q1",
@@ -108,35 +108,32 @@ def _ts(lit: str) -> F.Column:
     tags=("tpch", "aggregate"),
 )
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Two-level exact aggregation (see helpers.units6): level 1 sums exact
-    # 1e-6-unit longs per (group, input partition) — stays on the fast
-    # vectorized hash-agg path, where eight DECIMAL(38,6) sums fall off it
-    # (~2.4x slower end-to-end).  Level 2 merges the per-partition longs in
-    # DECIMAL(38,0), so no overflow at any scale.  Bit-identical to direct
-    # decimal accumulation.
+    # Exact money sums in one aggregate and one exchange (helpers.sum_limbs):
+    # each 1e-6-unit long is summed as two long limbs on the vectorized
+    # hash-agg path, where eight DECIMAL(38,6) sums fall off it (~2.4x
+    # slower end-to-end), and only the merge touches DECIMAL(38,0).
+    # Bit-identical to direct decimal accumulation.
     li = _t(spark, sf_dir, "lineitem")
     rev = revenue_expr()
-    lvl1 = (
-        li.filter(F.col("l_shipdate") <= _ts("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus", F.spark_partition_id().alias("pid"))
-        .agg(
-            F.sum(units6(F.col("l_quantity"))).alias("u_qty"),
-            F.sum(units6(F.col("l_extendedprice"))).alias("u_price"),
-            F.sum(units6(rev)).alias("u_rev"),
-            F.sum(units6(rev * (F.lit(1) + F.col("l_tax")))).alias("u_charge"),
-            F.sum(units6(F.col("l_discount"))).alias("u_disc"),
-            F.count(F.lit(1)).alias("n"),
-        )
+    units = li.filter(F.col("l_shipdate") <= _ts("1998-09-02")).select(
+        "l_returnflag",
+        "l_linestatus",
+        units6(F.col("l_quantity")).alias("u_qty"),
+        units6(F.col("l_extendedprice")).alias("u_price"),
+        units6(rev).alias("u_rev"),
+        units6(rev * (F.lit(1) + F.col("l_tax"))).alias("u_charge"),
+        units6(F.col("l_discount")).alias("u_disc"),
     )
-    return lvl1.groupBy("l_returnflag", "l_linestatus").agg(
-        sum_units6("u_qty").alias("sum_qty"),
-        sum_units6("u_price").alias("sum_base_price"),
-        sum_units6("u_rev").alias("sum_disc_price"),
-        sum_units6("u_charge").alias("sum_charge"),
-        (sum_units6("u_qty") / F.sum("n")).alias("avg_qty"),
-        (sum_units6("u_price") / F.sum("n")).alias("avg_price"),
-        (sum_units6("u_disc") / F.sum("n")).alias("avg_disc"),
-        F.sum("n").alias("count_order"),
+    n = F.count(F.lit(1))
+    return units.groupBy("l_returnflag", "l_linestatus").agg(
+        sum_limbs(F.col("u_qty")).alias("sum_qty"),
+        sum_limbs(F.col("u_price")).alias("sum_base_price"),
+        sum_limbs(F.col("u_rev")).alias("sum_disc_price"),
+        sum_limbs(F.col("u_charge")).alias("sum_charge"),
+        (sum_limbs(F.col("u_qty")) / n).alias("avg_qty"),
+        (sum_limbs(F.col("u_price")) / n).alias("avg_price"),
+        (sum_limbs(F.col("u_disc")) / n).alias("avg_disc"),
+        n.alias("count_order"),
     )
 
 
@@ -640,14 +637,33 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "case", "join"),
 )
 def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1997-01-01")) & (F.col("l_shipdate") < _ts("1998-01-01"))
+    """``l_shipdate < ship_end`` and ``l_shipdate >= o_orderdate + lag``
+    imply ``o_orderdate < ship_end - lag`` (1997-12-02): a bound derived
+    from the query itself, so it holds on any data.  Written against the
+    column it reaches the orders scan as a pushed filter (and prunes a
+    date-partitioned orders at scale).  The priority class is reduced to a
+    boolean before the join, so the orders leg carries three narrow
+    columns.  The join strategy is left to size: a broadcast while that
+    leg's estimate is under the broadcast threshold (sf0.1 and sf1), a
+    shuffle join beyond it."""
+    ship_end = _ts("1998-01-01")
+    lag = F.expr("INTERVAL 30 DAYS")
+    orders = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderdate") < ship_end - lag)
+        .select(
+            "o_orderkey",
+            "o_orderdate",
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("high"),
+        )
     )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    li = _t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= _ts("1997-01-01")) & (F.col("l_shipdate") < ship_end)
+    )
+    high = F.col("high")
     return (
         li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
+        .filter(F.col("l_shipdate") >= F.col("o_orderdate") + lag)
         .groupBy("l_returnflag")
         .agg(
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
@@ -675,12 +691,26 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "outer-join", "aggregate"),
 )
 def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders are counted per customer key BEFORE the join, so the join
+    side is at most one row per key.  The ``shuffle_hash`` hint keeps that
+    fact-derived side from being broadcast: both inputs hash-partition on
+    the customer key, and at scale each partition's build side is at most
+    customers / partitions rows.  The per-customer merge after the join is
+    required, not redundant: a duplicate or NULL ``c_custkey`` yields
+    several join rows for one group, which the original query counts as
+    one customer.  The join output is already partitioned on
+    ``c_custkey``, so that merge adds no exchange."""
     cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
+    counts = (
+        _t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") != "5-LOW")
+        .groupBy("o_custkey")
+        .agg(F.count("o_orderkey").alias("n"))
+    )
     return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
+        cust.join(counts.hint("shuffle_hash"), F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
+        .agg(F.sum(F.coalesce(F.col("n"), F.lit(0))).alias("c_count"))
         .groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
     )

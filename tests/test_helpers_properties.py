@@ -59,6 +59,62 @@ def test_units6_exact_on_revenue_products(a, b):
     assert _units6_py(rev) == true_units
 
 
+@given(st.integers(min_value=-(2**63), max_value=2**63 - 1))
+@settings(max_examples=2000, deadline=None)
+def test_limbs_recompose_every_long(u):
+    """sum_limbs' split: arithmetic shift (floor) and low-bit mask give
+    limbs that recompose to u for every int64, negative ones included."""
+    assert (u >> 20) * 2**20 + (u & (2**20 - 1)) == u
+
+
+def _limb_sums_match_decimal(spark, units):
+    """Sum ``units`` (1e-6 money units) through sum_limbs(units6(v)) in one
+    groupBy and compare with the exact Decimal sum, per group."""
+    import pyspark.sql.functions as F
+
+    from datafusion_spark.queries.helpers import sum_limbs, units6
+
+    rows = [(i % 3, u / 1000000) for i, u in enumerate(units)]
+    df = spark.createDataFrame(rows, "g int, v double").repartition(4)
+    got = {
+        r.g: r.s
+        for r in df.groupBy("g").agg(sum_limbs(units6(F.col("v"))).alias("s")).collect()
+    }
+    want = {
+        g: float(sum(Decimal(u) for i, u in enumerate(units) if i % 3 == g) / 10**6)
+        for g in range(3)
+    }
+    assert got == want
+    return df
+
+
+def test_limb_sum_exact_past_long_range(spark):
+    """~3,000 values near 4e9 (≈4e15 units each) sum past 2^63 units: a
+    plain long sum raises, the limb sum equals the Decimal sum."""
+    import random
+
+    import pyspark.sql.functions as F
+    import pytest
+
+    from datafusion_spark.queries.helpers import units6
+
+    rng = random.Random(11)
+    units = [4 * 10**15 + rng.randrange(10**12) for _ in range(3000)]
+    df = _limb_sums_match_decimal(spark, units)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        df.agg(F.sum(units6(F.col("v")))).collect()
+
+
+def test_limb_sum_exact_mixed_signs(spark):
+    """Negative units have negative high limbs and non-negative low limbs;
+    mixed signs still recompose to the exact Decimal sum."""
+    import random
+
+    rng = random.Random(12)
+    units = [rng.randrange(-4 * 10**15, 4 * 10**15) for _ in range(3000)]
+    _limb_sums_match_decimal(spark, units)
+
+
 def test_gcd_fold_matches_math_gcd(spark):
     """The bounded Euclid fold (fn_math_gcd_lcm) equals math.gcd for
     arbitrary positive pairs — 92 steps cover any 64-bit pair."""

@@ -52,7 +52,7 @@ _BUDGETS = {
         text_token_stats text_train_test_split tpcds_q13 tpcds_q18 tpcds_q21
         tpcds_q22 tpcds_q27 tpcds_q43 tpcds_q46 tpcds_q48 tpcds_q62 tpcds_q76
         tpcds_q99 tpch_official_q10 tpch_official_q14 tpch_official_q19
-        tpch_q10 tpch_q12 tpch_q14 tpch_q19 tpch_q3 tpch_q5 tpch_q6
+        tpch_q1 tpch_q10 tpch_q12 tpch_q14 tpch_q19 tpch_q3 tpch_q5 tpch_q6
         window_groups_frame
     """,
     2: """
@@ -60,7 +60,7 @@ _BUDGETS = {
         events_ewma_smoothing events_ohlc_downsample subquery_any_all
         text_sample_stratified tpcds_q3 tpcds_q36 tpcds_q41 tpcds_q52
         tpcds_q53 tpcds_q61 tpcds_q63 tpcds_q84 tpcds_q86 tpcds_q89 tpcds_q90
-        tpcds_q91 tpch_official_q12 tpch_official_q17 tpch_official_q8 tpch_q1
+        tpcds_q91 tpch_official_q12 tpch_official_q17 tpch_official_q8
     """,
     3: """
         h2o_window_partition_sweep join_sort_merge_hint text_char_entropy
@@ -195,6 +195,17 @@ def test_join_limit_pushes_local_limit(spark):
     txt = explain_str(QUERIES["join_limit_pushdown"](spark, SF_SMALL))
     assert "LocalLimit" in txt, "limit not pushed below the joins"
     assert "TakeOrderedAndProject" in txt, "ordered join branch lost TopK"
+
+
+def test_tpch_q12_pushes_implied_orderdate_bound(spark):
+    """q12's date conditions imply o_orderdate < 1997-12-02; written
+    against the column, that bound must reach the orders parquet scan as
+    a pushed filter (at scale it prunes a date-partitioned orders)."""
+    from datafusion_spark.plans import explain_str
+
+    txt = explain_str(QUERIES["tpch_q12"](spark, SF_SMALL))
+    assert "LessThan(o_orderdate,1997-12-02T00:00)" in txt, (
+        "implied o_orderdate bound not pushed to the orders scan")
 
 
 def test_topk_through_join_pushed_shape(spark):
