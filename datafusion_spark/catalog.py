@@ -107,18 +107,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Filters/projections compose onto this scan and reach
     the parquet reader via Catalyst (check .explain: PushedFilters/ReadSchema)."""
     ensure_runtime_tuned(spark)
-    path = table_path(sf_dir, name)
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1  # missing path: let spark.read raise its own error
-    key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
+    key = (spark.sparkContext.applicationId, sf_dir, name, _mtime_ns(sf_dir, name))
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
     df = _read_table(spark, sf_dir, name)
     _RELATION_CACHE[key] = df
     return df
+
+
+def _mtime_ns(sf_dir: str, name: str) -> int:
+    """The table file's mtime; -1 for a missing path (spark.read raises
+    its own error)."""
+    try:
+        return os.stat(table_path(sf_dir, name)).st_mtime_ns
+    except OSError:
+        return -1
 
 
 def cached_parquet(spark: SparkSession, *paths: str) -> DataFrame:
@@ -281,43 +285,56 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-# Current temp-view state per session: applicationId -> (sf_dir, shadows).
-# ``shadows`` is the set of base-table names whose view has been replaced by
-# a derived overlay (tpch_official).  register_views() is a no-op when the
-# session already has the plain views for the same sf_dir — per-call
+# Temp views per session: applicationId -> {view name: (sf_dir, mtime_ns)}
+# for base tables, (sf_dir, None) for a view replaced by a derived overlay
+# (tpch_official).  register_views() skips every base-table name whose view
+# already reads that sf_dir's table file as it is now — per-call
 # re-registration was the dominant fixed cost of spark.sql entries in bench
-# (10 parquet opens per call).
-_VIEW_STATE: dict[str, tuple[str, frozenset]] = {}
+# (10 parquet opens per call), and a cached call sends the gateway one
+# command pair.
+_VIEW_STATE: dict[str, dict[str, tuple[str, int | None]]] = {}
 
-_PLAIN = frozenset()
 
+def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
+    """Register base tables ``names`` (default: all) as temp views so
+    spark.sql(...) can see them — the equivalent of DataFusion's
+    SessionContext::register_table.
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql(...) can see them —
-    the equivalent of DataFusion's SessionContext::register_table.
-
-    Cached per (session, sf_dir): skipped when this session already holds
-    the un-shadowed views for this sf_dir.  Anything that replaces a
+    Cached per (session, sf_dir, name, file mtime): a name whose view
+    already reads this table file is skipped.  Anything that replaces a
     base-named view must call note_view_shadows()/invalidate_views() so the
     next caller re-registers."""
-    app = spark.sparkContext.applicationId
-    if _VIEW_STATE.get(app) == (sf_dir, _PLAIN):
-        return
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEW_STATE[app] = (sf_dir, _PLAIN)
+    views = _VIEW_STATE.setdefault(spark.sparkContext.applicationId, {})
+    for name in names:
+        source = (sf_dir, _mtime_ns(sf_dir, name))
+        if views.get(name) != source:
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+            views[name] = source
 
 
 def note_view_shadows(spark: SparkSession, sf_dir: str, shadows) -> None:
-    """Record that base-named temp views are currently shadowed by derived
-    overlays (and for which sf_dir), so plain register_views() re-registers
-    and overlay installers can skip redundant re-installation."""
-    _VIEW_STATE[spark.sparkContext.applicationId] = (sf_dir, frozenset(shadows))
+    """Record that the views ``shadows`` are now derived overlays for
+    ``sf_dir`` and are the only ones, so register_views() restores a
+    shadowed base name and overlay installers can skip redundant
+    re-installation."""
+    views = _VIEW_STATE.setdefault(spark.sparkContext.applicationId, {})
+    for name in [n for n, (_, mtime) in views.items() if mtime is None]:
+        del views[name]
+    for name in shadows:
+        views[name] = (sf_dir, None)
 
 
 def view_state(spark: SparkSession):
-    """Current (sf_dir, shadow-set) for this session, or None if unknown."""
-    return _VIEW_STATE.get(spark.sparkContext.applicationId)
+    """(sf_dir, overlay names) when every base-table view and every overlay
+    of this session reads one sf_dir; None otherwise.  An overlay outside
+    TABLES (partsupp) survives a plain register_views() of another sf_dir,
+    so its sf_dir counts too."""
+    views = _VIEW_STATE.get(spark.sparkContext.applicationId, {})
+    dirs = {views[n][0] if n in views else None for n in TABLES}
+    dirs |= {d for d, _ in views.values()}
+    if len(dirs) != 1 or None in dirs:
+        return None
+    return dirs.pop(), frozenset(n for n, (_, mtime) in views.items() if mtime is None)
 
 
 def invalidate_views(spark: SparkSession) -> None:

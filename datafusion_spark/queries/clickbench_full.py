@@ -159,17 +159,18 @@ def _pruned_hits_spark(body: str) -> str:
     driver-side analysis-cost optimization as the TPC-DS prelude pruning
     (r12 §1): the full 44-column projection cost 130–160 ms of parse+
     analysis per run vs ~40 ms pruned, with identical physical plans
-    (Catalyst pruned the columns anyway).  The DuckDB oracle text is NOT
-    touched."""
-    if re.search(r"\*", re.sub(r"(?i)count\s*\(\s*\*\s*\)", "", body)):
+    (Catalyst pruned the columns anyway).  String literals are ignored (a
+    regex's ``.*`` names no column), and a body that names no column
+    (``SELECT COUNT(*)``) keeps the first one.  The DuckDB oracle text is
+    NOT touched."""
+    code = re.sub(r"'(?:[^'\\]|\\.)*'", "''", body)
+    if re.search(r"\*", re.sub(r"(?i)count\s*\(\s*\*\s*\)", "", code)):
         # any '*' outside COUNT(*) (SELECT-star, hits.*, or arithmetic we
         # won't disambiguate) → keep every column
         return _HITS_SPARK_FULL
     kept = [c for a, c in _HITS_SPARK_COLS
-            if re.search(rf"\b{a}\b", body, re.IGNORECASE)]
-    if not kept:  # defensive: no recognizable reference → keep everything
-        return _HITS_SPARK_FULL
-    return "SELECT" + ",".join(kept) + "\nFROM events_cb\n"
+            if re.search(rf"\b{a}\b", code, re.IGNORECASE)]
+    return "SELECT" + ",".join(kept or [_HITS_SPARK_COLS[0][1]]) + "\nFROM events_cb\n"
 
 
 def _cb(n: int, body: str, duck_body: str | None = None, tags: tuple = ()):

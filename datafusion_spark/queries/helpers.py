@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
@@ -54,21 +53,9 @@ def two_level_distinct(sf_dir: str, table: str) -> bool:
     return table_bytes(sf_dir, table) > limit
 
 
-def dsum(col: Column | str, alias: str) -> Column:
-    """Exact distributed sum of a double column via decimal accumulation."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double").alias(alias)
-
-
-def davg(col: Column | str, alias: str) -> Column:
-    """Deterministic average: exact decimal sum divided by count, in double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(c.cast(DEC)).cast("double") / F.count(c)
-    ).alias(alias)
-
-
 def sql_dsum(expr: str, alias: str) -> str:
+    """Exact distributed sum of a DOUBLE expression via decimal
+    accumulation, as SQL text."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE) AS {alias}"
 
 
@@ -115,8 +102,8 @@ def fan_out(df, min_parts: int | None = None):
     return df
 
 
-def units6(col: Column) -> Column:
-    """Exact 1e-6-unit integer representation of a money value.
+def sql_units6(expr: str) -> str:
+    """Exact 1e-6-unit integer (BIGINT) of a money value, as SQL text.
 
     Precondition: the value is an exact decimal with ≤6 fractional digits
     (TPC-H money/discount/tax columns and their 2dp×2dp×2dp products) and
@@ -128,17 +115,17 @@ def units6(col: Column) -> Column:
     sum.rs: i64/i128 partial sums, widened merge) expressed in Spark: long
     sums stay on the fast vectorized hash-agg path (wide decimal sum
     buffers fall off it), and only the final merge touches decimals — see
-    ``sum_limbs``.
+    ``sql_sum_limbs``.
     """
-    return F.rint(col * 1000000.0).cast("long")
+    return f"CAST(rint(({expr}) * 1e6) AS BIGINT)"
 
 
 LIMB_BITS = 20
 
 
-def sum_limbs(units: Column) -> Column:
-    """Exact sum of a units6 column → double, as ONE aggregate (no
-    per-partition level, no second exchange).
+def sql_sum_limbs(units: str) -> str:
+    """Exact sum of a ``sql_units6`` column → DOUBLE, as ONE aggregate (no
+    per-partition level, no second exchange), as SQL text.
 
     Each value splits into two long limbs, ``hi = u >> 20`` (arithmetic
     shift: floor) and ``lo = u & (2^20 - 1)`` (in [0, 2^20)), so
@@ -152,17 +139,12 @@ def sum_limbs(units: Column) -> Column:
     term is ~1.14e5, i.e. N < 8.5e13 rows per group; a 100 TB lineitem has
     ~6e11.  Under ANSI mode an overflow raises instead of wrapping.
     """
-    hi = F.sum(F.shiftright(units, LIMB_BITS))
-    lo = F.sum(units.bitwiseAND(F.lit((1 << LIMB_BITS) - 1)))
-    exact = hi.cast("decimal(38,0)") * (1 << LIMB_BITS) + lo
-    return (exact / 1000000).cast("double")
+    return (f"CAST((CAST(SUM(shiftright(({units}), {LIMB_BITS})) AS DECIMAL(38,0))"
+            f" * {1 << LIMB_BITS} + SUM(({units}) & {(1 << LIMB_BITS) - 1}))"
+            f" / 1000000 AS DOUBLE)")
 
 
-def revenue_expr() -> Column:
-    """l_extendedprice * (1 - l_discount): the TPC-H revenue term."""
-    return F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-
-
+# The TPC-H revenue term.
 SQL_REVENUE = "l_extendedprice * (1 - l_discount)"
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
-from datafusion_spark.queries.helpers import DEC, dsum
+from datafusion_spark.queries.helpers import DEC
 from datafusion_spark.queries.registry import query
 from datafusion_spark.queries.helpers import values_df
 

@@ -165,11 +165,13 @@ def source_parquet_zstd_roundtrip(spark, sf_dir):
     """COPY TO parquet with zstd compression → scan → aggregate.  Exercises
     the writer codec option (reference: COPY ... OPTIONS (compression
     'zstd'), datafusion/common/src/file_options); zstd is the right codec
-    at 100 TB (≈2× better ratio than snappy at similar scan speed)."""
+    at 100 TB (≈2× better ratio than snappy at similar scan speed).  The
+    copy is read back with the schema just written, so no footer-inference
+    job runs before the scan."""
     li = load_table(spark, sf_dir, "lineitem")
     path = os.path.join(_SCRATCH, "lineitem_zstd")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(li.schema).parquet(path)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double")

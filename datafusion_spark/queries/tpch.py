@@ -1,9 +1,22 @@
 """TPC-H suite (q1–q22), adapted to the driver's simplified schema.
 
-DataFusion runs the full TPC-H as its core benchmark (reference:
-benchmarks/queries/q1.sql … q22.sql); this module re-expresses every query
-Spark-first with the DataFrame API — Catalyst handles join reordering,
-predicate pushdown and broadcast selection.
+DataFusion runs the full TPC-H as its core benchmark from SQL text
+(reference: benchmarks/queries/q1.sql … q22.sql, one frontend into one
+LogicalPlan); so does this module.  Every entry is one Spark SQL statement
+(``fn.plan.final``) next to its oracle text (``fn.plan.inline``), and one
+runner registers the views the statement reads and calls ``spark.sql``.
+Plan choices that Catalyst would not make on its own are SQL hints
+(``BROADCAST``, ``MERGE``, ``SHUFFLE_HASH``) or a rewritten text; each is
+explained at its entry, and an entry whose final text differs from its
+oracle text is pinned row-identical to it (tests/test_plans.py).  An entry
+whose oracle text plans the same (q6, q8, q14, q17, q19) runs that text.
+
+Why text and not the DataFrame API: building a plan is Python → JVM round
+trips, and every ``F.col``/``F.lit``/``cast``/``alias`` is one or more of
+them while each DataFrame verb re-runs the analyzer.  The DataFrame
+spelling of q1 sent 280 gateway commands per build (q6, the smallest, 64);
+one ``spark.sql`` call sends 7 with the views cached, for the same
+physical plan.
 
 Schema adaptations: the driver's tables drop several TPC-H columns and the
 whole partsupp table, so NO query here is official-spec TPC-H semantics —
@@ -57,40 +70,46 @@ here for continuity, and the official joins/subqueries are exercised there.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import re
 
-from datafusion_spark.catalog import load_table
+from datafusion_spark.catalog import TABLES, register_views
 from datafusion_spark.queries.helpers import (
-    DEC,
     SQL_REVENUE,
-    davg,
-    dsum,
-    revenue_expr,
     sql_davg,
     sql_dsum,
-    sum_limbs,
-    units6,
+    sql_sum_limbs,
+    sql_units6,
 )
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import Plan, query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+def _tpch(name: str, tags: tuple, oracle: str, final: str | None = None) -> None:
+    """Register ``name``: the entry runs ``final`` (default: the oracle
+    text itself) through ``spark.sql`` after registering the base-table
+    views either text reads; ``fn.plan`` holds both texts.  A table counts
+    as read wherever its name stands as a word, whatever the case or the
+    FROM-list spelling: a view missed here would silently resolve to one an
+    earlier entry left, maybe at another sf_dir."""
+    text = oracle + (final or "")
+    views = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text, re.I))
+
+    def fn(spark, sf_dir):
+        register_views(spark, sf_dir, views)
+        return spark.sql(fn.plan.final)
+
+    fn.__name__ = name
+    fn.plan = Plan((), final or oracle, oracle)
+    query(name, oracle=oracle, tags=("tpch",) + tags)(fn)
 
 
-def _ts(lit: str) -> F.Column:
-    return F.to_timestamp(F.lit(lit))
-
-
-# ---------------------------------------------------------------------------
-# q1: pricing summary report — full scan, wide aggregation.
-# Reference parity: benchmarks/queries/q1.sql. Scan-side: the shipdate filter
-# is pushed into the parquet scan; partial aggregation happens map-side so the
-# one shuffle carries only per-(flag,status) long partial sums.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q1",
+# q1: pricing summary report — full scan, wide aggregation (reference
+# q1.sql).  Exact money sums in one aggregate and one exchange
+# (helpers.sql_sum_limbs): each 1e-6-unit long is summed as two long limbs
+# on the vectorized hash-agg path, where eight DECIMAL(38,6) sums fall off
+# it (~2.4x slower end-to-end), and only the merge touches DECIMAL(38,0).
+# Bit-identical to direct decimal accumulation.
+_tpch(
+    "tpch_q1", ("aggregate",),
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            {sql_dsum('l_quantity', 'sum_qty')},
@@ -105,45 +124,40 @@ def _ts(lit: str) -> F.Column:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("tpch", "aggregate"),
+    final=f"""
+    SELECT l_returnflag, l_linestatus,
+           {sql_sum_limbs('u_qty')} AS sum_qty,
+           {sql_sum_limbs('u_price')} AS sum_base_price,
+           {sql_sum_limbs('u_rev')} AS sum_disc_price,
+           {sql_sum_limbs('u_charge')} AS sum_charge,
+           {sql_sum_limbs('u_qty')} / COUNT(*) AS avg_qty,
+           {sql_sum_limbs('u_price')} / COUNT(*) AS avg_price,
+           {sql_sum_limbs('u_disc')} / COUNT(*) AS avg_disc,
+           COUNT(*) AS count_order
+    FROM (
+      SELECT l_returnflag, l_linestatus,
+             {sql_units6('l_quantity')} AS u_qty,
+             {sql_units6('l_extendedprice')} AS u_price,
+             {sql_units6(SQL_REVENUE)} AS u_rev,
+             {sql_units6(f'{SQL_REVENUE} * (1 + l_tax)')} AS u_charge,
+             {sql_units6('l_discount')} AS u_disc
+      FROM lineitem
+      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    ) units
+    GROUP BY l_returnflag, l_linestatus
+    """,
 )
-def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Exact money sums in one aggregate and one exchange (helpers.sum_limbs):
-    # each 1e-6-unit long is summed as two long limbs on the vectorized
-    # hash-agg path, where eight DECIMAL(38,6) sums fall off it (~2.4x
-    # slower end-to-end), and only the merge touches DECIMAL(38,0).
-    # Bit-identical to direct decimal accumulation.
-    li = _t(spark, sf_dir, "lineitem")
-    rev = revenue_expr()
-    units = li.filter(F.col("l_shipdate") <= _ts("1998-09-02")).select(
-        "l_returnflag",
-        "l_linestatus",
-        units6(F.col("l_quantity")).alias("u_qty"),
-        units6(F.col("l_extendedprice")).alias("u_price"),
-        units6(rev).alias("u_rev"),
-        units6(rev * (F.lit(1) + F.col("l_tax"))).alias("u_charge"),
-        units6(F.col("l_discount")).alias("u_disc"),
-    )
-    n = F.count(F.lit(1))
-    return units.groupBy("l_returnflag", "l_linestatus").agg(
-        sum_limbs(F.col("u_qty")).alias("sum_qty"),
-        sum_limbs(F.col("u_price")).alias("sum_base_price"),
-        sum_limbs(F.col("u_rev")).alias("sum_disc_price"),
-        sum_limbs(F.col("u_charge")).alias("sum_charge"),
-        (sum_limbs(F.col("u_qty")) / n).alias("avg_qty"),
-        (sum_limbs(F.col("u_price")) / n).alias("avg_price"),
-        (sum_limbs(F.col("u_disc")) / n).alias("avg_disc"),
-        n.alias("count_order"),
-    )
 
-
-# ---------------------------------------------------------------------------
-# q2 (adapted): minimum-cost supplier. partsupp derived from lineitem; the
-# correlated min-subquery becomes a window MIN over the partition — one
-# shuffle on p_partkey instead of a re-scan per row.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q2",
+# q2 (adapted): minimum-cost supplier.  partsupp is derived from lineitem;
+# the correlated min-subquery becomes a window MIN over p_partkey — one
+# shuffle instead of a re-scan per row.  The p_size/p_type filter keeps ~1%
+# of parts, so it is pushed BELOW the partsupp aggregation as a broadcast
+# semi join on l_partkey and the aggregate shuffles only the surviving
+# lineitems (ps_supplycost per key pair is unaffected by dropping other
+# parts); DataFusion's optimizer makes the same push through an aggregate
+# (optimizer/src/push_down_filter.rs).
+_tpch(
+    "tpch_q2", ("join", "subquery"),
     oracle="""
     WITH partsupp AS (
         SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
@@ -165,59 +179,42 @@ def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
         WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')
     """,
-    tags=("tpch", "join", "subquery"),
+    final="""
+    SELECT s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost
+    FROM (
+      SELECT /*+ BROADCAST(eur_supp, part) */
+             s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost,
+             MIN(ps_supplycost) OVER (PARTITION BY p_partkey) AS min_cost
+      FROM (
+        SELECT /*+ BROADCAST(kept) */ l_partkey AS ps_partkey,
+               l_suppkey AS ps_suppkey,
+               MIN(l_extendedprice / l_quantity) AS ps_supplycost
+        FROM lineitem
+        LEFT SEMI JOIN (SELECT p_partkey FROM part
+                        WHERE p_size = 15 AND p_type = 'STANDARD') kept
+          ON l_partkey = p_partkey
+        GROUP BY l_partkey, l_suppkey
+      ) partsupp
+      JOIN (
+        SELECT /*+ BROADCAST(nation, region) */ *
+        FROM supplier
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        WHERE r_name = 'EUROPE'
+      ) eur_supp ON ps_suppkey = s_suppkey
+      JOIN part ON ps_partkey = p_partkey
+      WHERE p_size = 15 AND p_type = 'STANDARD'
+    ) ranked
+    WHERE ps_supplycost = min_cost
+    """,
 )
-def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-
-    # The p_size/p_type filter keeps ~1% of parts — push it BELOW the
-    # partsupp aggregation (broadcast semi-join on l_partkey) so the
-    # groupBy shuffles only the surviving lineitems, not all of them.
-    # ps_supplycost per (partkey, suppkey) is unaffected by dropping other
-    # parts.  At 100 TB this turns the dominant shuffle into a rounding
-    # error; DataFusion's optimizer does the same pushdown through its
-    # aggregate (optimizer/src/push_down_filter.rs).
-    part_f = part.filter((F.col("p_size") == 15) & (F.col("p_type") == "STANDARD"))
-    li_f = li.join(
-        F.broadcast(part_f.select("p_partkey")),
-        li.l_partkey == F.col("p_partkey"),
-        "leftsemi",
-    )
-    partsupp = li_f.groupBy(
-        F.col("l_partkey").alias("ps_partkey"),
-        F.col("l_suppkey").alias("ps_suppkey"),
-    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("ps_supplycost"))
-
-    eur_supp = (
-        supplier.join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    joined = (
-        partsupp.join(F.broadcast(eur_supp), F.col("ps_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(part_f), F.col("ps_partkey") == F.col("p_partkey"))
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        joined.withColumn("min_cost", F.min("ps_supplycost").over(w))
-        .filter(F.col("ps_supplycost") == F.col("min_cost"))
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name", "ps_supplycost")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q3: shipping priority — 3-way join, agg, top-10. Deterministic LIMIT via
-# (revenue DESC, o_orderdate, l_orderkey) total order; Spark plans this as a
-# TakeOrderedAndProject (no full sort shuffle).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q3",
+# q3: shipping priority — 3-way join, agg, top-10.  Deterministic LIMIT via
+# the (revenue DESC, o_orderdate, l_orderkey) total order; Spark plans it as
+# a TakeOrderedAndProject (no full sort shuffle).  Written lineitem-first:
+# from the oracle's join order Catalyst broadcasts the filtered lineitem.
+_tpch(
+    "tpch_q3", ("join", "topk"),
     oracle=f"""
     SELECT l_orderkey, {sql_dsum(SQL_REVENUE, 'revenue')}, o_orderdate
     FROM customer
@@ -230,30 +227,31 @@ def q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderdate, l_orderkey
     LIMIT 10
     """,
-    tags=("tpch", "join", "topk"),
+    final=f"""
+    SELECT l_orderkey, {sql_dsum(SQL_REVENUE, 'revenue')}, o_orderdate
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    WHERE l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+      AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+      AND c_mktsegment = 'BUILDING'
+    GROUP BY l_orderkey, o_orderdate
+    ORDER BY revenue DESC, o_orderdate, l_orderkey
+    LIMIT 10
+    """,
 )
-def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ts("1998-03-15"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1998-03-15"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(revenue_expr(), "revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
 
-
-# ---------------------------------------------------------------------------
-# q4 (adapted): order priority checking. "late" := shipped >60 days after
-# order date (no l_commitdate in schema). EXISTS → left-semi hash join with a
-# non-equi residual condition.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q4",
+# q4 (adapted): order priority checking.  "late" := shipped >60 days after
+# the order date (no l_commitdate in the schema).  EXISTS becomes a left
+# semi join with a non-equi residual.  The MERGE hint pins a sort-merge
+# semi join: Spark's size estimate of the 2-column lineitem projection sits
+# under the broadcast threshold, so without it the FACT side becomes the
+# broadcast build — a hash relation that grows linearly with lineitem
+# (measured 4.0x/decade at sf1, unrunnable at 100 TB).  The sort-merge semi
+# join shuffles both sides on orderkey and spills gracefully (measured
+# 2.71 s -> 0.64 s at sf1).
+_tpch(
+    "tpch_q4", ("semi-join",),
     oracle="""
     SELECT o_orderpriority, COUNT(*) AS order_count
     FROM orders
@@ -265,39 +263,23 @@ def q3(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
     GROUP BY o_orderpriority
     """,
-    tags=("tpch", "semi-join"),
+    final="""
+    SELECT /*+ MERGE(lineitem) */ o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    LEFT SEMI JOIN lineitem
+      ON l_orderkey = o_orderkey
+     AND l_shipdate > o_orderdate + INTERVAL 60 DAY
+    WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+    GROUP BY o_orderpriority
+    """,
 )
-def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The merge hint pins a sort-merge semi join: Spark's size estimate of
-    the 2-column lineitem projection sits under the broadcast threshold,
-    so without the hint the FACT side becomes the semi-join's broadcast
-    build — a hash relation that grows linearly with lineitem (measured
-    4.0x/decade at sf1, and unrunnable at 100 TB).  The sort-merge semi
-    join shuffles both sides on orderkey (lineitem as 2 narrow columns)
-    and spills gracefully — the correct shape at every scale (measured
-    2.71s -> 0.64s at sf1)."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-07-01")) & (F.col("o_orderdate") < _ts("1996-10-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate").hint("merge")
-    return (
-        orders.join(
-            li,
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
 
-
-# ---------------------------------------------------------------------------
-# q5: local supplier volume — 6-way join; region/nation broadcast, the
-# customer=supplier nation constraint rides the join condition.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q5",
+# q5: local supplier volume — 6-way join; region and nation broadcast, the
+# customer = supplier nation constraint rides the join condition.  Written
+# lineitem-first, as q3: the oracle's join order broadcasts lineitem.
+_tpch(
+    "tpch_q5", ("join", "aggregate"),
     oracle=f"""
     SELECT n_name, {sql_dsum(SQL_REVENUE, 'revenue')}
     FROM customer
@@ -311,38 +293,26 @@ def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
     GROUP BY n_name
     """,
-    tags=("tpch", "join", "aggregate"),
+    final=f"""
+    SELECT /*+ BROADCAST(nation, region) */
+           n_name, {sql_dsum(SQL_REVENUE, 'revenue')}
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+      AND r_name = 'ASIA'
+    GROUP BY n_name
+    """,
 )
-def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-01-01")) & (F.col("o_orderdate") < _ts("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            supp,
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(dsum(revenue_expr(), "revenue"))
-    )
 
-
-# ---------------------------------------------------------------------------
-# q6: forecasting revenue change — pure scan+filter+agg; every predicate is
-# parquet-pushable (check PushedFilters in .explain).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q6",
+# q6: forecasting revenue change — pure scan + filter + agg; every predicate
+# is parquet-pushable (PushedFilters in the scan).
+_tpch(
+    "tpch_q6", ("scan", "aggregate"),
     oracle=f"""
     SELECT {sql_dsum('l_extendedprice * l_discount', 'revenue')}
     FROM lineitem
@@ -351,24 +321,15 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("tpch", "scan", "aggregate"),
 )
-def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1997-01-01"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"))
 
-
-# ---------------------------------------------------------------------------
 # q7: volume shipping between two nations (supplier side vs customer side).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q7",
+# MERGE on orders: it is a fact whose 2-column estimate sits under the
+# broadcast threshold, so without the hint all of orders becomes a
+# broadcast build (linear-growing; measured 1.14 s -> 0.59 s at sf1
+# co-shuffled on orderkey).
+_tpch(
+    "tpch_q7", ("join",),
     oracle=f"""
     SELECT supp_nation, cust_nation, l_year, {sql_dsum('volume', 'revenue')}
     FROM (
@@ -388,47 +349,34 @@ def q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     """,
-    tags=("tpch", "join"),
+    final=f"""
+    SELECT supp_nation, cust_nation, l_year, {sql_dsum('volume', 'revenue')}
+    FROM (
+      SELECT /*+ MERGE(orders), BROADCAST(n1, n2) */
+             supp_nation, cust_nation,
+             CAST(year(l_shipdate) AS BIGINT) AS l_year,
+             {SQL_REVENUE} AS volume
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN customer ON o_custkey = c_custkey
+      JOIN (SELECT n_nationkey AS n1_key, n_name AS supp_nation FROM nation) n1
+        ON s_nationkey = n1_key
+      JOIN (SELECT n_nationkey AS n2_key, n_name AS cust_nation FROM nation) n2
+        ON c_nationkey = n2_key
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        AND l_shipdate <= TIMESTAMP '1997-12-31 00:00:00'
+        AND ((supp_nation = 'NATION_1' AND cust_nation = 'NATION_2')
+          OR (supp_nation = 'NATION_2' AND cust_nation = 'NATION_1'))
+    ) shipping
+    GROUP BY supp_nation, cust_nation, l_year
+    """,
 )
-def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01")) & (F.col("l_shipdate") <= _ts("1997-12-31"))
-    )
-    # narrow projection + merge hint: orders is a fact — its 2-column
-    # estimate sits under the broadcast threshold, so without the hint the
-    # whole orders table becomes a broadcast build (linear-growing; measured
-    # 1.14s -> 0.59s at sf1 co-shuffled on orderkey)
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey").hint("merge")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    n1 = nat.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
-    n2 = nat.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
-    shipping = (
-        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-        .select(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-            revenue_expr().alias("volume"),
-        )
-    )
-    return shipping.groupBy("supp_nation", "cust_nation", "l_year").agg(dsum("volume", "revenue"))
 
-
-# ---------------------------------------------------------------------------
-# q8: national market share — conditional aggregation over an 8-way join.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q8",
+# q8: national market share — conditional aggregation over an 8-way join;
+# Catalyst broadcasts part, both nation legs and region on its own.
+_tpch(
+    "tpch_q8", ("join", "case"),
     oracle="""
     SELECT o_year,
            CAST(SUM(CAST(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END
@@ -452,49 +400,13 @@ def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year
     """,
-    tags=("tpch", "join", "case"),
 )
-def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1995-01-01")) & (F.col("o_orderdate") <= _ts("1996-12-31"))
-    )
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    n1 = nat.select(F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region"))
-    n2 = nat.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("nation"))
-    all_nations = (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(reg), F.col("n1_region") == F.col("r_regionkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
-        .select(
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            revenue_expr().alias("volume"),
-            "nation",
-        )
-    )
-    vol_dec = F.col("volume").cast(DEC)
-    national = F.when(F.col("nation") == "NATION_3", F.col("volume")).otherwise(F.lit(0.0))
-    return all_nations.groupBy("o_year").agg(
-        (F.sum(national.cast(DEC)).cast("double") / F.sum(vol_dec).cast("double")).alias(
-            "mkt_share"
-        )
-    )
 
-
-# ---------------------------------------------------------------------------
-# q9 (adapted): product-type profit. No ps_supplycost → cost proxy is
-# 10% of p_retailprice per unit.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q9",
+# q9 (adapted): product-type profit.  No ps_supplycost → the cost proxy is
+# 10% of p_retailprice per unit.  MERGE on orders as in q7 (measured
+# 1.33 s -> 0.94 s at sf1).
+_tpch(
+    "tpch_q9", ("join",),
     oracle=f"""
     SELECT nation, o_year, {sql_dsum('amount', 'sum_profit')}
     FROM (
@@ -510,36 +422,27 @@ def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) profit
     GROUP BY nation, o_year
     """,
-    tags=("tpch", "join"),
+    final=f"""
+    SELECT nation, o_year, {sql_dsum('amount', 'sum_profit')}
+    FROM (
+      SELECT /*+ BROADCAST(part, nation), MERGE(orders) */
+             n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+             {SQL_REVENUE} - 0.1 * p_retailprice * l_quantity AS amount
+      FROM lineitem
+      JOIN part ON l_partkey = p_partkey
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN nation ON s_nationkey = n_nationkey
+      WHERE p_name LIKE '%widget%'
+    ) profit
+    GROUP BY nation, o_year
+    """,
 )
-def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    # narrow projection + merge hint: see q7 — stops the full-orders
-    # broadcast build (measured 1.33s -> 0.94s at sf1)
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate").hint("merge")
-    nat = _t(spark, sf_dir, "nation")
-    amount = revenue_expr() - F.lit(0.1) * F.col("p_retailprice") * F.col("l_quantity")
-    profit = (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            amount.alias("amount"),
-        )
-    )
-    return profit.groupBy("nation", "o_year").agg(dsum("amount", "sum_profit"))
 
-
-# ---------------------------------------------------------------------------
-# q10: returned item reporting — top-20 customers by lost revenue.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q10",
+# q10: returned item reporting — top-20 customers by lost revenue.  Written
+# lineitem-first, as q3: the oracle's join order broadcasts lineitem.
+_tpch(
+    "tpch_q10", ("join", "topk"),
     oracle=f"""
     SELECT c_custkey, c_name, {sql_dsum(SQL_REVENUE, 'revenue')}, c_acctbal, n_name
     FROM customer
@@ -553,34 +456,27 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
-    tags=("tpch", "join", "topk"),
+    final=f"""
+    SELECT /*+ BROADCAST(nation) */
+           c_custkey, c_name, {sql_dsum(SQL_REVENUE, 'revenue')}, c_acctbal, n_name
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN nation ON c_nationkey = n_nationkey
+    WHERE l_returnflag = 'R'
+      AND o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+    GROUP BY c_custkey, c_name, c_acctbal, n_name
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+    """,
 )
-def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-10-01")) & (F.col("o_orderdate") < _ts("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nat = _t(spark, sf_dir, "nation")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(revenue_expr(), "revenue"))
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
 
-
-# ---------------------------------------------------------------------------
-# q11 (adapted): important inventory — group-by with a scalar-subquery
-# threshold (total * fraction). The scalar aggregate is broadcast, not
-# re-computed per row.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q11",
+# q11 (adapted): important inventory — group-by with a scalar threshold
+# (total * fraction).  The one-row total is broadcast into a nested-loop
+# join, not re-computed per row.
+_tpch(
+    "tpch_q11", ("subquery", "having"),
     oracle=f"""
     WITH natline AS (
       SELECT l_partkey, {SQL_REVENUE} AS v
@@ -595,32 +491,35 @@ def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE)
          > (SELECT CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) * 0.001 FROM natline)
     """,
-    tags=("tpch", "subquery", "having"),
+    final=f"""
+    WITH natline AS (
+      SELECT /*+ BROADCAST(nation) */ l_partkey, {SQL_REVENUE} AS v
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN nation ON s_nationkey = n_nationkey
+      WHERE n_name = 'NATION_5'
+    )
+    SELECT /*+ BROADCAST(total) */ l_partkey, value
+    FROM (SELECT l_partkey, {sql_dsum('v', 'value')}
+          FROM natline GROUP BY l_partkey) per_part
+    JOIN (SELECT CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) * 0.001 AS threshold
+          FROM natline) total
+      ON value > threshold
+    """,
 )
-def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
-    natline = (
-        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("l_partkey", revenue_expr().alias("v"))
-    )
-    per_part = natline.groupBy("l_partkey").agg(dsum("v", "value"))
-    total = natline.agg((F.sum(F.col("v").cast(DEC)).cast("double") * F.lit(0.001)).alias("threshold"))
-    return (
-        per_part.join(F.broadcast(total))
-        .filter(F.col("value") > F.col("threshold"))
-        .select("l_partkey", "value")
-    )
 
-
-# ---------------------------------------------------------------------------
-# q12 (adapted): shipping priority classification. "late" := shipped >30 days
-# after order date; group by l_returnflag (no l_shipmode in schema).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q12",
+# q12 (adapted): shipping priority classification.  "late" := shipped >30
+# days after the order date; grouped by l_returnflag (no l_shipmode).
+# ``l_shipdate < ship_end`` and ``l_shipdate >= o_orderdate + lag`` imply
+# ``o_orderdate < ship_end - lag`` (1997-12-02): a bound derived from the
+# query itself, so it holds on any data; written against the column it
+# reaches the orders scan as a pushed filter (and prunes a date-partitioned
+# orders at scale).  The priority class is a boolean before the join, so
+# the orders leg carries three narrow columns.  The join strategy is left
+# to size: a broadcast while that leg's estimate is under the threshold
+# (sf0.1 and sf1), a shuffle join beyond it.
+_tpch(
+    "tpch_q12", ("case", "join"),
     oracle="""
     SELECT l_returnflag,
            CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -634,50 +533,35 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY l_returnflag
     """,
-    tags=("tpch", "case", "join"),
+    final="""
+    SELECT l_returnflag,
+           SUM(CASE WHEN high THEN 1 ELSE 0 END) AS high_line_count,
+           SUM(CASE WHEN NOT high THEN 1 ELSE 0 END) AS low_line_count
+    FROM lineitem
+    JOIN (SELECT o_orderkey, o_orderdate,
+                 o_orderpriority IN ('1-URGENT', '2-HIGH') AS high
+          FROM orders
+          WHERE o_orderdate < TIMESTAMP '1998-01-01 00:00:00' - INTERVAL 30 DAY
+         ) o ON o_orderkey = l_orderkey
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+      AND l_shipdate >= o_orderdate + INTERVAL 30 DAY
+    GROUP BY l_returnflag
+    """,
 )
-def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``l_shipdate < ship_end`` and ``l_shipdate >= o_orderdate + lag``
-    imply ``o_orderdate < ship_end - lag`` (1997-12-02): a bound derived
-    from the query itself, so it holds on any data.  Written against the
-    column it reaches the orders scan as a pushed filter (and prunes a
-    date-partitioned orders at scale).  The priority class is reduced to a
-    boolean before the join, so the orders leg carries three narrow
-    columns.  The join strategy is left to size: a broadcast while that
-    leg's estimate is under the broadcast threshold (sf0.1 and sf1), a
-    shuffle join beyond it."""
-    ship_end = _ts("1998-01-01")
-    lag = F.expr("INTERVAL 30 DAYS")
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < ship_end - lag)
-        .select(
-            "o_orderkey",
-            "o_orderdate",
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("high"),
-        )
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1997-01-01")) & (F.col("l_shipdate") < ship_end)
-    )
-    high = F.col("high")
-    return (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate") + lag)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
 
-
-# ---------------------------------------------------------------------------
 # q13: customer order-count distribution — left outer join with a join-side
-# filter, double aggregation.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q13",
+# filter, double aggregation.  Orders are counted per customer key BEFORE
+# the join, so the join side is at most one row per key.  SHUFFLE_HASH
+# keeps that fact-derived side from being broadcast: both inputs
+# hash-partition on the customer key, and at scale each partition's build
+# side is at most customers / partitions rows.  The per-customer merge after
+# the join is required, not redundant: a duplicate or NULL ``c_custkey``
+# yields several join rows for one group, which the original query counts
+# as one customer.  The join output is already partitioned on
+# ``c_custkey``, so that merge adds no exchange.
+_tpch(
+    "tpch_q13", ("outer-join", "aggregate"),
     oracle="""
     SELECT c_count, COUNT(*) AS custdist
     FROM (
@@ -688,39 +572,26 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) c_orders
     GROUP BY c_count
     """,
-    tags=("tpch", "outer-join", "aggregate"),
+    final="""
+    SELECT c_count, COUNT(*) AS custdist
+    FROM (
+      SELECT /*+ SHUFFLE_HASH(counts) */
+             c_custkey, SUM(COALESCE(n, 0)) AS c_count
+      FROM customer
+      LEFT JOIN (SELECT o_custkey, COUNT(o_orderkey) AS n
+                 FROM orders WHERE o_orderpriority <> '5-LOW'
+                 GROUP BY o_custkey) counts
+        ON c_custkey = o_custkey
+      GROUP BY c_custkey
+    ) c_orders
+    GROUP BY c_count
+    """,
 )
-def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders are counted per customer key BEFORE the join, so the join
-    side is at most one row per key.  The ``shuffle_hash`` hint keeps that
-    fact-derived side from being broadcast: both inputs hash-partition on
-    the customer key, and at scale each partition's build side is at most
-    customers / partitions rows.  The per-customer merge after the join is
-    required, not redundant: a duplicate or NULL ``c_custkey`` yields
-    several join rows for one group, which the original query counts as
-    one customer.  The join output is already partitioned on
-    ``c_custkey``, so that merge adds no exchange."""
-    cust = _t(spark, sf_dir, "customer")
-    counts = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "5-LOW")
-        .groupBy("o_custkey")
-        .agg(F.count("o_orderkey").alias("n"))
-    )
-    return (
-        cust.join(counts.hint("shuffle_hash"), F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.sum(F.coalesce(F.col("n"), F.lit(0))).alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-    )
 
-
-# ---------------------------------------------------------------------------
-# q14: promotion effect — conditional agg over a fact/dim join.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q14",
+# q14: promotion effect — conditional agg over a fact/dim join (part
+# broadcast).
+_tpch(
+    "tpch_q14", ("case", "join"),
     oracle=f"""
     SELECT 100.0 * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
                                       THEN {SQL_REVENUE} ELSE 0 END
@@ -732,31 +603,14 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'
     """,
-    tags=("tpch", "case", "join"),
 )
-def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-09-01")) & (F.col("l_shipdate") < _ts("1996-10-01"))
-    )
-    part = _t(spark, sf_dir, "part")
-    rev = revenue_expr()
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")).agg(
-        (
-            F.lit(100.0)
-            * F.sum(promo.cast(DEC)).cast("double")
-            / F.sum(rev.cast(DEC)).cast("double")
-        ).alias("promo_revenue")
-    )
 
-
-# ---------------------------------------------------------------------------
-# q15: top supplier — CTE reused twice (revenue per supplier + its max);
-# Spark caches nothing here, but the exact decimal sum makes the equality
-# join against MAX deterministic.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q15",
+# q15: top supplier — the revenue CTE is read twice (per supplier and its
+# max); the exact decimal sum makes the equality join against MAX
+# deterministic.  The MAX is a one-row broadcast join side, not a scalar
+# subquery filter.
+_tpch(
+    "tpch_q15", ("cte", "subquery"),
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no, {sql_dsum(SQL_REVENUE, 'total_revenue')}
@@ -769,31 +623,27 @@ def q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier JOIN revenue ON s_suppkey = supplier_no
     WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     """,
-    tags=("tpch", "cte", "subquery"),
+    final=f"""
+    WITH revenue AS (
+      SELECT l_suppkey AS supplier_no, {sql_dsum(SQL_REVENUE, 'total_revenue')}
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
+      GROUP BY l_suppkey
+    )
+    SELECT /*+ BROADCAST(top) */ s_suppkey, s_name, total_revenue
+    FROM revenue
+    JOIN (SELECT MAX(total_revenue) AS max_revenue FROM revenue) top
+      ON total_revenue = max_revenue
+    JOIN supplier ON supplier_no = s_suppkey
+    """,
 )
-def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01")) & (F.col("l_shipdate") < _ts("1996-04-01"))
-    )
-    supp = _t(spark, sf_dir, "supplier")
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(revenue_expr(), "total_revenue")
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        revenue.join(F.broadcast(max_rev))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(supp, F.col("supplier_no") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
 
-
-# ---------------------------------------------------------------------------
 # q16 (adapted): parts/supplier relationship via lineitem; COUNT(DISTINCT)
-# plus a NOT IN subquery (anti join).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q16",
+# plus a NOT IN subquery, written as a plain (not null-aware) anti join with
+# a pushed isnotnull filter; equal to NOT IN while no s_suppkey is NULL.
+_tpch(
+    "tpch_q16", ("distinct", "anti-join"),
     oracle="""
     SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
     FROM part
@@ -803,30 +653,25 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     """,
-    tags=("tpch", "distinct", "anti-join"),
+    final="""
+    SELECT /*+ BROADCAST(part) */
+           p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
+    FROM lineitem
+    LEFT ANTI JOIN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) bad
+      ON l_suppkey = s_suppkey
+    JOIN part ON l_partkey = p_partkey
+    WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 10, 15, 20, 25)
+    GROUP BY p_brand, p_type, p_size
+    """,
 )
-def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & (F.col("p_size").isin(1, 5, 10, 15, 20, 25))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
-        li.join(bad_supp, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
 
-
-# ---------------------------------------------------------------------------
-# q17 (adapted): small-quantity-order revenue — correlated scalar subquery
-# (per-part avg quantity), decorrelated into an aggregate+join, exactly what
-# Catalyst/DataFusion's optimizer does (reference:
-# datafusion/optimizer/src/scalar_subquery_to_join.rs).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q17",
+# q17 (adapted): small-quantity-order revenue — Catalyst decorrelates the
+# correlated scalar subquery (per-part average quantity) into an aggregate
+# + broadcast join, as DataFusion's optimizer does (reference:
+# datafusion/optimizer/src/scalar_subquery_to_join.rs).  Quantities are
+# integer-valued doubles, so the average is exact and order-insensitive.
+_tpch(
+    "tpch_q17", ("subquery",),
     oracle="""
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / 7.0
            AS avg_yearly
@@ -837,28 +682,19 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 0.2 * AVG(l_quantity) FROM lineitem l2
         WHERE l2.l_partkey = p_partkey)
     """,
-    tags=("tpch", "subquery"),
 )
-def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter((F.col("p_brand") == "Brand#3") & (F.col("p_size") < 10))
-    # quantities are integer-valued doubles → avg is exact & order-insensitive
-    part_avg = li.groupBy(F.col("l_partkey").alias("pa_partkey")).agg(
-        (F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold")
-    )
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(part_avg, F.col("l_partkey") == F.col("pa_partkey"))
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg((F.sum(F.col("l_extendedprice").cast(DEC)).cast("double") / F.lit(7.0)).alias("avg_yearly"))
-    )
 
-
-# ---------------------------------------------------------------------------
-# q18: large volume customers — IN subquery over a grouped HAVING.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q18",
+# q18: large volume customers — IN subquery over a grouped HAVING.  One
+# lineitem pass, not two: the HAVING subquery's per-order SUM(qty) IS the
+# output aggregate, so aggregate once, keep > 300, and join the tiny
+# survivor set to orders and customer — both joins broadcast the small
+# side, so lineitem is read and shuffled once and orders/customer never
+# shuffle (the naive IN form costs a second lineitem scan and a
+# re-aggregation; measured ~2x slower at sf0.1).  l_quantity is
+# integer-valued (1..50), so a BIGINT sum is exact and stays on the
+# vectorized hash-agg path.
+_tpch(
+    "tpch_q18", ("semi-join", "having", "topk"),
     oracle="""
     SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
            CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
@@ -872,46 +708,25 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
     LIMIT 100
     """,
-    tags=("tpch", "semi-join", "having", "topk"),
+    final="""
+    SELECT /*+ BROADCAST(big) */
+           c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
+    FROM orders
+    JOIN (SELECT l_orderkey, CAST(qlong AS DOUBLE) AS sum_qty
+          FROM (SELECT l_orderkey, SUM(CAST(l_quantity AS BIGINT)) AS qlong
+                FROM lineitem GROUP BY l_orderkey)
+          WHERE qlong > 300) big
+      ON o_orderkey = l_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
+    LIMIT 100
+    """,
 )
-def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One lineitem pass, not two: the HAVING subquery's per-order SUM(qty)
-    # IS the query's output aggregate, so aggregate once, filter >300
-    # (exact decimal compare), and join the tiny survivor set to orders
-    # and customer — both joins broadcast the small side, so lineitem is
-    # read+shuffled exactly once and orders/customer never shuffle.
-    # (The naive IN-subquery form costs a second full lineitem scan and a
-    # re-aggregation after the join; measured ~2x slower at sf0.1.)
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    # l_quantity is integer-valued (TPC-H spec: 1..50) → a long sum is
-    # exact AND stays on the vectorized hash-agg fast path (wide decimal
-    # buffers fall off it; see helpers.units6).
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("qlong"))
-        .filter(F.col("qlong") > 300)
-        .select("l_orderkey", F.col("qlong").cast("double").alias("sum_qty"))
-    )
-    return (
-        orders.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice",
-            "sum_qty",
-        )
-        .orderBy(F.col("o_totalprice").desc(), "o_orderdate", "o_orderkey")
-        .limit(100)
-    )
 
-
-# ---------------------------------------------------------------------------
 # q19 (adapted): discounted revenue — OR-of-ANDs predicate across the join
-# (p_container/l_shipmode → p_size bands).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q19",
+# (p_container/l_shipmode → p_size bands); part broadcast.
+_tpch(
+    "tpch_q19", ("predicate",),
     oracle=f"""
     SELECT {sql_dsum(SQL_REVENUE, 'revenue')}
     FROM lineitem
@@ -923,41 +738,12 @@ def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 20 AND 30)
     """,
-    tags=("tpch", "predicate"),
 )
-def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(cond)
-        .agg(dsum(revenue_expr(), "revenue"))
-    )
 
-
-# ---------------------------------------------------------------------------
 # q20 (adapted): potential part promotion — nested IN subqueries become a
 # chain of semi joins on aggregated thresholds.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q20",
+_tpch(
+    "tpch_q20", ("semi-join", "having"),
     oracle="""
     SELECT s_name, s_acctbal
     FROM supplier
@@ -973,36 +759,42 @@ def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_suppkey
         HAVING SUM(l_quantity) > 50)
     """,
-    tags=("tpch", "semi-join", "having"),
+    final="""
+    SELECT /*+ BROADCAST(nation) */ s_name, s_acctbal
+    FROM supplier
+    JOIN nation ON s_nationkey = n_nationkey
+    LEFT SEMI JOIN (
+      SELECT /*+ BROADCAST(part) */ l_suppkey
+      FROM lineitem
+      JOIN part ON l_partkey = p_partkey
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        AND p_type = 'PROMO'
+      GROUP BY l_suppkey
+      HAVING SUM(l_quantity) > 50
+    ) promo_supp ON s_suppkey = l_suppkey
+    WHERE n_name = 'NATION_7'
+    """,
 )
-def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01")) & (F.col("l_shipdate") < _ts("1997-01-01"))
-    )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    promo_supp = (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 50)
-        .select("l_suppkey")
-    )
-    return (
-        supp.join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(promo_supp, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .select("s_name", "s_acctbal")
-    )
 
-
-# ---------------------------------------------------------------------------
 # q21 (adapted): suppliers who kept orders waiting — EXISTS + NOT EXISTS
-# (semi + anti join with non-equi residuals). "waiting" := shipped >60 days
-# after order date and no other supplier on the order shipped later.
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q21",
+# (semi + anti join with non-equi residuals).  "waiting" := shipped >60
+# days after the order date and no other supplier on the order shipped
+# later.  As in DataFusion, EXISTS/NOT EXISTS become hash semi/anti joins
+# on l_orderkey (physical-plan/src/joins/), with two scale-minded choices:
+#   - the NATION_4 supplier filter broadcasts into l1 BEFORE the big joins,
+#     so only ~1/25 of lineitem reaches the orderkey shuffles;
+#   - MERGE on orders, l2 and l3: Spark's size estimates of those narrow
+#     projections sit under the broadcast threshold, so without the hint
+#     the semi/anti builds BROADCAST the fact side (3.0x/decade at sf1,
+#     unrunnable at 100 TB).  Hinted, all three joins co-shuffle on
+#     l_orderkey (one partitioning reused across the chain) and spill
+#     gracefully; measured 4.45 s -> 3.46 s at sf1.
+# (A decorrelated one-pass variant — per (order, supp) max shipdate plus
+# per-order top-2 stats — measured 2-3x slower at sf0.01 and sf0.1: two
+# wide aggregations cost more than three narrow co-keyed hash joins.)
+_tpch(
+    "tpch_q21", ("semi-join", "anti-join"),
     oracle="""
     SELECT s_name, COUNT(*) AS numwait
     FROM supplier
@@ -1023,79 +815,37 @@ def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
-    tags=("tpch", "semi-join", "anti-join"),
+    final="""
+    SELECT /*+ MERGE(orders, l2, l3) */ s_name, COUNT(*) AS numwait
+    FROM (
+      SELECT /*+ BROADCAST(s_nat) */ lineitem.*, s_name
+      FROM lineitem
+      JOIN (SELECT /*+ BROADCAST(nation) */ s_suppkey, s_name
+            FROM supplier JOIN nation ON s_nationkey = n_nationkey
+            WHERE n_name = 'NATION_4') s_nat
+        ON l_suppkey = s_suppkey
+    ) l1
+    JOIN orders ON l1.l_orderkey = o_orderkey
+    LEFT SEMI JOIN (SELECT l_orderkey AS l2_orderkey, l_suppkey AS l2_suppkey
+                    FROM lineitem) l2
+      ON l2_orderkey = l1.l_orderkey AND l2_suppkey <> l1.l_suppkey
+    LEFT ANTI JOIN (SELECT l_orderkey AS l3_orderkey, l_suppkey AS l3_suppkey,
+                           l_shipdate AS l3_shipdate FROM lineitem) l3
+      ON l3_orderkey = l1.l_orderkey AND l3_suppkey <> l1.l_suppkey
+     AND l3_shipdate > l1.l_shipdate
+    WHERE o_orderstatus = 'F' AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
+    GROUP BY s_name
+    ORDER BY numwait DESC, s_name
+    LIMIT 100
+    """,
 )
-def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Physical strategy mirrors DataFusion's: EXISTS/NOT EXISTS become
-    # hash semi/anti joins on l_orderkey (physical-plan/src/joins/).  Two
-    # scale-minded choices beyond the naive form:
-    #   - the NATION_4 supplier filter broadcasts into l1 BEFORE the big
-    #     joins, so only ~1/25 of lineitem reaches the orderkey shuffles;
-    #   - l2/l3 project to 2-3 columns pre-shuffle, so the two extra
-    #     lineitem passes move narrow rows only.
-    # (A decorrelated one-pass variant — groupBy (order,supp) max shipdate
-    # + per-order top-2 stats — was measured 2-3x slower end-to-end at
-    # both sf0.01 and sf0.1: two wide aggregations cost more than three
-    # narrow co-keyed hash joins.  Revisit on a real cluster if the fact
-    # shuffle dominates.)
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_4")
-    # merge hints on orders/l2/l3: Spark's size estimates of the narrow
-    # lineitem projections (and half-of-orders) sit under the broadcast
-    # threshold, so without them the semi/anti builds BROADCAST the fact
-    # side — linear-growing hash relations (3.0x/decade at sf1, unrunnable
-    # at 100 TB).  Hinted, all three joins co-shuffle on l_orderkey (one
-    # partitioning reused across the chain) and spill gracefully; measured
-    # 4.45s -> 3.46s at sf1.  The s_nat dimension broadcast stays.
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey", "o_orderdate").hint("merge")
-    li = _t(spark, sf_dir, "lineitem")
 
-    s_nat = supp.join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-    l1 = li.join(
-        F.broadcast(s_nat.select("s_suppkey", "s_name")),
-        li.l_suppkey == F.col("s_suppkey"),
-    ).alias("l1")
-    l2 = li.select(
-        F.col("l_orderkey").alias("l2_orderkey"), F.col("l_suppkey").alias("l2_suppkey")
-    ).hint("merge")
-    l3 = li.select(
-        F.col("l_orderkey").alias("l3_orderkey"),
-        F.col("l_suppkey").alias("l3_suppkey"),
-        F.col("l_shipdate").alias("l3_shipdate"),
-    ).hint("merge")
-    waiting = (
-        l1.join(orders, F.col("l1.l_orderkey") == F.col("o_orderkey"))
-        .filter(F.col("l1.l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .join(
-            l2,
-            (F.col("l2_orderkey") == F.col("l1.l_orderkey"))
-            & (F.col("l2_suppkey") != F.col("l1.l_suppkey")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l3_orderkey") == F.col("l1.l_orderkey"))
-            & (F.col("l3_suppkey") != F.col("l1.l_suppkey"))
-            & (F.col("l3_shipdate") > F.col("l1.l_shipdate")),
-            "left_anti",
-        )
-    )
-    return (
-        waiting.groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(100)
-    )
-
-
-# ---------------------------------------------------------------------------
 # q22 (adapted): global sales opportunity — NOT EXISTS anti join + scalar
-# subquery threshold. cntrycode := c_nationkey % 7 (no c_phone in schema).
-# ---------------------------------------------------------------------------
-@query(
-    "tpch_q22",
+# subquery threshold.  cntrycode := c_nationkey % 7 (no c_phone in schema).
+# The threshold is a one-row broadcast nested-loop join side, not a scalar
+# subquery filter.
+_tpch(
+    "tpch_q22", ("anti-join", "subquery"),
     oracle="""
     WITH pool AS (
       SELECT CAST(c_nationkey % 7 AS BIGINT) AS cntrycode, c_acctbal, c_custkey
@@ -1112,35 +862,21 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
                       AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
     GROUP BY cntrycode
     """,
-    tags=("tpch", "anti-join", "subquery"),
+    final="""
+    WITH pool AS (
+      SELECT CAST(c_nationkey % 7 AS BIGINT) AS cntrycode, c_acctbal, c_custkey
+      FROM customer
+      WHERE c_nationkey % 7 IN (0, 1, 2, 3)
+    )
+    SELECT /*+ BROADCAST(bal) */ cntrycode, COUNT(*) AS numcust,
+           CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
+    FROM pool
+    JOIN (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE)
+                 / COUNT(c_acctbal) AS avg_bal
+          FROM pool WHERE c_acctbal > 0.0) bal
+      ON c_acctbal > avg_bal
+    LEFT ANTI JOIN orders
+      ON c_custkey = o_custkey AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'
+    GROUP BY cntrycode
+    """,
 )
-def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter((F.col("c_nationkey") % 7).isin(0, 1, 2, 3))
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= _ts("2000-01-01"))
-        .select("o_custkey")
-    )
-    pool = cust.select(
-        (F.col("c_nationkey") % 7).cast("long").alias("cntrycode"),
-        "c_acctbal",
-        "c_custkey",
-    )
-    avg_bal = (
-        pool.filter(F.col("c_acctbal") > 0.0)
-        .agg(
-            (F.sum(F.col("c_acctbal").cast(DEC)).cast("double") / F.count("c_acctbal")).alias(
-                "avg_bal"
-            )
-        )
-    )
-    return (
-        pool.join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("cntrycode")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias("totacctbal"),
-        )
-    )

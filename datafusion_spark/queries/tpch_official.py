@@ -41,7 +41,7 @@ import os
 from datafusion_spark.catalog import (
     note_view_shadows, register_views, repo_root, view_state,
 )
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import Plan, query
 
 # Deterministic partsupp derivation — identical SQL text for both engines.
 # availqty in 1000..9999, supplycost in 1.00..1000.00 (2-dp, exact in
@@ -519,13 +519,17 @@ _EXT_VIEWS = {
 
 
 def _register_official(name: str, sql: str, doc: str,
-                       exts: tuple[str, ...], lineitem_ext: bool = False) -> None:
-    def fn(spark, sf_dir, _sql=sql, _exts=exts, _lx=lineitem_ext):
+                       exts: tuple[str, ...], lineitem_ext: bool = False,
+                       final: str | None = None) -> None:
+    """Register ``name`` over the overlays ``exts``: the entry runs
+    ``final`` (default ``sql``, the verbatim text); ``fn.plan`` holds both."""
+    def fn(spark, sf_dir, _exts=exts, _lx=lineitem_ext):
         _install(spark, sf_dir, lineitem_ext=_lx, exts=_exts)
-        return spark.sql(_sql)
+        return spark.sql(fn.plan.final)
 
     fn.__name__ = name
     fn.__doc__ = doc
+    fn.plan = Plan((), final or sql, sql)
     ctes = [
         f"{v} AS ({_EXT_VIEWS[v][0].replace(f'FROM {v}', f'FROM main.{v}')})"
         for v in exts
@@ -625,10 +629,29 @@ _register_official(
     doc="""Official TPC-H q13 (reference benchmarks/queries/q13.sql) on the
     derived o_comment: the verbatim NOT-LIKE join-side filter (two of the
     eight comment templates match '%special%requests%'), left outer join
-    preserving order-less customers, double grouping.  The LIKE filter is
-    evaluated on the probe side before the join build — no extra
-    shuffle.""",
+    preserving order-less customers, double grouping.  It runs in the
+    tpch_q13 shape: orders are counted per o_custkey (filter applied)
+    BEFORE the join, and SHUFFLE_HASH keeps that fact-derived side from
+    being broadcast — both sides hash-partition on the customer key.  The
+    per-customer merge stays: a duplicate or NULL c_custkey gives several
+    join rows for one group.""",
     exts=("orders",),
+    final="""
+    SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
+    FROM (
+      SELECT /*+ SHUFFLE_HASH(counts) */
+             c_custkey, CAST(SUM(COALESCE(n, 0)) AS BIGINT) AS c_count
+      FROM customer
+      LEFT OUTER JOIN (SELECT o_custkey, COUNT(o_orderkey) AS n
+                       FROM orders
+                       WHERE o_comment NOT LIKE '%special%requests%'
+                       GROUP BY o_custkey) counts
+        ON c_custkey = o_custkey
+      GROUP BY c_custkey
+    ) c_orders
+    GROUP BY c_count
+    ORDER BY custdist DESC, c_count DESC
+    """,
 )
 
 # q14: promotion effect (reference q14.sql) on the derived official p_type.

@@ -1,5 +1,6 @@
 """Property tests (hypothesis) for the exact-accumulation helpers — the
-correctness core of the money-aggregate fast path (helpers.units6)."""
+correctness core of the money-aggregate fast path (the SQL-text kernels
+helpers.sql_units6 and helpers.sql_sum_limbs)."""
 
 from __future__ import annotations
 
@@ -10,8 +11,8 @@ from hypothesis import strategies as st
 
 
 def _units6_py(v: float) -> int:
-    """Python mirror of F.rint(v * 1e6) (rint = round-half-even on the
-    double product)."""
+    """Python mirror of helpers.sql_units6, ``rint(v * 1e6)`` (rint =
+    round-half-even on the double product)."""
     import math
 
     x = v * 1000000.0
@@ -62,30 +63,30 @@ def test_units6_exact_on_revenue_products(a, b):
 @given(st.integers(min_value=-(2**63), max_value=2**63 - 1))
 @settings(max_examples=2000, deadline=None)
 def test_limbs_recompose_every_long(u):
-    """sum_limbs' split: arithmetic shift (floor) and low-bit mask give
+    """sql_sum_limbs' split: arithmetic shift (floor) and low-bit mask give
     limbs that recompose to u for every int64, negative ones included."""
     assert (u >> 20) * 2**20 + (u & (2**20 - 1)) == u
 
 
 def _limb_sums_match_decimal(spark, units):
-    """Sum ``units`` (1e-6 money units) through sum_limbs(units6(v)) in one
-    groupBy and compare with the exact Decimal sum, per group."""
-    import pyspark.sql.functions as F
-
-    from datafusion_spark.queries.helpers import sum_limbs, units6
+    """Sum ``units`` (1e-6 money units) through the SQL kernels
+    sql_sum_limbs(sql_units6(v)) in one GROUP BY and compare with the exact
+    Decimal sum, per group."""
+    from datafusion_spark.queries.helpers import sql_sum_limbs, sql_units6
 
     rows = [(i % 3, u / 1000000) for i, u in enumerate(units)]
     df = spark.createDataFrame(rows, "g int, v double").repartition(4)
+    df.createOrReplaceTempView("limb_values")
     got = {
         r.g: r.s
-        for r in df.groupBy("g").agg(sum_limbs(units6(F.col("v"))).alias("s")).collect()
+        for r in spark.sql(f"SELECT g, {sql_sum_limbs(sql_units6('v'))} AS s "
+                           "FROM limb_values GROUP BY g").collect()
     }
     want = {
         g: float(sum(Decimal(u) for i, u in enumerate(units) if i % 3 == g) / 10**6)
         for g in range(3)
     }
     assert got == want
-    return df
 
 
 def test_limb_sum_exact_past_long_range(spark):
@@ -93,16 +94,15 @@ def test_limb_sum_exact_past_long_range(spark):
     plain long sum raises, the limb sum equals the Decimal sum."""
     import random
 
-    import pyspark.sql.functions as F
     import pytest
 
-    from datafusion_spark.queries.helpers import units6
+    from datafusion_spark.queries.helpers import sql_units6
 
     rng = random.Random(11)
     units = [4 * 10**15 + rng.randrange(10**12) for _ in range(3000)]
-    df = _limb_sums_match_decimal(spark, units)
+    _limb_sums_match_decimal(spark, units)
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
-        df.agg(F.sum(units6(F.col("v")))).collect()
+        spark.sql(f"SELECT SUM({sql_units6('v')}) FROM limb_values").collect()
 
 
 def test_limb_sum_exact_mixed_signs(spark):

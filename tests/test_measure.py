@@ -6,15 +6,15 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_SMALL
-from tools.measure import (cpu_kernel, floor_kernel, io_kernel,
-                           measure_entry, timed_run)
+from tools.measure import (cpu_kernel, floor_kernel, gateway_commands,
+                           io_kernel, measure_entry, timed_run)
 
 
 def test_build_plus_exec_is_the_run_wall(spark):
     for i in range(3):
         s = timed_run(spark, "tpch_q1", SF_SMALL, "collect", f"wall-{i}")
         wall = s["end"] - s["start"]
-        assert s["build_s"] > 0 and s["exec_s"] > 0
+        assert s["build_s"] > 0 and s["exec_s"] > 0 and s["build_calls"] > 0
         assert s["build_s"] + s["exec_s"] == pytest.approx(wall, rel=0.05)
 
 
@@ -48,3 +48,21 @@ def test_kernels_return_positive_seconds(spark, tmp_path):
     assert floor_kernel(spark, runs_n=1) > 0
     assert cpu_kernel(spark, runs_n=1) > 0
     assert io_kernel(spark, str(tmp_path / "io"), runs_n=1) > 0
+
+
+def test_tpch_builds_send_few_gateway_commands(spark):
+    """Every tpch_* entry builds as one spark.sql statement over cached
+    views: at most 10 Py4J commands per warm build (7 measured).  The
+    Column-API spelling sent 64-280 per build, so a regression to it fails
+    here as a number."""
+    from datafusion_spark.queries import QUERIES
+
+    names = [n for n in QUERIES if n.startswith("tpch_")]
+    assert len(names) >= 22
+    calls = {}
+    for name in names:
+        QUERIES[name](spark, SF_SMALL)  # registers the views it reads
+        with gateway_commands() as sent:
+            QUERIES[name](spark, SF_SMALL)
+        calls[name] = sent[0]
+    assert max(calls.values()) <= 10, calls

@@ -554,6 +554,36 @@ def test_view_state_cache_transitions(spark):
     catalog.register_views(spark, SF_SMALL)
     assert catalog.view_state(spark) == (SF_SMALL, frozenset())
 
+    # an overlay outside TABLES (partsupp) outlives a plain registration of
+    # another sf_dir: the state must not pass it off as that sf_dir's
+    q2 = QUERIES["tpch_official_q2"]
+    q2(spark, SF_ORACLE).collect()
+    assert catalog.view_state(spark) == (SF_ORACLE, frozenset({"partsupp"}))
+    catalog.register_views(spark, SF_SMALL)
+    assert catalog.view_state(spark) is None
+    got = q2(spark, SF_SMALL).collect()
+    catalog.invalidate_views(spark)
+    assert got == q2(spark, SF_SMALL).collect()
+
+
+def test_tpch_entries_register_every_view_they_read(spark):
+    """Each tpch_* entry registers the views its text reads itself: with no
+    base view left in the session, a table the entry misses fails with
+    TABLE_OR_VIEW_NOT_FOUND instead of reading another entry's view."""
+    from datafusion_spark import catalog
+    from datafusion_spark.queries import QUERIES
+    from tests.conftest import SF_SMALL
+
+    try:
+        for name in [n for n in QUERIES if n.startswith("tpch_q")]:
+            for table in catalog.TABLES:
+                spark.catalog.dropTempView(table)
+            catalog.invalidate_views(spark)
+            QUERIES[name](spark, SF_SMALL).collect()
+    finally:
+        catalog.invalidate_views(spark)
+        catalog.register_views(spark, SF_SMALL)
+
 
 def test_bm25_index_serve_matches_per_query_scoring(spark):
     """The persisted-index serving path must score identically to the

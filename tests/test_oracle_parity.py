@@ -124,6 +124,19 @@ DEGENERATE = {
             _order(15, 99, "1-URGENT"), _order(16, None, "2-HIGH"),
         ],
     },
+    # The official q13 over the derived o_comment: order keys 7, 8 and 15
+    # carry comments matching '%special%requests%' (not counted), the rest
+    # do not.  Duplicate and NULL c_custkey, an order with a NULL o_custkey
+    # and one of an unknown customer, as for tpch_q13.
+    "tpch_official_q13": {
+        "customer": [_customer(k) for k in (1, 1, None, None, 2, 3, 4)],
+        "orders": [
+            _order(10, 1, "1-URGENT"), _order(7, 1, "1-URGENT"),
+            _order(11, 2, "2-HIGH"), _order(8, 2, "2-HIGH"),
+            _order(12, 2, "3-MEDIUM"), _order(13, 3, "1-URGENT"),
+            _order(14, 99, "1-URGENT"), _order(15, None, "2-HIGH"),
+        ],
+    },
     # l_shipdate < 1998-01-01 and l_shipdate >= o_orderdate + 30 days:
     # only orders dated before 1997-12-02 can qualify, and 1997-12-01
     # qualifies exactly (its 1997-12-31 line ships on day 30).
@@ -145,13 +158,17 @@ DEGENERATE = {
 
 
 @pytest.mark.parametrize("name", sorted(DEGENERATE))
-def test_degenerate_keys_match_oracle(spark, tmp_path, name):
+def test_degenerate_keys_match_oracle(spark, tmp_path, monkeypatch, name):
     """Boundary rows and degenerate join/group keys, written as parquet with
-    the schemas of the SF_SMALL tables, return what the oracle returns."""
+    the schemas of the SF_SMALL tables, return what the oracle returns.
+    Official-track overlays are derived under tmp_path, not the checkout."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from datafusion_spark.catalog import TABLES
+    from datafusion_spark.queries import tpch_official
+
+    monkeypatch.setattr(tpch_official, "repo_root", lambda: str(tmp_path))
 
     for t in TABLES:
         schema = pq.read_schema(f"{SF_SMALL}/{t}.parquet").remove_metadata()

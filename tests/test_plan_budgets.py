@@ -66,11 +66,11 @@ _BUDGETS = {
         h2o_window_partition_sweep join_sort_merge_hint text_char_entropy
         tpcds_q32 tpcds_q37 tpcds_q40 tpcds_q50 tpcds_q58 tpcds_q66 tpcds_q67
         tpcds_q82 tpcds_q83 tpcds_q85 tpcds_q92 tpcds_q93 tpcds_q97
-        tpch_official_q13 tpch_official_q22 tpch_q4
+        tpch_official_q22 tpch_q4
     """,
     4: """
         agg_topk_min_max_groups tpcds_q1 tpcds_q16 tpcds_q2 tpcds_q30
-        tpcds_q59 tpcds_q81 tpcds_q94 tpch_official_q4
+        tpcds_q59 tpcds_q81 tpcds_q94 tpch_official_q13 tpch_official_q4
     """,
     5: """
         h2o_window_global_ordered text_contamination_check text_global_shuffle

@@ -2,9 +2,10 @@
 
 Every timed run is a fresh build plus execution (a cached DataFrame would
 reuse its shuffle outputs): ``build_s`` is the ``QUERIES[name](spark, sf)``
-call, pre-statements included, and ``exec_s`` the sink.  Each entry reports
-the min over ``--runs``, so first-touch work (ANN/BM25 artifacts built on a
-new SF directory) drops out at ``--runs`` >= 2.  The floor, CPU and I/O
+call, pre-statements included, ``build_calls`` the Py4J gateway commands
+it sent, and ``exec_s`` the sink.  Each entry reports the min over
+``--runs``, so first-touch work (ANN/BM25 artifacts built on a new SF
+directory) drops out at ``--runs`` >= 2.  The floor, CPU and I/O
 kernels, which ``bench.py`` imports, bracket the invocation; the floor is
 re-sampled every 10 entries.  Progress to stderr, one JSON line to stdout.
 """
@@ -90,11 +91,37 @@ def confs_applied(spark, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+@contextlib.contextmanager
+def gateway_commands():
+    """Count the Py4J commands this process sends to the JVM inside the
+    block (``counter[0]``).  Memory-delete commands, which Python's garbage
+    collector sends for dropped JVM references at arbitrary times, are not
+    counted."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    counter = [0]
+
+    def counting(conn, command):
+        if not command.startswith(delete):
+            counter[0] += 1
+        return send(conn, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield counter
+    finally:
+        ClientServerConnection.send_command = send
+
+
 def timed_run(spark, name: str, sf: str, sink: str, group: str) -> dict:
     """One fresh build + sink of ``name``.  Its jobs run under job group
     ``group`` (set and cleared outside the timed window); ``start``/``end``
     are the run's epoch window in whole milliseconds, outward-rounded, so
-    the status store's millisecond times compare exactly."""
+    the status store's millisecond times compare exactly.  ``build_calls``
+    is the number of gateway commands the build sent."""
     from datafusion_spark.queries import QUERIES
 
     sc = spark.sparkContext
@@ -102,7 +129,8 @@ def timed_run(spark, name: str, sf: str, sink: str, group: str) -> dict:
     try:
         start = time.time()
         t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf)
+        with gateway_commands() as calls:
+            df = QUERIES[name](spark, sf)
         t1 = time.perf_counter()
         if sink == "noop":
             df.write.format("noop").mode("overwrite").save()
@@ -113,7 +141,8 @@ def timed_run(spark, name: str, sf: str, sink: str, group: str) -> dict:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return {"wall_s": round(t2 - t0, 4), "build_s": round(t1 - t0, 4),
-            "exec_s": round(t2 - t1, 4), "start": int(start * 1000) / 1000,
+            "exec_s": round(t2 - t1, 4), "build_calls": calls[0],
+            "start": int(start * 1000) / 1000,
             "end": -int(-end * 1000) / 1000}
 
 
@@ -180,7 +209,8 @@ def measure_entry(spark, name: str, sf: str, runs: int = 3,
                 samples[arm].append(timed_run(spark, name, sf, sink, groups[arm]))
     out = {}
     for arm, runs_ in samples.items():
-        out[arm] = {k: min(s[k] for s in runs_) for k in ("wall_s", "build_s", "exec_s")}
+        out[arm] = {k: min(s[k] for s in runs_)
+                    for k in ("wall_s", "build_s", "exec_s", "build_calls")}
         out[arm]["samples"] = runs_
         if stages:
             out[arm]["jobs"] = stage_records(spark, groups[arm])
@@ -269,7 +299,8 @@ def main() -> None:
                                minus_floor_s=round(max(0.0, rec["wall_s"] - floors[-1]), 4))
                     results.append(rec)
                     _log(f"{name:32s} {label:8s} {arm}: wall={rec['wall_s']:.3f}"
-                         f" build={rec['build_s']:.3f} exec={rec['exec_s']:.3f}"
+                         f" build={rec['build_s']:.3f} ({rec['build_calls']} calls)"
+                         f" exec={rec['exec_s']:.3f}"
                          f" floor={rec['floor_s']:.3f} walls="
                          f"{[s['wall_s'] for s in rec['samples']]}")
                     if args.stages:
