@@ -167,11 +167,21 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # projection over the scan — so ts predicates (window pruning, time
         # filters) reach the parquet reader as PushedFilters.  The previous
         # cast-based shim blocked pushdown on every events query, which at
-        # 100 TB means a full scan for any time-sliced query.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # 100 TB means a full scan for any time-sliced query.  The setting
+        # only steers schema inference, so it is restored after this read:
+        # left at false, it would give every table read later LTZ dates.
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(path)
+        key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            df = spark.read.parquet(path)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df

@@ -826,13 +826,11 @@ _tpch(
         ON l_suppkey = s_suppkey
     ) l1
     JOIN orders ON l1.l_orderkey = o_orderkey
-    LEFT SEMI JOIN (SELECT l_orderkey AS l2_orderkey, l_suppkey AS l2_suppkey
-                    FROM lineitem) l2
-      ON l2_orderkey = l1.l_orderkey AND l2_suppkey <> l1.l_suppkey
-    LEFT ANTI JOIN (SELECT l_orderkey AS l3_orderkey, l_suppkey AS l3_suppkey,
-                           l_shipdate AS l3_shipdate FROM lineitem) l3
-      ON l3_orderkey = l1.l_orderkey AND l3_suppkey <> l1.l_suppkey
-     AND l3_shipdate > l1.l_shipdate
+    LEFT SEMI JOIN lineitem l2
+      ON l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
+    LEFT ANTI JOIN lineitem l3
+      ON l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+     AND l3.l_shipdate > l1.l_shipdate
     WHERE o_orderstatus = 'F' AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
     GROUP BY s_name
     ORDER BY numwait DESC, s_name

@@ -705,6 +705,11 @@ def test_random_filter_grouping_sets_parity(spark, duck, spec):
 # operands fits DuckDB's int128 decimal comfortably — at (18,*)×(18,*)
 # DuckDB's multiply overflows where Spark widens, a storage-width
 # divergence this axis is NOT hunting (documented here instead).
+# Likewise above 38 digits: a product whose exact precision p1 + p2 + 1
+# exceeds 38 is cut by Spark's precision-loss rule to DECIMAL(38, s') with
+# s' = max(38 - integer digits, min(s, 6)), rounding HALF_UP, while DuckDB
+# keeps the exact scale.  The generator tracks precision as it tracks
+# scale and draws no such product; the fixed case below pins the rule.
 # (template, scale range, integer-digit need, max precision)
 _DEC_OPERANDS = [
     ("CAST(o_totalprice AS DECIMAL({p},{s}))", (2, 4), 7, 14),
@@ -717,26 +722,32 @@ _DEC_OPERANDS = [
 
 @st.composite
 def decimal_expr(draw, depth=0):
+    """(expression, scale, precision), the exact Spark result type."""
     if depth >= 2 or draw(st.booleans()):
         tmpl, (s_lo, s_hi), need, p_hi = draw(st.sampled_from(_DEC_OPERANDS))
         s = draw(st.integers(s_lo, s_hi))
         p = draw(st.integers(s + need, p_hi))
-        return tmpl.format(p=p, s=s), s
-    left, ls = draw(decimal_expr(depth=depth + 1))
-    right, rs = draw(decimal_expr(depth=depth + 1))
+        return tmpl.format(p=p, s=s), s, p
+    left, ls, lp = draw(decimal_expr(depth=depth + 1))
+    right, rs, rp = draw(decimal_expr(depth=depth + 1))
     op = draw(st.sampled_from(["+", "-", "*"]))
     scale = ls + rs if op == "*" else max(ls, rs)
-    if scale > 8:  # keep the normalizing cast exact (no rounding)
+    # keep the normalizing cast exact (no rounding) and the product inside
+    # 38 digits (no precision-loss rounding): the left factor is widened to
+    # p=24 below, so the product's precision is 24 + rp + 1
+    if scale > 8 or (op == "*" and 24 + rp + 1 > 38):
         op = draw(st.sampled_from(["+", "-"]))
         scale = max(ls, rs)
-    if op == "*":
-        # Divergence found by this axis, pinned here: DuckDB clamps a
-        # multiply's result width to the operands' STORAGE class —
-        # (12,4)×(13,3) → DECIMAL(18,7), overflowing at runtime where
-        # Spark widens to (26,7).  Pre-widening one operand to p=24
-        # forces DuckDB's int128 path; both engines are then exact.
-        left = f"CAST({left} AS DECIMAL(24,{ls}))"
-    return f"({left} {op} {right})", scale
+    if op != "*":
+        return (f"({left} {op} {right})", scale,
+                scale + max(lp - ls, rp - rs) + 1)
+    # Divergence found by this axis, pinned here: DuckDB clamps a
+    # multiply's result width to the operands' STORAGE class —
+    # (12,4)×(13,3) → DECIMAL(18,7), overflowing at runtime where
+    # Spark widens to (26,7).  Pre-widening one operand to p=24
+    # forces DuckDB's int128 path; both engines are then exact.
+    left = f"CAST({left} AS DECIMAL(24,{ls}))"
+    return f"({left} * {right})", scale, 24 + rp + 1
 
 
 @st.composite
@@ -753,7 +764,7 @@ def decimal_spec(draw):
 def test_random_decimal_precision_parity(spark, duck, exprs):
     cols = ", ".join(
         f"CAST(CAST({e} AS DECIMAL(38,10)) AS STRING) AS c{i}"
-        for i, (e, _) in enumerate(exprs)
+        for i, (e, _, _) in enumerate(exprs)
     )
     sql = (
         f"SELECT {cols} FROM orders WHERE o_orderkey % 17 = 4 "
@@ -763,6 +774,29 @@ def test_random_decimal_precision_parity(spark, duck, exprs):
     got = [tuple(r) for r in spark.sql(sql).collect()]
     want = [tuple(r) for r in duck.execute(duck_sql).fetchall()]
     assert got == want, f"{sql}\nfirst spark={got[:2]} duck={want[:2]}"
+
+
+def test_decimal_product_above_38_digits_loses_scale(spark, duck):
+    """The product the generator no longer draws (a saved failing example
+    of the axis above): (24,4) × (34,4) needs 59 digits, so Spark types it
+    DECIMAL(38,6) and rounds HALF_UP where DuckDB keeps scale 8.  Spark's
+    value is DuckDB's rounded to scale 6 (``round``: DuckDB's CAST to a
+    smaller scale truncates), and the two differ on some rows, so the
+    divergence stays covered."""
+    x = ("(CAST(CAST(o_totalprice AS DECIMAL(9,2)) AS DECIMAL(24,2))"
+         " * CAST(o_totalprice AS DECIMAL(9,2)))")
+    e = f"(CAST({x} AS DECIMAL(24,4)) * {x})"
+    rows = "FROM orders WHERE o_orderkey % 17 = 4 ORDER BY o_orderkey LIMIT 60"
+    assert spark.sql(f"SELECT {e} AS c FROM orders").dtypes == [
+        ("c", "decimal(38,6)")]
+    got = [r[0] for r in spark.sql(
+        f"SELECT CAST(CAST({e} AS DECIMAL(38,10)) AS STRING) {rows}").collect()]
+    rounded, exact = zip(*duck.execute(
+        f"SELECT CAST(CAST(round({e}, 6) AS DECIMAL(38,10))"
+        f" AS VARCHAR), CAST(CAST({e} AS DECIMAL(38,10)) AS VARCHAR) {rows}"
+    ).fetchall())
+    assert got == list(rounded)
+    assert list(rounded) != list(exact)
 
 
 # --- axis 11 (r7): join type x predicate placement (ON vs WHERE) -----------

@@ -527,14 +527,24 @@ def test_q72_inventory_leg_never_broadcasts_fact(spark):
     threshold while the real payload is fact-sized — the MERGE hint must
     keep the (item, week) join a shuffle join at every SF.  Uses the
     fact-broadcast audit (tools/broadcast_audit.py): no broadcast build
-    side may reach the lineitem scan without a cardinality reducer."""
+    side may reach a fact scan without a cardinality reducer.  The audit
+    must see the stored catalog_sales and catalog_returns scans, or it
+    would pass blind."""
     import os
     import sys
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.broadcast_audit import audit
+    from datafusion_spark.plans import plan_nodes
+    from tools.broadcast_audit import _FACT_SCAN, _scan_paths, audit
 
     df = QUERIES["tpcds_q72"](spark, SF_SMALL)
+    nodes = list(plan_nodes(df._jdf.queryExecution().sparkPlan()))
+    facts = {m.group(0).rsplit("/", 1)[1] for cls, n in nodes if "ScanExec" in cls
+             and (m := _FACT_SCAN.search(_scan_paths(n)))}
+    assert facts == {"catalog_sales", "catalog_returns"}, facts
+    week_joins = [cls for cls, n in nodes
+                  if "Join" in cls and "inv_item_sk" in n.toString().splitlines()[0]]
+    assert week_joins == ["SortMergeJoinExec"], week_joins
     hits = audit(df)
     assert not hits, f"q72 broadcasts a fact-derived side again: {hits}"
 

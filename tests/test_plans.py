@@ -4,6 +4,7 @@ that make the queries scale, checked structurally."""
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 from collections import Counter
@@ -13,7 +14,8 @@ from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
 from datafusion_spark.plans import operator_counts, pushed_filters, scan_columns
-from datafusion_spark.queries import QUERIES
+from datafusion_spark.queries import ORACLES, QUERIES
+from datafusion_spark.queries.registry import Plan
 from tests.conftest import SF_ORACLE, SF_SMALL
 from tools.capture_plans import load_manifest
 
@@ -36,6 +38,23 @@ def test_events_ts_filter_pushdown(spark):
         F.col("ts") >= "2024-01-02 00:00:00"
     )
     assert any("ts" in f for f in pushed_filters(ev)), pushed_filters(ev)
+
+
+def test_events_read_leaves_other_tables_types(spark):
+    """Reading events as LTZ turns NTZ inference off for that read only:
+    lineitem's dtypes in a session that read events first equal a fresh
+    session's, and events.ts keeps its LTZ type and pushed filters."""
+    from datafusion_spark.catalog import _read_table
+
+    fresh = _read_table(spark.newSession(), SF_SMALL, "lineitem").dtypes
+    assert "timestamp_ntz" in dict(fresh).values()
+    session = spark.newSession()
+    ev = _read_table(session, SF_SMALL, "events")
+    assert _read_table(session, SF_SMALL, "lineitem").dtypes == fresh
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    ev = ev.filter(F.col("ts") >= "2024-01-02 00:00:00")
+    assert any("ts" in f for f in pushed_filters(ev)), pushed_filters(ev)
+    assert ev.count() > 0
 
 
 def test_column_pruning(spark):
@@ -311,10 +330,12 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 
 
 def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
-    """The per-query pruned TPC-DS prelude (r12: the full 24-CTE derive cost
-    ~2 s of driver analysis PER EXECUTION) must (a) partition the original
-    derive text exactly, (b) keep every CTE a body references, and (c)
-    produce the same rows as the unpruned spelling."""
+    """The TPC-DS derive splits exactly into the 24 stored tables: (a) the
+    split reconstructs the derive text, (b) each table is a SELECT over
+    base tables only (no derive table reads another), so it can be written
+    by its own statement, (c) both preludes keep exactly the tables a body
+    references, and (d) each stored table holds its derive SELECT's rows
+    and the q3 entry returns the full-derive spelling's rows."""
     import re
 
     import datafusion_spark.queries.tpcds_exec as tx
@@ -325,23 +346,39 @@ def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
     orig = tx._SPARK_DERIVE[re.search(r"\bWITH\b", tx._SPARK_DERIVE).end():]
     norm = lambda s: re.sub(r"[\s,]+", "", s)
     assert norm(joined) == norm(orig)
-    assert len(tx._CTES) == 24
+    assert len(tx._CTES) == len(tx._STAR) == 24
+    assert tx._STAR_SOURCES == ("customer", "lineitem", "orders", "part")
 
-    # (b) pruning keeps referenced names (spot: q14's three channels + dims)
-    pruned = tx._pruned_prelude(" FROM store_sales, web_sales x, item i "
-                                "JOIN date_dim ON 1=1 ")
+    # (b) a table's SELECT names no derive table defined before it (its own
+    # name, as customer's does, reads the base table)
+    for i, (name, text) in enumerate(tx._CTES):
+        earlier = {n for n, _ in tx._CTES[:i]}
+        assert not tx._refs(text, tx._STAR) & earlier, name
+
+    # (c) pruning keeps referenced names (spot: q14's three channels + dims)
+    body = (" FROM store_sales, web_sales x, item i JOIN date_dim ON 1=1"
+            " LEFT JOIN store_returns ON 1=1 ")
+    pruned, star = tx._pruned_prelude(body), tx._star_prelude(body)
     for n in ("store_sales", "web_sales", "item", "date_dim"):
         assert f"{n} AS (" in pruned
-    assert "inventory AS (" not in pruned
+        assert f"{n} AS (SELECT * FROM tpcds_{n})" in star
+    assert "inventory AS (" not in pruned + star
+    # the returns tables are read through their hinted views
+    assert "store_returns AS (" in pruned and "store_returns" not in star
 
-    # (c) pruned and full spellings return identical rows (q3 at sf0.001)
-    body = QUERIES["tpcds_q3"].plan.final
-    body_tail = body[body.index("SELECT dt.d_year"):]
-    full_sql = (tx._SPARK_DERIVE + body_tail).replace("__SF__", SF_SMALL)
-    tx._ensure_views(spark, SF_SMALL)  # derive CTEs read the session views
-    got_pruned = [tuple(r) for r in QUERIES["tpcds_q3"](spark, SF_SMALL).collect()]
-    got_full = [tuple(r) for r in spark.sql(full_sql).collect()]
-    assert got_pruned == got_full
+    # (d) stored == derived, table by table, and q3 over the full derive
+    tx._ensure_star(spark, SF_SMALL)
+    for name, text in tx._CTES:
+        select = text[text.index("(") + 1:-1]
+        diff = spark.sql(f"(SELECT * FROM tpcds_{name} EXCEPT ALL {select})"
+                         f" UNION ALL ({select} EXCEPT ALL"
+                         f" SELECT * FROM tpcds_{name})")
+        assert diff.count() == 0, name
+    final = QUERIES["tpcds_q3"].plan.final
+    body_tail = final[final.index("SELECT dt.d_year"):]
+    got = [tuple(r) for r in QUERIES["tpcds_q3"](spark, SF_SMALL).collect()]
+    full = [tuple(r) for r in spark.sql(tx._SPARK_DERIVE + body_tail).collect()]
+    assert got == full
 
 
 def test_clickbench_hits_pruning_exact_and_equivalent(spark):
@@ -398,81 +435,101 @@ def test_clickbench_hits_pruning_exact_and_equivalent(spark):
 
 # Every entry whose executed statements differ from its oracle's Spark
 # spelling (pre-statements, or a final text != inline), derived from the
-# attached plans rather than listed by hand.
+# attached plans rather than listed by hand.  Every tpcds_* entry is one:
+# it runs over the stored star, its inline spelling derives the tables
+# inside the statement.
 _REWRITTEN = sorted(
     name for name, fn in QUERIES.items()
     if (p := getattr(fn, "plan", None)) and (p.pre or p.final != p.inline))
+_TPCDS = sorted(n for n in QUERIES if n.startswith("tpcds_q"))
+# the TPC-DS entries that carried per-query rewrites before the star was
+# stored; they keep their pin at SF_ORACLE too
+_TPCDS_AT_ORACLE_SF = """
+    tpcds_q4 tpcds_q11 tpcds_q14 tpcds_q49 tpcds_q51 tpcds_q64 tpcds_q67
+    tpcds_q74 tpcds_q78
+""".split()
 
 
 def test_rewritten_entries_derived():
-    assert len(_REWRITTEN) >= 9, _REWRITTEN
-    assert "tpcds_q78" in _REWRITTEN
+    assert set(_TPCDS) <= set(_REWRITTEN) and len(_TPCDS) == 103
+    assert set(_TPCDS_AT_ORACLE_SF) <= set(_TPCDS)
 
 
-@pytest.mark.parametrize("sf", [SF_SMALL, SF_ORACLE], ids=os.path.basename)
-@pytest.mark.parametrize("name", _REWRITTEN)
+@pytest.mark.parametrize("name,sf", [
+    (name, sf) for name in _REWRITTEN for sf in (SF_SMALL, SF_ORACLE)
+    if sf == SF_SMALL or name not in _TPCDS or name in _TPCDS_AT_ORACLE_SF
+], ids=lambda v: os.path.basename(v) if v.startswith("/") else v)
 def test_rewritten_rows_match_inline(spark, name, sf):
     """A rewritten entry returns exactly the rows of its inline spelling
-    (the text the DuckDB oracle's body runs as in Spark, no pushed
-    predicate, no materialization).  The entry runs first: it registers
-    the session views the inline text reads."""
+    (the text the DuckDB oracle's body runs as in Spark: for tpcds_*, the
+    body over the tables derived inside the statement, so stored ==
+    derived).  The entry runs first: it registers the session views the
+    inline text reads."""
     got = Counter(map(repr, QUERIES[name](spark, sf).collect()))
     inline = Counter(map(repr, spark.sql(QUERIES[name].plan.inline).collect()))
     assert got == inline
 
 
 def test_rewritten_plan_shapes():
-    """Structural pins on the attached plans: the executed statements
-    carry the pushed windows, materializations and the two-phase shape;
-    the inline spellings do not."""
+    """Every tpcds_* final is one-line alias CTEs over the stored tables
+    other than the returns tables, then the oracle's body verbatim; its
+    inline spelling is the same body under the derive prelude.  Neither
+    carries a pushed o_orderdate window.  Three entries differ where
+    measured faster at sf1: q14 writes a CTE first (its pre-statement is
+    the same text ending in ``SELECT * FROM cross_items``, and its final
+    reads it back), q64 reads store sales from 2000 on only (its bound
+    built by the derive's own date-key helper), and q67 runs its rollup in
+    two phases."""
     import re
 
     import datafusion_spark.queries.tpcds_exec as tx
 
-    plan = {n: QUERIES[n].plan for n in _REWRITTEN}
-    for name, p in plan.items():
-        if name.startswith("tpcds_"):
-            assert not re.search(r"o_orderdate (>=|BETWEEN)|SUM\(ps\)", p.inline)
-    # q4/q11/q74/q64: the heavy CTE is written once, with the o_orderdate
-    # window pushed below the fact base joins; the final only scans it
-    for name, cte in (("tpcds_q4", "year_total"), ("tpcds_q11", "year_total"),
-                      ("tpcds_q74", "year_total"), ("tpcds_q64", "cross_sales")):
-        ((view, mat),) = plan[name].pre
-        assert view == f"{cte}_{name}"
-        assert "o_orderdate >= DATE '2000-01-01'" in mat
-        assert tx._split_ctes(plan[name].final)[0] == [
-            (cte, f"{cte} AS (SELECT * FROM {view})")]
-    assert plan["tpcds_q64"].pre[0][1].endswith("WHERE syear IN (2000, 2000 + 1)")
-    # q14/q49/q78: one shared lineitem⋈orders pass, read by every channel
-    for name in ("tpcds_q14", "tpcds_q49", "tpcds_q78"):
-        view, mat = plan[name].pre[0]
-        assert view == f"shared_fact_{name}" and view in plan[name].final
-        assert mat.count("JOIN orders") == 1
-        assert "JOIN orders" not in plan[name].final
-        assert name == "tpcds_q78" or "l_linenumber" not in mat
-    # q14: cross_items is materialized too, so the 3-channel INTERSECT
-    # runs once in its pre-statement, never in the final
-    assert plan["tpcds_q14"].pre[1][0] == "cross_items_tpcds_q14"
-    assert "INTERSECT" in plan["tpcds_q14"].pre[1][1]
-    assert "INTERSECT" not in plan["tpcds_q14"].final
-    assert "cross_items AS (SELECT * FROM cross_items_tpcds_q14)" \
-        in plan["tpcds_q14"].final
-    # q67 two-phase rollup and q51 both-channel window push
-    q67 = plan["tpcds_q67"].final
-    assert "o_orderdate BETWEEN DATE '1996-01-01'" in q67
-    assert q67.count("GROUP BY ROLLUP") == 1 and "SUM(ps) AS sumsales" in q67
-    assert plan["tpcds_q51"].final.count(
-        "o_orderdate BETWEEN DATE '1996-01-01'") == 2
+    for name in _TPCDS:
+        plan = QUERIES[name].plan
+        body = ORACLES[name][len(tx._DUCK_DERIVE):]
+        prelude = tx._star_prelude(body)
+        aliases = re.findall(r"^(?:WITH |)(\w+) AS \(SELECT \* FROM tpcds_(\w+)\),?$",
+                             prelude.strip(), re.M)
+        assert aliases and all(a == b for a, b in aliases), name
+        assert len(aliases) == len(prelude.strip().splitlines()), name
+        assert {a for a, _ in aliases} == tx._refs(body, tx._STAR) - set(
+            tx._RETURNS), name
+        assert plan.inline == tx._pruned_prelude(body) + body, name
+        assert "o_orderdate" not in body, name
+        if name not in ("tpcds_q14", "tpcds_q64", "tpcds_q67"):
+            assert plan == Plan((), prelude + body, plan.inline), name
+    q64 = QUERIES["tpcds_q64"].plan
+    body = ORACLES["tpcds_q64"][len(tx._DUCK_DERIVE):]
+    assert q64 == Plan((), (tx._star_prelude(body) + body).replace(
+        "FROM tpcds_store_sales)", "FROM tpcds_store_sales WHERE ss_sold_date_sk"
+        " >= " + tx._date_sk("DATE '2000-01-01'") + ")"), q64.inline)
+    assert "datediff(DATE '2000-01-01', DATE '1992-01-01') + 2450000" in q64.final
+    assert tx._SPARK_DERIVE.count(tx._date_sk("CAST(o_orderdate AS DATE)")) == 8
+    q67 = QUERIES["tpcds_q67"].plan
+    body = ORACLES["tpcds_q67"][len(tx._DUCK_DERIVE):]
+    assert not q67.pre and q67.final.startswith(tx._star_prelude(body))
+    assert q67.final.count("GROUP BY ROLLUP") == 1 == body.count("GROUP BY")
+    assert "SUM(ps) AS sumsales" in q67.final and ") base" in q67.final
+    q14 = QUERIES["tpcds_q14"].plan
+    ((view, mat),) = q14.pre
+    assert view == "cross_items_tpcds_q14"
+    final = q14.final.replace(f"cross_items AS (SELECT * FROM {view})", "")
+    assert "INTERSECT" in mat and "INTERSECT" not in final
+    body = ORACLES["tpcds_q14"][len(tx._DUCK_DERIVE):]
+    stmt = body[body.index("\n    SELECT channel"):].lstrip()
+    assert mat == (tx._star_prelude(body) + body[:-len(stmt)]
+                   + " SELECT * FROM cross_items")
 
 
 def test_scratch_keeps_only_latest_invocation(spark):
-    """Re-invoking a materializing entry removes its previous scratch:
+    """Re-invoking the materializing entry removes its previous scratch:
     only the latest invocation's directories remain under the entry's
-    subdirectory."""
+    subdirectory.  Invoking entries never rewrites the stored star."""
     import datafusion_spark.queries.tpcds_exec as tx
 
-    name = "tpcds_q74"
+    name = "tpcds_q14"
     views = [v for v, _ in QUERIES[name].plan.pre]
+    star = tx._star_dir(SF_SMALL)
 
     def invoke():
         QUERIES[name](spark, SF_SMALL).collect()
@@ -481,37 +538,153 @@ def test_scratch_keeps_only_latest_invocation(spark):
         assert sorted(os.listdir(inv)) == views
         return inv
 
+    def listing():
+        root = os.path.dirname(star)
+        return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, files in os.walk(root) for f in files}
+
     first = invoke()
+    stored = listing()
+    assert sorted(os.listdir(star)) == sorted(tx._STAR)
+    assert not [d for d in os.listdir(os.path.dirname(star)) if ".tmp" in d]
     second = invoke()
     assert first != second and not os.path.exists(first)
+    QUERIES["tpcds_q74"](spark, SF_SMALL).collect()
+    assert listing() == stored
 
 
 def test_scratch_lazy_and_removed_at_exit(tmp_path):
-    """Importing the registry creates no scratch directory, and scratch
-    allocated through the runner's helper is gone once the process exits."""
+    """Importing the registry creates no star and no scratch directory, and
+    scratch allocated through the runner's helper is gone once the process
+    exits."""
+    import datafusion_spark.queries.tpcds_exec as tx
+
+    star = os.path.dirname(os.path.dirname(tx._star_dir(SF_SMALL)))
+
+    def listing():
+        return sorted(os.path.join(d, x) for d, dirs, files in os.walk(star)
+                      for x in dirs + files)
+
+    before = listing()
     code = (
         "import glob, os, tempfile\n"
         "from datafusion_spark.queries import tpcds_exec as tx\n"
         "mats = os.path.join(tempfile.gettempdir(), 'dfspark_tpcds_mat_*')\n"
         "assert not glob.glob(mats), glob.glob(mats)\n"
-        "open(os.path.join(tx._scratch('tpcds_q4'), 'part'), 'w').close()\n"
-        "assert glob.glob(mats + '/tpcds_q4/*/part')\n")
+        "open(os.path.join(tx._scratch('tpcds_q14'), 'part'), 'w').close()\n"
+        "assert glob.glob(mats + '/tpcds_q14/*/part')\n")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
                    env=dict(os.environ, TMPDIR=str(tmp_path)))
     assert not list(tmp_path.glob("dfspark_tpcds_mat_*"))
+    assert listing() == before
 
 
-def test_append_where_parenthesizes_top_level_or(spark):
-    """A pushed predicate conjoins to the whole original WHERE of its CTE:
-    ``WHERE (a OR b) AND (pred)``, never ``a OR (b AND pred)``."""
-    from datafusion_spark.queries.tpcds_exec import _append_where
+def test_star_key_follows_sources_and_derive(tmp_path, monkeypatch):
+    """The star's directory key changes with any source table's mtime_ns
+    and with the derive text, and with nothing else."""
+    import datafusion_spark.queries.tpcds_exec as tx
 
-    cte = "t AS (SELECT x FROM VALUES (1), (2), (3) v(x) WHERE x = 1 OR x = 3)"
-    out = _append_where(cte, "t", "x > 1")
-    assert "WHERE (x = 1 OR x = 3" in out and out.rstrip().endswith("AND (x > 1)\n)")
-    rows = spark.sql(f"WITH {out} SELECT x FROM t").collect()
-    assert [r.x for r in rows] == [3]
-    # no WHERE yet: the predicate becomes the WHERE
-    bare = _append_where("t AS (SELECT x FROM VALUES (1), (2) v(x))", "t", "x > 1")
-    assert [r.x for r in spark.sql(f"WITH {bare} SELECT x FROM t").collect()] == [2]
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    for t in tx._STAR_SOURCES + ("region",):
+        shutil.copy(os.path.join(SF_SMALL, f"{t}.parquet"), sf)
+    key = tx._star_dir(str(sf))
+    assert os.path.basename(os.path.dirname(key)) == "sf0.001"
+    assert tx._star_dir(str(sf)) == key
+    os.utime(sf / "region.parquet", ns=(1, 1))  # not a source: same key
+    assert tx._star_dir(str(sf)) == key
+    keys = {key}
+    for t in tx._STAR_SOURCES:
+        st = os.stat(sf / f"{t}.parquet")
+        os.utime(sf / f"{t}.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+        keys.add(tx._star_dir(str(sf)))
+    monkeypatch.setattr(tx, "_SPARK_DERIVE", tx._SPARK_DERIVE + " ")
+    keys.add(tx._star_dir(str(sf)))
+    assert len(keys) == len(tx._STAR_SOURCES) + 2
+
+
+def test_star_half_written_never_reused(spark, tmp_path, monkeypatch):
+    """A star whose build fails part-way leaves no directory behind that a
+    later call would read; the next call builds it whole, and builds it
+    again once the stored directory is deleted."""
+    import datafusion_spark.queries.tpcds_exec as tx
+
+    monkeypatch.setattr(tx, "repo_root", lambda: str(tmp_path))
+    good = tx._CTES[:2]
+    broken = good + [("bad", "bad AS (SELECT * FROM no_such_table)")]
+    monkeypatch.setattr(tx, "_CTES", broken)
+    monkeypatch.setattr(tx, "_STAR", tuple(n for n, _ in broken))
+    dest = tx._star_dir(SF_SMALL)
+    with pytest.raises(Exception, match="no_such_table"):
+        tx._ensure_star(spark, SF_SMALL)
+    assert os.listdir(os.path.dirname(dest)) == []
+    monkeypatch.setattr(tx, "_CTES", good)
+    monkeypatch.setattr(tx, "_STAR", tuple(n for n, _ in good))
+    tx._ensure_star(spark, SF_SMALL)
+    assert os.listdir(os.path.dirname(dest)) == [os.path.basename(dest)]
+    assert sorted(os.listdir(dest)) == sorted(n for n, _ in good)
+    name, text = good[1]
+    assert spark.table(f"tpcds_{name}").count() == spark.sql(
+        text[text.index("(") + 1:-1]).count()
+    # deleting the stored star makes the next call in this process rebuild it
+    shutil.rmtree(dest)
+    tx._ensure_star(spark, SF_SMALL)
+    assert sorted(os.listdir(dest)) == sorted(n for n, _ in good)
+
+
+def test_returns_views_never_broadcast(spark):
+    """The returns tables are read through views under their own names that
+    carry Spark's no-broadcast join hint: at SF_SMALL, where every table
+    fits under the broadcast threshold, q40's catalog_sales LEFT JOIN
+    catalog_returns is still a shuffle join.  The views are registered
+    again on every call, so a tpcds_* entry run after tpcds_planning's
+    empty same-named schemas still reads the stored rows."""
+    from datafusion_spark.plans import plan_nodes
+    from datafusion_spark.queries.tpcds_planning import register_tpcds_schema
+
+    df = QUERIES["tpcds_q40"](spark, SF_SMALL)
+    joins = [(cls, n.toString().splitlines()[0]) for cls, n in
+             plan_nodes(df._jdf.queryExecution().sparkPlan()) if "Join" in cls]
+    assert [cls for cls, line in joins if "cr_order_number" in line] == [
+        "SortMergeJoinExec"], joins
+    rows = Counter(map(repr, QUERIES["tpcds_q1"](spark, SF_SMALL).collect()))
+    assert rows
+    register_tpcds_schema(spark)
+    assert spark.table("store_returns").count() == 0
+    again = Counter(map(repr, QUERIES["tpcds_q1"](spark, SF_SMALL).collect()))
+    assert again == rows
+    assert spark.table("store_returns").count() == spark.table(
+        "tpcds_store_returns").count() > 0
+
+
+def test_tpch_customer_after_tpcds_matches_oracle(spark):
+    """The star's alias CTEs shadow the TPC-H names inside one statement
+    only: a tpch_* entry reading customer, run right after a tpcds_* entry
+    reading the TPC-DS customer at the same SF, returns its oracle's rows,
+    as in a fresh session."""
+    from tools.oracle_check import duck_connection, run_entry
+
+    con = duck_connection(SF_ORACLE)
+    try:
+        assert run_entry(spark, con, "tpcds_q84", SF_ORACLE)[0] == "pass"
+        status, detail = run_entry(spark, con, "tpch_q10", SF_ORACLE)
+    finally:
+        con.close()
+    assert status == "pass", detail
+
+
+def test_tpcds_entry_at_two_sfs_matches_oracle(spark):
+    """One process runs an entry at one SF, then at another: each run reads
+    its own SF's star and returns that SF's oracle rows."""
+    from tools.oracle_check import duck_connection, run_entry
+
+    for sf in (SF_SMALL, SF_ORACLE, SF_SMALL):
+        con = duck_connection(sf)
+        try:
+            status, detail = run_entry(spark, con, "tpcds_q74", sf)
+        finally:
+            con.close()
+        assert status == "pass", (sf, detail)
+
+

@@ -9,9 +9,9 @@ estimator says.
 
 This tool walks the STATIC plan (no execution) of every matching registry
 entry at the given SF dir and reports each broadcast-join build side whose
-subtree reaches the fact source (lineitem.parquet — every derived TPC-DS
-fact channel reads it; dimensions derive from part/supplier/customer/
-calendar) without passing a cardinality reducer.  Run at the LARGEST
+subtree reaches a fact scan (lineitem.parquet, or one of the six TPC-DS
+fact tables stored under spark-warehouse/derived_tpcds/; dimensions derive
+from part/customer/calendar) without passing a cardinality reducer.  Run at the LARGEST
 available SF: at tiny SFs facts are legitimately broadcastable, so only
 the big-SF plan shows the misestimate.
 
@@ -41,7 +41,23 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
+
+# A scan is a fact scan when its input paths name lineitem's file or a
+# stored TPC-DS fact table's directory.
+_FACT_SCAN = re.compile(
+    r"lineitem\.parquet|derived_tpcds/\S*/(?:store|web|catalog)_(?:sales|returns)\b")
+
+
+def _scan_paths(node) -> str:
+    """The scan's plan line and its full input paths (the plan line cuts
+    long paths short)."""
+    try:
+        paths = node.relation().location().rootPaths().mkString(" ")
+    except Exception:  # noqa: BLE001 - not a file scan
+        paths = ""
+    return f"{node.toString()} {paths}"
 
 
 # Operators whose OUTPUT cardinality is decoupled from their input size:
@@ -58,7 +74,7 @@ _REDUCERS = (
 )
 
 
-def _subtree_scans_fact(node, marker: str) -> bool:
+def _subtree_scans_fact(node) -> bool:
     """True if a fact scan is reachable WITHOUT passing a reducer — i.e.
     the broadcast payload's row count scales with the fact table."""
     stack = [node]
@@ -67,7 +83,7 @@ def _subtree_scans_fact(node, marker: str) -> bool:
         cls = n.getClass().getSimpleName()
         if cls in _REDUCERS:
             continue  # everything below is cardinality-reduced
-        if "ScanExec" in cls and marker in n.toString():
+        if "ScanExec" in cls and _FACT_SCAN.search(_scan_paths(n)):
             return True
         ch = n.children()
         for i in range(ch.size()):
@@ -75,7 +91,7 @@ def _subtree_scans_fact(node, marker: str) -> bool:
     return False
 
 
-def audit(df, marker: str = "lineitem.parquet"):
+def audit(df):
     """Return list of flagged fact-side-broadcast join descriptions in
     df's static plan.
 
@@ -94,7 +110,7 @@ def audit(df, marker: str = "lineitem.parquet"):
             # child if the format ever changes).
             build = 0 if "BuildLeft" in n.buildSide().toString() else 1
             side = n.children().apply(build)
-            if _subtree_scans_fact(side, marker):
+            if _subtree_scans_fact(side):
                 flagged.append(n.toString().splitlines()[0][:160])
     return flagged
 

@@ -4,10 +4,11 @@ Every timed run is a fresh build plus execution (a cached DataFrame would
 reuse its shuffle outputs): ``build_s`` is the ``QUERIES[name](spark, sf)``
 call, pre-statements included, ``build_calls`` the Py4J gateway commands
 it sent, and ``exec_s`` the sink.  Each entry reports the min over
-``--runs``, so first-touch work (ANN/BM25 artifacts built on a new SF
-directory) drops out at ``--runs`` >= 2.  The floor, CPU and I/O
-kernels, which ``bench.py`` imports, bracket the invocation; the floor is
-re-sampled every 10 entries.  Progress to stderr, one JSON line to stdout.
+``--runs``, so first-touch work (ANN/BM25 artifacts or the TPC-DS star
+built on a new SF directory) drops out at ``--runs`` >= 2.  The floor,
+CPU and I/O kernels, which ``bench.py`` imports, bracket the invocation;
+the floor is re-sampled every 10 entries.  Progress to stderr, one JSON
+line to stdout.
 """
 
 from __future__ import annotations
