@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,6 +32,14 @@ TABLES = [
     "embeddings",
 ]
 
+
+def tables_in(text: str, names=TABLES) -> tuple[str, ...]:
+    """The ``names`` that SQL ``text`` mentions as whole words, in any
+    case: the base-table views it may read (a false positive only binds an
+    extra view)."""
+    return tuple(t for t in names if re.search(rf"\b{t}\b", text, re.I))
+
+
 # Small dimension tables that should always be broadcast in joins.  At 100 TB
 # region/nation stay tiny (fixed cardinality); supplier/part/customer grow but
 # remain orders of magnitude smaller than the fact tables.
@@ -43,6 +52,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 200-partition default then pays 6x task overhead per shuffle at sf0.01.
 _TUNED: set[str] = set()
 
+# id(SparkContext) -> (that SparkContext, its applicationId).
+_APP_IDS: dict[int, tuple[object, str]] = {}
+
+
+def app_id(spark: SparkSession) -> str:
+    """``spark``'s applicationId, asked of the JVM once per SparkContext:
+    the property sends two gateway commands on every read, and the caches
+    below are keyed by it on every call.  The context is held, so its id()
+    is never reused."""
+    sc = spark.sparkContext
+    hit = _APP_IDS.get(id(sc))
+    if hit is None or hit[0] is not sc:
+        hit = _APP_IDS[id(sc)] = (sc, sc.applicationId)
+    return hit[1]
+
 
 def ensure_runtime_tuned(spark: SparkSession) -> None:
     """Apply the runtime-settable engine defaults once per session.
@@ -53,7 +77,7 @@ def ensure_runtime_tuned(spark: SparkSession) -> None:
     semantics here define timestamps as epoch-UTC wall values, and a
     non-UTC session would shift them when NTZ parquet is reinterpreted as
     TIMESTAMP (see load_table's events path)."""
-    app = spark.sparkContext.applicationId
+    app = app_id(spark)
     if app in _TUNED:
         return
     _TUNED.add(app)
@@ -107,7 +131,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Filters/projections compose onto this scan and reach
     the parquet reader via Catalyst (check .explain: PushedFilters/ReadSchema)."""
     ensure_runtime_tuned(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name, _mtime_ns(sf_dir, name))
+    key = (app_id(spark), sf_dir, name, _mtime_ns(sf_dir, name))
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
@@ -139,8 +163,7 @@ def cached_parquet(spark: SparkSession, *paths: str) -> DataFrame:
             return os.stat(p).st_mtime_ns
         except OSError:
             return -1
-    key = (spark.sparkContext.applicationId, "",
-           tuple((p, _mt(p)) for p in paths))
+    key = (app_id(spark), "", tuple((p, _mt(p)) for p in paths))
     cached = _RELATION_CACHE.get(key)
     if cached is None:
         cached = spark.read.parquet(*paths)
@@ -211,8 +234,10 @@ def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
     it, so a single-row-group file of three splits runs as one busy task
     and two empty ones (sf0.1 lineitem: one task reads all 600k rows).  The
     copy has the same rows, order, schema and codec, one row group per
-    split, and is written once under
-    ``spark-warehouse/derived_splits/<sf_dir basename>/<source mtime_ns>/``.
+    split, and is written once under ``spark-warehouse/derived_splits/
+    <sf_dir basename>/<source mtime_ns>/<splits>/``: a copy cut for another
+    split count (written under another conf or core count) is never read,
+    since a split holding two row groups runs as one task of double length.
     Files under the open cost (4 MB) stay one split and are never copied;
     writer-sized row groups (every table at 100 TB) already cover their
     splits, and directories are left to Spark."""
@@ -232,16 +257,17 @@ def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
         src_md = pq.ParquetFile(src).metadata
     except (OSError, ValueError):
         return src  # not readable as parquet here: let spark.read decide
+    splits = min(splits, src_md.num_rows)  # a row group holds a row at least
     if src_md.num_row_groups >= splits:
         return src
     out = os.path.join(repo_root(), "spark-warehouse", "derived_splits",
                        os.path.basename(os.path.normpath(sf_dir)),
-                       str(st.st_mtime_ns), f"{name}.parquet")
+                       str(st.st_mtime_ns), str(splits), f"{name}.parquet")
     try:
         copy_md = pq.ParquetFile(out).metadata
     except (OSError, ValueError):
         copy_md = None
-    if copy_md is None or copy_md.num_row_groups < splits:
+    if copy_md is None or copy_md.num_row_groups != splits:
         try:
             _write_row_groups(src, out, splits)
             copy_md = pq.ParquetFile(out).metadata
@@ -251,15 +277,16 @@ def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
 
 
 def _write_row_groups(src: str, out: str, groups: int) -> None:
-    """Rewrite ``src`` to ``out`` with ``groups`` equal row groups, same
-    schema, order and codec; streamed one group at a time, published
-    atomically."""
+    """Rewrite ``src`` to ``out`` as ``groups`` row groups (at most its row
+    count) of equal size to one row, same schema, order and codec;
+    streamed one batch at a time, published atomically."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(src)
     md = pf.metadata
-    per_group = max(1, math.ceil(md.num_rows / groups))
+    rows = md.num_rows
+    sizes = [(i + 1) * rows // groups - i * rows // groups for i in range(groups)]
     codec = md.row_group(0).column(0).compression if md.num_row_groups else "NONE"
     codec = "NONE" if codec == "UNCOMPRESSED" else codec
     os.makedirs(os.path.dirname(out), exist_ok=True)
@@ -268,14 +295,12 @@ def _write_row_groups(src: str, out: str, groups: int) -> None:
         with pq.ParquetWriter(tmp, pf.schema_arrow, compression=codec,
                               version=md.format_version) as writer:
             held = None
-            for batch in pf.iter_batches(batch_size=per_group):
+            for batch in pf.iter_batches(batch_size=max(sizes)):
                 part = pa.Table.from_batches([batch])
                 held = part if held is None else pa.concat_tables([held, part])
-                while held.num_rows >= per_group:
-                    writer.write_table(held.slice(0, per_group), row_group_size=per_group)
-                    held = held.slice(per_group)
-            if held is not None and held.num_rows:
-                writer.write_table(held, row_group_size=per_group)
+                while sizes and held.num_rows >= sizes[0]:
+                    writer.write_table(held.slice(0, sizes[0]), row_group_size=sizes[0])
+                    held = held.slice(sizes.pop(0))
         os.replace(tmp, out)
     finally:
         if os.path.exists(tmp):
@@ -291,63 +316,43 @@ def _same_layout(a, b) -> bool:
             and codecs(a) == codecs(b))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
+    """load_table of each of ``names`` (default: all), by name."""
+    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-# Temp views per session: applicationId -> {view name: (sf_dir, mtime_ns)}
-# for base tables, (sf_dir, None) for a view replaced by a derived overlay
-# (tpch_official).  register_views() skips every base-table name whose view
-# already reads that sf_dir's table file as it is now — per-call
-# re-registration was the dominant fixed cost of spark.sql entries in bench
-# (10 parquet opens per call), and a cached call sends the gateway one
-# command pair.
-_VIEW_STATE: dict[str, dict[str, tuple[str, int | None]]] = {}
+# Temp views per session: applicationId -> {view name: the DataFrame bound
+# to it}.  bind_views() skips every name already bound to that very
+# DataFrame, and load_table/cached_parquet return one DataFrame per table
+# file as it is now, so an unchanged view costs no gateway command:
+# per-call re-registration was the dominant fixed cost of spark.sql
+# entries in bench (10 parquet opens per call).
+_VIEW_STATE: dict[str, dict[str, DataFrame]] = {}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
+def bind_views(spark: SparkSession, views: dict[str, DataFrame]) -> None:
+    """Register each DataFrame of ``views`` as a temp view under its name,
+    unless the name is already bound to that DataFrame.  Anything that
+    replaces a bound view behind this binder must call invalidate_views()
+    so the next caller re-binds."""
+    bound = _VIEW_STATE.setdefault(app_id(spark), {})
+    for name, df in views.items():
+        if bound.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            bound[name] = df
+
+
+def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
     """Register base tables ``names`` (default: all) as temp views so
     spark.sql(...) can see them — the equivalent of DataFusion's
-    SessionContext::register_table.
-
-    Cached per (session, sf_dir, name, file mtime): a name whose view
-    already reads this table file is skipped.  Anything that replaces a
-    base-named view must call note_view_shadows()/invalidate_views() so the
-    next caller re-registers."""
-    views = _VIEW_STATE.setdefault(spark.sparkContext.applicationId, {})
-    for name in names:
-        source = (sf_dir, _mtime_ns(sf_dir, name))
-        if views.get(name) != source:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-            views[name] = source
-
-
-def note_view_shadows(spark: SparkSession, sf_dir: str, shadows) -> None:
-    """Record that the views ``shadows`` are now derived overlays for
-    ``sf_dir`` and are the only ones, so register_views() restores a
-    shadowed base name and overlay installers can skip redundant
-    re-installation."""
-    views = _VIEW_STATE.setdefault(spark.sparkContext.applicationId, {})
-    for name in [n for n, (_, mtime) in views.items() if mtime is None]:
-        del views[name]
-    for name in shadows:
-        views[name] = (sf_dir, None)
-
-
-def view_state(spark: SparkSession):
-    """(sf_dir, overlay names) when every base-table view and every overlay
-    of this session reads one sf_dir; None otherwise.  An overlay outside
-    TABLES (partsupp) survives a plain register_views() of another sf_dir,
-    so its sf_dir counts too."""
-    views = _VIEW_STATE.get(spark.sparkContext.applicationId, {})
-    dirs = {views[n][0] if n in views else None for n in TABLES}
-    dirs |= {d for d, _ in views.values()}
-    if len(dirs) != 1 or None in dirs:
-        return None
-    return dirs.pop(), frozenset(n for n, (_, mtime) in views.items() if mtime is None)
+    SessionContext::register_table — and return them by name.  A name
+    whose view already reads this table file as it is now is skipped."""
+    views = load_tables(spark, sf_dir, names)
+    bind_views(spark, views)
+    return views
 
 
 def invalidate_views(spark: SparkSession) -> None:
     """Forget this session's view state (e.g. a caller registered an
-    arbitrary DataFrame under a base table name)."""
-    _VIEW_STATE.pop(spark.sparkContext.applicationId, None)
+    arbitrary DataFrame under a bound name)."""
+    _VIEW_STATE.pop(app_id(spark), None)

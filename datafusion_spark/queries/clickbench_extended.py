@@ -26,7 +26,7 @@ from __future__ import annotations
 from datafusion_spark.catalog import load_table
 from datafusion_spark.queries.clickbench_full import _hits_select, _pruned_hits_spark
 from datafusion_spark.queries.helpers import two_level_distinct
-from datafusion_spark.queries.registry import Plan, query
+from datafusion_spark.queries.registry import Plan, query, statement
 
 
 def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
@@ -45,10 +45,10 @@ def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
                if big_body else None)
 
     def fn(spark, sf_dir):
-        load_table(spark, sf_dir, "events").createOrReplaceTempView("events_cb")
+        text = fn.plan.final
         if big_sql and two_level_distinct(sf_dir, "events"):
-            return spark.sql(big_sql)
-        return spark.sql(fn.plan.final)
+            text = big_sql
+        return statement(spark, text, {"events_cb": load_table(spark, sf_dir, "events")})
 
     # fn.plan is the below-crossover shape (big_sql is pinned separately)
     fn.plan = Plan((), spark_sql, spark_sql)

@@ -20,19 +20,19 @@ on the TPC-H-ish schema PRESERVING its join graph and predicate structure:
     country_code   -> nation (via s_nationkey / c_nationkey)
 
 The SQL text is fully portable: the SAME string is the Spark plan (via
-spark.sql over registered views) and the DuckDB oracle — so the correctness
-gate also proves the SQL frontend handles comma-join syntax.  What the suite
-exercises on Spark: Catalyst's join-graph extraction from WHERE equalities,
-CBO+AQE join reordering, broadcast selection for the dim legs, and transitive
-predicate inference.  At 100 TB the wanted plan per query: every dim leg
+registry.statement over the views it reads) and the DuckDB oracle — so the
+correctness gate also proves the SQL frontend handles comma-join syntax.
+What the suite exercises on Spark: Catalyst's join-graph extraction from
+WHERE equalities, CBO+AQE join reordering, broadcast selection for the dim
+legs, and transitive predicate inference.  At 100 TB the wanted plan per query: every dim leg
 broadcast, bridge-bridge joins co-partitioned on l_orderkey, zero shuffles
 before the single-row aggregate (operator counts pinned in plans/manifest.json).
 """
 
 from __future__ import annotations
 
-from datafusion_spark.catalog import register_views
-from datafusion_spark.queries.registry import query
+from datafusion_spark.catalog import load_tables, tables_in
+from datafusion_spark.queries.registry import query, statement
 
 _JOB: dict[str, str] = {}
 
@@ -279,9 +279,10 @@ WHERE ci.l_quantity > 30
 
 
 def _register(name: str, sql: str) -> None:
+    views = tables_in(sql)
+
     def fn(spark, sf_dir, _sql=sql):
-        register_views(spark, sf_dir)
-        return spark.sql(_sql)
+        return statement(spark, _sql, load_tables(spark, sf_dir, views))
 
     fn.__name__ = name
     ref = name.replace("job_", "")

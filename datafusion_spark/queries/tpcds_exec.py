@@ -81,11 +81,13 @@ from pyspark.sql import DataFrame
 from datafusion_spark.catalog import (
     TABLES,
     _mtime_ns,
+    app_id,
+    bind_views,
     cached_parquet,
     register_views,
     repo_root,
 )
-from datafusion_spark.queries.registry import QUERIES, Plan, query
+from datafusion_spark.queries.registry import QUERIES, Plan, query, statement
 
 _DATE_LO, _DATE_HI = "1995-01-01", "2001-12-31"
 
@@ -1041,31 +1043,30 @@ def _no_broadcast(df):
         spark._jsparkSession, plan), spark)
 
 
-# applicationId -> (the star directory its views read, the hinted returns)
-_STAR_VIEWS: dict[str, tuple[str, list]] = {}
+# applicationId -> (the star directory its views read, those views)
+_STAR_VIEWS: dict[str, tuple[str, dict]] = {}
 
 
-def _ensure_star(spark, sf_dir: str) -> None:
-    """Register the star of ``sf_dir`` as views ``tpcds_<table>``, and the
-    returns tables also as hinted views under their own names, writing the
-    star first if no complete copy is stored.  Each table is its own CTE's
+def _ensure_star(spark, sf_dir: str) -> dict:
+    """Bind and return the views of the star of ``sf_dir`` by name:
+    ``tpcds_<table>`` for every stored table, and the returns tables also
+    under their own names with the no-broadcast hint, writing the star
+    first if no complete copy is stored.  Each table is its own CTE's
     SELECT over the base views, written into a temp directory that is
     renamed into place only after all of them are written.  The base views
-    and the returns views are registered on every call (another entry may
-    have replaced them, as tpcds_planning's empty schemas do): the base
-    views are what ``fn.plan.inline`` reads."""
+    are registered on every call: they are what ``fn.plan.inline`` reads."""
     register_views(spark, sf_dir, _STAR_SOURCES)
     dest = _star_dir(sf_dir)
-    app = spark.sparkContext.applicationId
+    app = app_id(spark)
     if _STAR_VIEWS.get(app, ("",))[0] != dest or not os.path.isdir(dest):
         _STAR_VIEWS[app] = (dest, _write_star(spark, dest))
-    for name, df in _STAR_VIEWS[app][1]:
-        df.createOrReplaceTempView(name)
+    views = _STAR_VIEWS[app][1]
+    bind_views(spark, views)
+    return views
 
 
-def _write_star(spark, dest: str) -> list:
-    """Write the star to ``dest`` unless it is there, register its views
-    ``tpcds_<table>``, and return the hinted returns views to register."""
+def _write_star(spark, dest: str) -> dict:
+    """Write the star to ``dest`` unless it is there; return its views."""
     if not os.path.isdir(dest):
         tmp = f"{dest}.tmp{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1080,32 +1081,34 @@ def _write_star(spark, dest: str) -> list:
                     raise
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    hinted = []
+    views = {}
     for name in _STAR:
         df = cached_parquet(spark, os.path.join(dest, name))
-        df.createOrReplaceTempView(f"tpcds_{name}")
+        views[f"tpcds_{name}"] = df
         if name in _RETURNS:
-            hinted.append((name, _no_broadcast(df)))
-    return hinted
+            views[name] = _no_broadcast(df)
+    return views
 
 
 def _register(name: str, body: str, doc: str) -> None:
     """Register ``name``: the DuckDB oracle runs ``body`` verbatim under the
     DuckDB derive, and the entry runs it verbatim over the stored star
-    (``fn.plan.final``).  A pre-statement (see _materialize) is written to
-    this invocation's scratch and read back as its temp view first; every
-    scratch read is a plain parquet scan, so the unparser round-trip is
-    preserved."""
+    (``fn.plan.final``, through registry.statement).  A pre-statement (see
+    _materialize) is written to this invocation's scratch and read back as
+    its view first; every scratch read is a plain parquet scan, so the
+    unparser round-trip is preserved."""
 
     def fn(spark, sf_dir):
-        _ensure_star(spark, sf_dir)
+        views = _ensure_star(spark, sf_dir)
         if fn.plan.pre:
+            views = dict(views)
             dest = _scratch(name)
             for view, sql in fn.plan.pre:
                 path = os.path.join(dest, view)
                 spark.sql(sql).write.parquet(path)
-                spark.read.parquet(path).createOrReplaceTempView(view)
-        return spark.sql(fn.plan.final)
+                views[view] = spark.read.parquet(path)
+                bind_views(spark, {view: views[view]})
+        return statement(spark, fn.plan.final, views)
 
     fn.__name__ = name
     fn.__doc__ = doc

@@ -4,7 +4,8 @@ DataFusion runs the full TPC-H as its core benchmark from SQL text
 (reference: benchmarks/queries/q1.sql … q22.sql, one frontend into one
 LogicalPlan); so does this module.  Every entry is one Spark SQL statement
 (``fn.plan.final``) next to its oracle text (``fn.plan.inline``), and one
-runner registers the views the statement reads and calls ``spark.sql``.
+runner passes the statement and the views it reads to
+``registry.statement``, which analyzes it once per session and conf.
 Plan choices that Catalyst would not make on its own are SQL hints
 (``BROADCAST``, ``MERGE``, ``SHUFFLE_HASH``) or a rewritten text; each is
 explained at its entry, and an entry whose final text differs from its
@@ -15,8 +16,8 @@ Why text and not the DataFrame API: building a plan is Python → JVM round
 trips, and every ``F.col``/``F.lit``/``cast``/``alias`` is one or more of
 them while each DataFrame verb re-runs the analyzer.  The DataFrame
 spelling of q1 sent 280 gateway commands per build (q6, the smallest, 64);
-one ``spark.sql`` call sends 7 with the views cached, for the same
-physical plan.
+the statement sends 3 once its analyzed plan is kept (13 on the call that
+analyzes it), for the same physical plan.
 
 Schema adaptations: the driver's tables drop several TPC-H columns and the
 whole partsupp table, so NO query here is official-spec TPC-H semantics —
@@ -70,9 +71,7 @@ here for continuity, and the official joins/subqueries are exercised there.
 
 from __future__ import annotations
 
-import re
-
-from datafusion_spark.catalog import TABLES, register_views
+from datafusion_spark.catalog import load_tables, tables_in
 from datafusion_spark.queries.helpers import (
     SQL_REVENUE,
     sql_davg,
@@ -80,22 +79,20 @@ from datafusion_spark.queries.helpers import (
     sql_sum_limbs,
     sql_units6,
 )
-from datafusion_spark.queries.registry import Plan, query
+from datafusion_spark.queries.registry import Plan, query, statement
 
 
 def _tpch(name: str, tags: tuple, oracle: str, final: str | None = None) -> None:
     """Register ``name``: the entry runs ``final`` (default: the oracle
-    text itself) through ``spark.sql`` after registering the base-table
-    views either text reads; ``fn.plan`` holds both texts.  A table counts
-    as read wherever its name stands as a word, whatever the case or the
+    text itself) through ``registry.statement`` over the base-table views
+    either text reads; ``fn.plan`` holds both texts.  A table counts as
+    read wherever its name stands as a word, whatever the case or the
     FROM-list spelling: a view missed here would silently resolve to one an
     earlier entry left, maybe at another sf_dir."""
-    text = oracle + (final or "")
-    views = tuple(t for t in TABLES if re.search(rf"\b{t}\b", text, re.I))
+    views = tables_in(oracle + (final or ""))
 
     def fn(spark, sf_dir):
-        register_views(spark, sf_dir, views)
-        return spark.sql(fn.plan.final)
+        return statement(spark, fn.plan.final, load_tables(spark, sf_dir, views))
 
     fn.__name__ = name
     fn.plan = Plan((), final or oracle, oracle)

@@ -524,44 +524,50 @@ def test_audio_windows_real_wav_rms(spark):
 
 
 def test_view_state_cache_transitions(spark):
-    """register_views is cached per (session, sf_dir); official-track
-    overlays shadow base views and the next plain registration restores
-    them — the full official->plain->official cycle must stay correct."""
+    """Each view name is bound to one DataFrame per session and re-bound
+    only when another DataFrame is asked for; official-track overlays
+    shadow base views and the next plain registration restores them — the
+    full official->plain->official cycle must stay correct."""
     from datafusion_spark import catalog
     from datafusion_spark.queries import QUERIES
     from tests.conftest import SF_SMALL, SF_ORACLE
 
+    def bound(name):
+        return catalog._VIEW_STATE[catalog.app_id(spark)][name]
+
+    def base(sf):
+        return catalog.load_table(spark, sf, "lineitem")
+
     catalog.invalidate_views(spark)
     catalog.register_views(spark, SF_SMALL)
-    assert catalog.view_state(spark) == (SF_SMALL, frozenset())
+    assert bound("lineitem") is base(SF_SMALL)
     plain_cols = set(spark.table("lineitem").columns)
     assert "l_commitdate" not in plain_cols
 
     # official entry shadows lineitem with the extended overlay
     QUERIES["tpch_official_q4"](spark, SF_SMALL).collect()
-    state = catalog.view_state(spark)
-    assert state is not None and "lineitem" in state[1]
+    assert bound("lineitem") is not base(SF_SMALL)
     assert "l_commitdate" in set(spark.table("lineitem").columns)
 
     # plain re-registration restores the base view
     catalog.register_views(spark, SF_SMALL)
-    assert catalog.view_state(spark) == (SF_SMALL, frozenset())
+    assert bound("lineitem") is base(SF_SMALL)
     assert "l_commitdate" not in set(spark.table("lineitem").columns)
 
-    # switching sf_dir invalidates the cache even in plain state
+    # switching sf_dir re-binds even in plain state
     catalog.register_views(spark, SF_ORACLE)
-    assert catalog.view_state(spark) == (SF_ORACLE, frozenset())
+    assert bound("lineitem") is base(SF_ORACLE)
     catalog.register_views(spark, SF_SMALL)
-    assert catalog.view_state(spark) == (SF_SMALL, frozenset())
+    assert bound("lineitem") is base(SF_SMALL)
 
     # an overlay outside TABLES (partsupp) outlives a plain registration of
-    # another sf_dir: the state must not pass it off as that sf_dir's
+    # another sf_dir: the next official entry re-binds it for its own
     q2 = QUERIES["tpch_official_q2"]
     q2(spark, SF_ORACLE).collect()
-    assert catalog.view_state(spark) == (SF_ORACLE, frozenset({"partsupp"}))
+    oracle_partsupp = bound("partsupp")
     catalog.register_views(spark, SF_SMALL)
-    assert catalog.view_state(spark) is None
     got = q2(spark, SF_SMALL).collect()
+    assert bound("partsupp") is not oracle_partsupp
     catalog.invalidate_views(spark)
     assert got == q2(spark, SF_SMALL).collect()
 
@@ -569,11 +575,14 @@ def test_view_state_cache_transitions(spark):
 def test_tpch_entries_register_every_view_they_read(spark):
     """Each tpch_* entry registers the views its text reads itself: with no
     base view left in the session, a table the entry misses fails with
-    TABLE_OR_VIEW_NOT_FOUND instead of reading another entry's view."""
+    TABLE_OR_VIEW_NOT_FOUND instead of reading another entry's view.  A
+    conf key set for the test's length makes every statement analyze
+    afresh (a kept analyzed plan needs no view)."""
     from datafusion_spark import catalog
     from datafusion_spark.queries import QUERIES
     from tests.conftest import SF_SMALL
 
+    spark.conf.set("spark.dfspark.test.fresh_statements", "true")
     try:
         for name in [n for n in QUERIES if n.startswith("tpch_q")]:
             for table in catalog.TABLES:
@@ -581,6 +590,7 @@ def test_tpch_entries_register_every_view_they_read(spark):
             catalog.invalidate_views(spark)
             QUERIES[name](spark, SF_SMALL).collect()
     finally:
+        spark.conf.unset("spark.dfspark.test.fresh_statements")
         catalog.invalidate_views(spark)
         catalog.register_views(spark, SF_SMALL)
 

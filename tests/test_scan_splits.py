@@ -50,7 +50,7 @@ def test_default_settings_write_no_copy(spark, sf_copy):
 def test_split_copy_rows_order_and_reuse(spark, sf_copy):
     """With smaller splits than the file, the scan reads a copy with a row
     group per split, the same rows in the same file order, built once per
-    source mtime."""
+    source mtime and split count."""
     sf, derived = sf_copy
     src = catalog.table_path(sf, "lineitem")
     saved = spark.conf.get(_MPB)
@@ -61,9 +61,9 @@ def test_split_copy_rows_order_and_reuse(spark, sf_copy):
         df = catalog.load_table(spark, sf, "lineitem")
         copy = _scanned_file(df)
         mtime = os.stat(src).st_mtime_ns
-        assert copy == os.path.join(derived, str(mtime), "lineitem.parquet")
+        assert copy == os.path.join(derived, str(mtime), str(splits), "lineitem.parquet")
         copy_md = pq.ParquetFile(copy).metadata
-        assert copy_md.num_row_groups >= splits
+        assert copy_md.num_row_groups == splits
         assert pq.ParquetFile(copy).schema_arrow.equals(
             pq.ParquetFile(src).schema_arrow, check_metadata=True)
         # Each row group is read by its own task.
@@ -85,10 +85,43 @@ def test_split_copy_rows_order_and_reuse(spark, sf_copy):
         # A rewritten source (new mtime) gets a new copy.
         os.utime(src, ns=(mtime + 10**9, mtime + 10**9))
         fresh = _scanned_file(catalog.load_table(spark, sf, "lineitem"))
-        assert fresh == os.path.join(derived, str(mtime + 10**9), "lineitem.parquet")
-        assert pq.ParquetFile(fresh).metadata.num_row_groups >= splits
+        assert fresh == os.path.join(derived, str(mtime + 10**9), str(splits),
+                                     "lineitem.parquet")
+        assert pq.ParquetFile(fresh).metadata.num_row_groups == splits
     finally:
         spark.conf.set(_MPB, saved)
+
+
+def test_split_copy_matches_the_scan_split_count(spark, sf_copy):
+    """A copy cut for more splits is never read by a scan of fewer: a copy
+    written under a lower open cost (4 splits) stays where it is, and a
+    scan under a higher one (3 splits) reads its own copy, each split
+    reading exactly one row group.  Reusing the 4-group copy would hand one
+    task two row groups."""
+    sf, derived = sf_copy
+    src = catalog.table_path(sf, "lineitem")
+    key = "spark.sql.files.openCostInBytes"
+    saved = spark.conf.get(key)
+
+    def scan(open_cost):
+        spark.conf.set(key, open_cost)
+        splits = catalog._scan_splits(spark, os.path.getsize(src))
+        path = catalog._split_path(spark, sf, "lineitem")
+        return splits, path, spark.read.parquet(path)
+
+    try:
+        many, many_path, _ = scan("1k")
+        few, few_path, df = scan("400k")
+        assert (many, few) == (4, 3)
+        assert many_path != few_path
+        assert pq.ParquetFile(many_path).metadata.num_row_groups == many
+        md = pq.ParquetFile(few_path).metadata
+        groups = sorted(md.row_group(i).num_rows for i in range(md.num_row_groups))
+        per_task = df.rdd.glom().map(len).collect()
+        assert len(per_task) == few
+        assert sorted(per_task) == groups
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_dataframe_debugging_off(spark, monkeypatch):

@@ -46,7 +46,8 @@ def test_schema_shadow_invalidates_view_state(spark):
     customer resolves c_customer_sk instead of c_custkey (r8 full-sweep
     find: tpch_official_q10 FAILed after tpcds_planning_sweep in the
     same session)."""
-    from datafusion_spark.catalog import register_views, view_state
+    from datafusion_spark import catalog
+    from datafusion_spark.catalog import register_views
 
     from tests.conftest import SF_SMALL
 
@@ -54,6 +55,6 @@ def test_schema_shadow_invalidates_view_state(spark):
     assert "c_custkey" in spark.table("customer").columns
     register_tpcds_schema(spark)
     assert "c_customer_sk" in spark.table("customer").columns  # shadowed
-    assert view_state(spark) is None  # cache knows it's dirty
+    assert catalog.app_id(spark) not in catalog._VIEW_STATE  # binder knows it's dirty
     register_views(spark, SF_SMALL)  # must NOT be a cache no-op
     assert "c_custkey" in spark.table("customer").columns
