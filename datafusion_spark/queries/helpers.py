@@ -53,17 +53,24 @@ def two_level_distinct(sf_dir: str, table: str) -> bool:
     return table_bytes(sf_dir, table) > limit
 
 
-def sql_dsum(expr: str, alias: str) -> str:
+def sql_dec(expr: str) -> str:
+    """``expr`` as the exact accumulator type, as SQL text."""
+    return f"CAST({expr} AS DECIMAL(38,6))"
+
+
+def sql_dsum(expr: str, alias: str | None = None) -> str:
     """Exact distributed sum of a DOUBLE expression via decimal
-    accumulation, as SQL text."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE) AS {alias}"
+    accumulation, as SQL text (aliased when ``alias`` is given)."""
+    return _aliased(f"CAST(SUM({sql_dec(expr)}) AS DOUBLE)", alias)
 
 
-def sql_davg(expr: str, alias: str) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )
+def sql_davg(expr: str, alias: str | None = None) -> str:
+    """Exact average: the ``sql_dsum`` sum over the non-null count."""
+    return _aliased(f"{sql_dsum(expr)} / COUNT({expr})", alias)
+
+
+def _aliased(sql: str, alias: str | None) -> str:
+    return sql if alias is None else f"{sql} AS {alias}"
 
 
 def fan_out(df, min_parts: int | None = None):

@@ -13,9 +13,9 @@ physical planning over empty temp views.
 
 Dialect note: the reference's files are already ANSI-leaning (INTERVAL
 '30 days', CTEs, window functions, ROLLUP/GROUPING); Spark 4 parses the
-surface directly — load-time adaptations, if ever needed, happen in
-``_load_sql`` and are documented here.  Multi-statement files (q14, q23,
-q24, q39 are two-part queries) plan each statement.
+surface directly; the one load-time adaptation, quoted column aliases,
+happens in ``_load_sql`` and is documented there.  Multi-statement files
+(q14, q23, q24, q39 are two-part queries) plan each statement.
 
 The registry entry ``tpcds_planning_sweep`` turns the sweep into an
 oracle-checkable artifact: one row per query with the statement count
@@ -259,14 +259,22 @@ TPCDS_TABLE_SCHEMAS = {
 _QUOTED_ALIAS = re.compile(r"\bas\s+'([^']+)'", re.IGNORECASE)
 
 
-def _load_sql(qid: int) -> list[str]:
-    """Statements of query ``qid``: the shipped text plus the quoted-alias
-    rewrite above.  q14/q23/q24/q39 are two-part queries; leading comment
-    lines stay attached (Spark's parser accepts them)."""
+def reference_statements(qid: int) -> list[str]:
+    """The statements of ``tpcds_sql/<qid>.sql`` as shipped, minus the
+    copyright header and the ``;`` terminators: the one reader of these
+    files (the executed TPC-DS entries in tpcds_exec.py start from the same
+    text).  q14/q23/q24/q39 are two-part queries."""
     with open(os.path.join(_SQL_DIR, f"{qid}.sql")) as f:
         text = f.read()
-    text = _QUOTED_ALIAS.sub(lambda m: f"as `{m.group(1)}`", text)
+    text = re.sub(r"\A(?:--[^\n]*\n)+", "", text)
     return [s.strip() for s in text.split(";") if "select" in s.lower()]
+
+
+def _load_sql(qid: int) -> list[str]:
+    """Statements of query ``qid`` for the planning sweep: the reference
+    statements plus the quoted-alias rewrite above."""
+    return [_QUOTED_ALIAS.sub(lambda m: f"as `{m.group(1)}`", s)
+            for s in reference_statements(qid)]
 
 
 def register_tpcds_schema(spark) -> None:

@@ -374,10 +374,10 @@ def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
                          f" UNION ALL ({select} EXCEPT ALL"
                          f" SELECT * FROM tpcds_{name})")
         assert diff.count() == 0, name
-    final = QUERIES["tpcds_q3"].plan.final
-    body_tail = final[final.index("SELECT dt.d_year"):]
+    body = ORACLES["tpcds_q3"][len(tx._DUCK_DERIVE):]
+    assert QUERIES["tpcds_q3"].plan.final.endswith(body)
     got = [tuple(r) for r in QUERIES["tpcds_q3"](spark, SF_SMALL).collect()]
-    full = [tuple(r) for r in spark.sql(tx._SPARK_DERIVE + body_tail).collect()]
+    full = [tuple(r) for r in spark.sql(tx._SPARK_DERIVE + body).collect()]
     assert got == full
 
 
@@ -508,7 +508,10 @@ def test_rewritten_plan_shapes():
     q67 = QUERIES["tpcds_q67"].plan
     body = ORACLES["tpcds_q67"][len(tx._DUCK_DERIVE):]
     assert not q67.pre and q67.final.startswith(tx._star_prelude(body))
-    assert q67.final.count("GROUP BY ROLLUP") == 1 == body.count("GROUP BY")
+    group_by = r"(?i)\bgroup\s+by\b"
+    assert len(re.findall(group_by + r"\s+rollup", q67.final)) == 1
+    assert len(re.findall(group_by, body)) == 1
+    assert len(re.findall(group_by, q67.final)) == 2
     assert "SUM(ps) AS sumsales" in q67.final and ") base" in q67.final
     q14 = QUERIES["tpcds_q14"].plan
     ((view, mat),) = q14.pre
@@ -519,6 +522,64 @@ def test_rewritten_plan_shapes():
     stmt = body[body.index("\n    SELECT channel"):].lstrip()
     assert mat == (tx._star_prelude(body) + body[:-len(stmt)]
                    + " SELECT * FROM cross_items")
+
+
+def test_tpcds_edit_lists():
+    """Every tpcds_* entry is generated, its reference statement plus a
+    checked edit list, or a hand body with a one-line reason.  Each edit
+    matches its stated count and changes the text, an empty list is the
+    reference statement verbatim, and the oracle and inline texts, and
+    every final but the two respelled ones, carry the generated body
+    unchanged."""
+    import datafusion_spark.queries.tpcds_exec as tx
+    from datafusion_spark.queries.tpcds_planning import reference_statements
+
+    assert set(_TPCDS) == set(tx._EDITS) | set(tx._HAND)
+    assert not set(tx._EDITS) & set(tx._HAND)
+    assert len(tx._EDITS) >= 70
+    assert all(r.strip() and "\n" not in r for r in tx._HAND.values())
+
+    for name, edits in tx._EDITS.items():
+        for i, e in enumerate(edits):  # _generate asserts each count
+            assert e.why and e.n >= 1, (name, e)
+            assert (tx._generate(name, edits[:i])
+                    != tx._generate(name, edits[:i + 1])), (name, e)
+        body = tx._generate(name, edits)
+        plan = QUERIES[name].plan
+        assert ORACLES[name] == tx._DUCK_DERIVE + body, name
+        assert plan.inline == tx._pruned_prelude(body) + body, name
+        assert not plan.pre, name
+        # q64's respelling rewrites its prelude, q67's its rollup; both are
+        # pinned in test_rewritten_plan_shapes
+        assert (plan.final == tx._star_prelude(body) + body
+                or name in ("tpcds_q64", "tpcds_q67")), name
+        if not edits:
+            assert body == tx._reference(name), name
+
+    # the reader: header and ';' gone, a leading WITH continues the
+    # prelude's, and the b entries are the second statements
+    q14b = reference_statements(14)[1]
+    assert q14b.lower().startswith("with") and not q14b.endswith(";")
+    assert tx._reference("tpcds_q14b") == "," + q14b[4:]
+    assert tx._reference("tpcds_q3") == reference_statements(3)[0]
+    assert not any(s.lstrip().startswith("--") for q in range(1, 100)
+                   for s in reference_statements(q))
+    assert tx._EDITS["tpcds_q73"] == ()
+
+    # an edit that no longer applies fails
+    def gen(*edit):
+        return tx._generate("tpcds_q3", (tx.Edit(*edit),))
+
+    with pytest.raises(AssertionError, match="occurs 0 times, not 1"):
+        gen("no such text", "x", "why")
+    with pytest.raises(AssertionError, match="occurs 1 times, not 2"):
+        gen("sum(ss_ext_sales_price)", "x", "why", 2)
+    with pytest.raises(AssertionError, match="changes nothing"):
+        gen("limit 100", "limit 100", "why")
+    # whitespace runs match any whitespace run; nothing else is loose
+    assert "LIMIT 7" in gen("limit  100", "LIMIT 7", "why")
+    with pytest.raises(AssertionError, match="occurs 0 times"):
+        gen("LIMIT 100", "x", "why")
 
 
 def test_scratch_keeps_only_latest_invocation(spark):
