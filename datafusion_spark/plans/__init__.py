@@ -7,7 +7,6 @@ from datafusion_spark.plans.audit import (
     plan_nodes,
     pushed_filters,
     scan_columns,
-    statement_counts,
 )
 
 __all__ = [
@@ -17,5 +16,4 @@ __all__ = [
     "plan_nodes",
     "pushed_filters",
     "scan_columns",
-    "statement_counts",
 ]

@@ -120,16 +120,6 @@ def operator_counts(df: DataFrame, initial: bool = False) -> dict[str, int]:
     return {k: v for k, v in sorted(counts.items()) if v}
 
 
-def statement_counts(spark, entry, df: DataFrame) -> list[dict[str, int]]:
-    """``operator_counts`` for each statement a registry entry runs: every
-    pre-statement of ``entry.plan`` in order, then ``df``, the DataFrame the
-    entry returned.  Call it after the entry ran, so the pre-statements'
-    views are registered."""
-    plan = getattr(entry, "plan", None)
-    pre = [spark.sql(sql) for _view, sql in (plan.pre if plan else ())]
-    return [operator_counts(d) for d in pre + [df]]
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries across all data-source scans."""
     root = df._jdf.queryExecution().executedPlan()

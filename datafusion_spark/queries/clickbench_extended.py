@@ -51,7 +51,7 @@ def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
         return statement(spark, text, {"events_cb": load_table(spark, sf_dir, "events")})
 
     # fn.plan is the below-crossover shape (big_sql is pinned separately)
-    fn.plan = Plan((), spark_sql, spark_sql)
+    fn.plan = Plan(spark_sql, spark_sql)
     fn.__name__ = f"cbx_q{n:02d}"
     fn.__doc__ = (
         f"ClickBench extended q{n} (reference benchmarks/queries/clickbench/"

@@ -183,7 +183,7 @@ def _cb(n: int, body: str, duck_body: str | None = None, tags: tuple = ()):
         return statement(spark, fn.plan.final,
                          {"events_cb": load_table(spark, sf_dir, "events")})
 
-    fn.plan = Plan((), spark_sql, spark_sql)
+    fn.plan = Plan(spark_sql, spark_sql)
     fn.__name__ = f"cb_q{n:02d}"
     fn.__doc__ = f"ClickBench q{n} (reference benchmarks/queries/clickbench/queries/q{n}.sql)."
     query(f"cb_q{n:02d}", oracle=duck_sql, tags=("clickbench_full",) + tags)(fn)

@@ -57,17 +57,14 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 @dataclass(frozen=True)
 class Plan:
-    """The statements an entry executes, as an inspectable value
-    (attached to the entry's callable as ``fn.plan``).
+    """The statement an entry executes, as an inspectable value (attached
+    to the entry's callable as ``fn.plan``).
 
-    ``pre`` are ``(view, sql)`` pairs run in order before the entry returns:
-    each result is written to scratch and read back as temp view ``view``.
     ``final`` is the SQL whose DataFrame the entry returns.  ``inline`` is
     the oracle's Spark spelling — the text the entry would run without its
-    rewrites; an entry with ``pre`` or ``final != inline`` must return the
-    same rows as ``inline`` (pinned in tests/test_plans.py)."""
+    rewrites; an entry with ``final != inline`` must return the same rows
+    as ``inline`` (pinned in tests/test_plans.py)."""
 
-    pre: tuple[tuple[str, str], ...]
     final: str
     inline: str
 
@@ -147,7 +144,12 @@ def _keepable(kept: _Statements, text: str, views, analyzed) -> bool:
     if any(re.search(rf"\b{re.escape(f)}\s*\(", text, re.I)
            for f in temp_fns.split("\n") if f):
         return False
-    return _reads_only(analyzed.treeString(), {n.lower() for n in views})
+    # maxFields = 1 prints one entry of each node's field lists: node names,
+    # view names and the tree's shape, all _reads_only reads, stay.  A
+    # gateway reply over ~8,000 chars stalls ~44 ms; 68 of the 103 full
+    # TPC-DS trees exceed that, 9 of the short ones do.
+    tree = analyzed.treeString(False, False, 1, False, False)
+    return _reads_only(tree, {n.lower() for n in views})
 
 
 def statement(spark: SparkSession, text: str, views: dict[str, DataFrame]) -> DataFrame:

@@ -19,10 +19,10 @@ applies fails at import.  The edits are of a few kinds: exact money sums
 and averages (helpers.sql_dsum / sql_davg, the house determinism rule),
 plain column names for unnamed or quoted-alias outputs, integer types
 alike in both engines, explicit NULLS FIRST under a LIMIT, and constants
-retargeted into the derived domains.  An entry in _HAND keeps a
-hand-written body, with the reason there.  The DuckDB oracle runs
-``_DUCK_DERIVE + body``; the entry runs the same body over the stored
-star (below).
+retargeted into the derived domains.  Two entries in _HAND keep a
+hand-written body, with the reason there: q41 (a Spark limitation) and
+q72 (measured faster).  The DuckDB oracle runs ``_DUCK_DERIVE + body``;
+the entry runs the same body over the stored star (below).
 
 Execution: the derived tables are stored once per SF (the star).  On
 first use for an SF, each of the 24 derive CTEs of _SPARK_DERIVE is
@@ -39,23 +39,17 @@ under their own names, which carry Spark's no-broadcast join hint, so a
 returns table is never a broadcast build side (see _RETURNS).  Deleting
 the star's directory makes the next call write it again.
 ``fn.plan.inline`` is the body under the derive prelude itself, the
-reference the stored == derived row pin compares against.  Three
-entries run an equivalent spelling that is faster at .scale/sf1: q64 and
-q67 (see _respell) and q14, which also has a pre-statement (see
-_materialize).  It writes to the entry's own subdirectory of a
-process-local scratch directory, created on first use and removed at
-exit; re-invoking q14 deletes its previous scratch, so a DataFrame
-returned by a superseded invocation must not be executed again.
+reference the stored == derived row pin compares against.  Two entries
+run an equivalent spelling that is faster at .scale/sf1: q64 and q67 (see
+_respell).  Every entry is one statement.
 """
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
 import re
 import shutil
-import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -923,7 +917,7 @@ catalog_returns AS (
 
 # Representative TPC-DS bench subset (one per heavy plan family): the
 # year_total CTE chain (q4), the 9-fact-pass cross-channel INTERSECT
-# (q14), the top-k+count-rank triple-channel ranks (q49), the cumulative
+# (q14), the triple-channel unpartitioned double ranks (q49), the cumulative
 # FULL OUTER window (q51), the 17-relation resale chain (q64), the
 # 8-level rollup + per-category rank (q67), the no-return anti-join
 # channels (q78), and the order-level EXISTS chain (q95) — tagged into
@@ -1077,68 +1071,16 @@ def _write_star(spark, dest: str) -> dict:
 def _register(name: str, body: str, doc: str) -> None:
     """Register ``name``: the DuckDB oracle runs ``body`` verbatim under the
     DuckDB derive, and the entry runs it verbatim over the stored star
-    (``fn.plan.final``, through registry.statement).  A pre-statement (see
-    _materialize) is written to this invocation's scratch and read back as
-    its view first; every scratch read is a plain parquet scan, so the
-    unparser round-trip is preserved."""
+    (``fn.plan.final``, through registry.statement)."""
 
     def fn(spark, sf_dir):
-        views = _ensure_star(spark, sf_dir)
-        if fn.plan.pre:
-            views = dict(views)
-            dest = _scratch(name)
-            for view, sql in fn.plan.pre:
-                path = os.path.join(dest, view)
-                spark.sql(sql).write.parquet(path)
-                views[view] = spark.read.parquet(path)
-                bind_views(spark, {view: views[view]})
-        return statement(spark, fn.plan.final, views)
+        return statement(spark, fn.plan.final, _ensure_star(spark, sf_dir))
 
     fn.__name__ = name
     fn.__doc__ = doc
-    fn.plan = Plan((), _star_prelude(body) + body,
-                   _pruned_prelude(body) + body)
+    fn.plan = Plan(_star_prelude(body) + body, _pruned_prelude(body) + body)
     tags = ("tpcds", "exec") + (("bench",) if name in _BENCH_TPCDS else ())
     query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
-
-
-# Process-local scratch for pre-statement materializations: created on
-# first use, removed at exit.
-_MAT_TMP: str | None = None
-
-
-def _scratch(name: str) -> str:
-    """A fresh directory for one invocation of entry ``name``, under the
-    entry's own subdirectory of _MAT_TMP, after removing what the entry's
-    previous invocation wrote.  Uniquely named, so a path never names two
-    different writes."""
-    global _MAT_TMP
-    if _MAT_TMP is None:
-        _MAT_TMP = tempfile.mkdtemp(prefix="dfspark_tpcds_mat_")
-        atexit.register(shutil.rmtree, _MAT_TMP, ignore_errors=True)
-    entry = os.path.join(_MAT_TMP, name)
-    shutil.rmtree(entry, ignore_errors=True)
-    os.mkdir(entry)
-    return tempfile.mkdtemp(dir=entry)
-
-
-def _materialize(name: str, cte: str) -> None:
-    """Compute the body CTE ``cte`` of the registered entry ``name`` once
-    per invocation: a pre-statement writes it to scratch and the final
-    statement reads it back (its definition becomes ``SELECT * FROM
-    <view>``).  Spark inlines WITH-CTEs, so a CTE consumed N times is
-    computed N times.  Used only where the entry is slower without it at
-    .scale/sf1 over the stored star (interleaved A/B in SCALE.md)."""
-    fn = QUERIES[name]
-    ctes, tail = _split_ctes(fn.plan.final)
-    stmt = tail.lstrip()
-    assert cte in dict(ctes) and stmt.startswith("SELECT"), (name, cte)
-    view = f"{cte}_{name}"
-    mat = fn.plan.final[:-len(stmt)] + f" SELECT * FROM {cte}"
-    final = "\nWITH " + ",\n".join(
-        f"{cte} AS (SELECT * FROM {view})" if n == cte else t
-        for n, t in ctes) + "\n" + stmt
-    fn.plan = Plan(((view, mat),), final, fn.plan.inline)
 
 
 def _replace(text: str, old: str, new: str, n: int, where: str) -> str:
@@ -1161,8 +1103,7 @@ def _respell(name: str, old: str, new: str) -> None:
     A/B in SCALE.md).  The stored == derived pin checks its rows against
     the verbatim inline spelling."""
     fn = QUERIES[name]
-    fn.plan = Plan(fn.plan.pre, _replace(fn.plan.final, old, new, 1, name),
-                   fn.plan.inline)
+    fn.plan = Plan(_replace(fn.plan.final, old, new, 1, name), fn.plan.inline)
 
 
 class Edit(NamedTuple):
@@ -1434,6 +1375,33 @@ _Q67_SUM = f"SUM({sql_dec('coalesce(ss_sales_price*ss_quantity,0)')})"
 _REFUND = " + ".join(sql_dec(f"cr_{c}") for c in (
     "refunded_cash", "reversed_charge", "store_credit"))
 
+# q14/q14b: the all-channel mean ticket and each channel's sales, from exact
+# quantity * list_price products.  The mean's product is taken in each
+# UNION ALL leg: taken over the UNION output instead, q14 ran 8.97 s
+# against 7.97 s (median of 14 interleaved runs at .scale/sf1, rows
+# identical; SCALE.md).
+_Q14_AVG = (
+    Edit("avg(quantity*list_price) average_sales",
+         "CAST(SUM(amt) AS DOUBLE) / COUNT(*) average_sales", _MONEY),
+    *(Edit(f"select {p}_quantity quantity ,{p}_list_price list_price",
+           f"select {_dprod(f'{p}_quantity', f'{p}_list_price')} amt", _MONEY)
+      for p in ("ss", "cs", "ws")),
+)
+
+
+def _q14_sales(p: str, n: int = 1) -> tuple[Edit, ...]:
+    """A channel's sales, kept DECIMAL, and its HAVING sum as a DOUBLE."""
+    prod = _dprod(f"{p}_quantity", f"{p}_list_price")
+    return (Edit(f"sum({p}_quantity*{p}_list_price) sales",
+                 f"SUM({prod}) sales", _MONEY, n),
+            Edit(f"having sum({p}_quantity*{p}_list_price)",
+                 f"having CAST(SUM({prod}) AS DOUBLE)", _MONEY, n))
+
+
+# q8's 400 zips, as its reference statement spells them.
+_Q8_ZIPS = re.search(r"IN \(([^)]*)\)", _reference("tpcds_q8")).group(1)
+_MONTHS = "jan feb mar apr may jun jul aug sep oct nov dec".split()
+
 # The generated entries: name -> the edits that adapt its reference
 # statement to the derived star.  An empty list runs the text verbatim.
 _EDITS: dict[str, tuple[Edit, ...]] = {
@@ -1496,6 +1464,22 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
     ),
     "tpcds_q7": tuple(_avg(c) for c in (
         "ss_quantity", "ss_list_price", "ss_coupon_amt", "ss_sales_price")),
+    "tpcds_q8": (
+        _sum("ss_net_profit", "sum_profit"),
+        Edit(_Q8_ZIPS,
+             "'00131','00262','00393','00524','00655','00786','00917','01048',"
+             "'01179','01310','01441','01572','01703','01834','01965','02096',"
+             "'02227','02358','02489','02620','03013','03275','03537','03930',"
+             "'04323','04585','05240','05764','06288','06550','07205','07729',"
+             "'08253','08777','09432','09956','10480','11004','11528','12052',"
+             "'12576'", "zips retargeted to 41 derived 5-character prefixes"),
+        Edit("group by ca_zip", "group by substr(ca_zip,1,5)",
+             "grouped by the 5-character prefix the select names ca_zip: both"
+             " engines bind a bare ca_zip to the base column"),
+        Edit("having count(*) > 10", "having count(*) > 4",
+             "about 8 preferred customers share a derived prefix at sf0.01"),
+        Edit("d_year = 2002", "d_year = 2001", _CALENDAR),
+    ),
     "tpcds_q9": (
         _avg("ss_ext_tax", n=5),
         _avg("ss_net_paid", n=5),
@@ -1527,6 +1511,24 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
         Edit("100 and 200", "1000 and 2000", _RETARGET),
         Edit("150 and 300", "2000 and 3000", _RETARGET),
         Edit("50 and 250", "1500 and 2500", _RETARGET),
+    ),
+    "tpcds_q14": (
+        *_Q14_AVG,
+        *(e for p in ("ss", "cs", "ws") for e in _q14_sales(p)),
+        Edit("sum(sales),", "CAST(SUM(sales) AS DOUBLE) AS sum_sales,",
+             _MONEY),
+        Edit("sum(number_sales)",
+             "CAST(SUM(number_sales) AS BIGINT) AS sum_number_sales",
+             _HUGEINT),
+        Edit("order by channel,i_brand_id,i_class_id,i_category_id",
+             "order by channel NULLS FIRST, i_brand_id NULLS FIRST,"
+             " i_class_id NULLS FIRST, i_category_id NULLS FIRST", _NULLS),
+    ),
+    "tpcds_q14b": (
+        *_Q14_AVG,
+        *_q14_sales("ss", 2),
+        *(Edit(f",{y}.sales {a}_sales", f",CAST({y}.sales AS DOUBLE) {a}_sales",
+               _MONEY) for y, a in (("this_year", "ty"), ("last_year", "ly"))),
     ),
     "tpcds_q15": (
         _sum("cs_sales_price", "sum_sales"),
@@ -1723,6 +1725,23 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
         Edit("'MT', 'OR', 'IN'", "'TX', 'OH', 'WA'", _RETARGET),
         Edit("'WI', 'MO', 'WV'", "'FL', 'MO', 'WV'", _RETARGET),
     ),
+    "tpcds_q49": (
+        *(e for ret, sold in (("wr.wr_return_quantity", "ws.ws_quantity"),
+                              ("wr.wr_return_amt", "ws.ws_net_paid"),
+                              ("cr.cr_return_quantity", "cs.cs_quantity"),
+                              ("cr.cr_return_amount", "cs.cs_net_paid"),
+                              ("sr.sr_return_quantity", "sts.ss_quantity"),
+                              ("sr.sr_return_amt", "sts.ss_net_paid"))
+          for e in (Edit(f"cast(sum(coalesce({ret},0)) as decimal(15,4))",
+                         sql_dsum(f"coalesce({ret},0)"), _MONEY),
+                    Edit(f"cast(sum(coalesce({sold},0)) as decimal(15,4) )",
+                         sql_dsum(f"coalesce({sold},0)"), _MONEY))),
+        Edit("> 10000", "> 1000", "return amount retargeted: a derived return"
+             " is a tenth of its line's price, 10500 at most", n=3),
+        *(Edit(f"rank() over (order by {m}_ratio) as {m}_rank",
+               f"CAST(rank() over (order by {m}_ratio) AS BIGINT)"
+               f" as {m}_rank", _INT, n=3) for m in ("return", "currency")),
+    ),
     "tpcds_q50": _LAG_BUCKETS,
     "tpcds_q51": (
         *(Edit(f"sum(sum({p}_sales_price))",
@@ -1767,9 +1786,7 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
     "tpcds_q56": _CHANNEL_TOTALS,
     "tpcds_q57": (
         *_monthly("cs", "i_category, i_brand, cc_name, d_year"),
-        Edit("select v1.cc_name", "select v1.i_category, v1.i_brand",
-             "category and brand columns, as q47 reports"),
-        Edit("nsum limit", "nsum, i_category, i_brand, d_moy, psum limit",
+        Edit("nsum limit", "nsum, cc_name, d_moy, psum, sum_sales limit",
              _TIEBREAK),
     ),
     "tpcds_q58": (
@@ -1797,9 +1814,6 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
         *_CHANNEL_TOTALS,
         Edit("'Children'", "'PROMO'", _CATEGORY,
              n=3),
-        Edit("order by i_item_id ,total_sales",
-             "order by total_sales, i_item_id",
-             "ordered by total first, as q33 and q56 are"),
     ),
     "tpcds_q61": (
         Edit("select promotions,total,cast(promotions as decimal(15,4))"
@@ -1864,6 +1878,30 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
         Edit("order by s_store_name, i_item_desc",
              "order by s_store_name, i_item_desc, sc.ss_store_sk,"
              " sc.ss_item_sk", _TIEBREAK),
+    ),
+    "tpcds_q66": (
+        *(Edit(f"then {p}_{price}* {p}_quantity else 0 end",
+               f"then {_dprod(f'{p}_{price}', f'{p}_quantity')}"
+               f" else {sql_dec('0')} end", _MONEY, n=12)
+          for p, price in (("ws", "sales_price"), ("cs", "ext_sales_price"))),
+        Edit("then ws_net_paid_inc_tax * ws_quantity else 0 end",
+             f"then {_dprod('ws_net_paid_inc_tax', 'ws_quantity')}"
+             f" else {sql_dec('0')} end", _MONEY, n=12),
+        Edit("then cs_net_paid_inc_ship_tax * cs_quantity else 0 end",
+             f"then {_dprod('cs_net_paid_inc_tax', 'cs_quantity')}"
+             f" else {sql_dec('0')} end", "exact product sums of"
+             " cs_net_paid_inc_tax: the derived catalog_sales carries no"
+             " shipping cost", n=12),
+        *(e for m in _MONTHS for e in (
+            Edit(f"sum({m}_sales) as", f"CAST(SUM({m}_sales) AS DOUBLE) as",
+                 _MONEY),
+            Edit(f"sum({m}_sales/w_warehouse_sq_ft)",
+                 f"CAST(SUM(CAST({m}_sales AS DOUBLE) / w_warehouse_sq_ft)"
+                 " AS DOUBLE)", _MONEY),
+            Edit(f"sum({m}_net) as", f"CAST(SUM({m}_net) AS DOUBLE) as",
+                 _MONEY))),
+        Edit("d_year = 2002", "d_year = 2000",
+             "year 2000: the derived calendar ends 2001-08", n=2),
     ),
     "tpcds_q67": (
         Edit("sum(coalesce(ss_sales_price*ss_quantity,0)) sumsales",
@@ -2123,18 +2161,8 @@ _EDITS: dict[str, tuple[Edit, ...]] = {
 # The hand-written entries: name -> why an edit list does not fit.  Their
 # bodies are registered below with _register, as the generated ones are.
 _HAND = {
-    "tpcds_q8": "the 400 reference zips retarget to 41 derived prefixes and"
-                " the shadowed substr alias in GROUP BY is spelled out",
-    "tpcds_q14": "its final reads cross_items back from a pre-statement"
-                 " (_materialize), a rewrite pinned against this text",
-    "tpcds_q14b": "the two year legs fold into one weekly aggregate; the"
-                  " scalar week subqueries become one IN",
     "tpcds_q41": "the correlated OR is factored: Spark rejects a correlated"
                  " equality under OR",
-    "tpcds_q49": "the unpartitioned double rank runs as top-k plus count-rank"
-                 " (_q49_channel)",
-    "tpcds_q66": "72 month-bucket columns renamed m01..m12 and summed exact"
-                 " (_q66_leg)",
     "tpcds_q72": "joins inventory on item and week at once, not on item"
                  " alone: 3.96 -> 3.74 s at sf0.1, 21.7 -> 17.5 s at"
                  " .scale/sf1 (interleaved A/B, min)",
@@ -2238,211 +2266,6 @@ _register(
 )
 
 
-def _q49_in(alias: str, fact: str, rtbl: str, p: str, rp: str,
-            amt: str = "return_amt") -> str:
-    """Per-item return ratios for one q49 channel (reference
-    tpcds_sql/49.sql inner aggregate)."""
-    return f"""
-    in_{alias} AS (
-      SELECT f.{p}_item_sk AS item,
-             CAST(SUM(CAST(coalesce(r.{rp}_return_quantity, 0)
-                           AS DECIMAL(38,6))) AS DOUBLE)
-                 / CAST(SUM(CAST(coalesce(f.{p}_quantity, 0)
-                                 AS DECIMAL(38,6))) AS DOUBLE)
-                 AS return_ratio,
-             CAST(SUM(CAST(coalesce(r.{rp}_{amt}, 0)
-                           AS DECIMAL(38,6))) AS DOUBLE)
-                 / CAST(SUM(CAST(coalesce(f.{p}_net_paid, 0)
-                                 AS DECIMAL(38,6))) AS DOUBLE)
-                 AS currency_ratio
-      FROM {fact} f LEFT OUTER JOIN {rtbl} r
-        ON (f.{p}_order_number = r.{rp}_order_number
-            AND f.{p}_item_sk = r.{rp}_item_sk), date_dim
-      WHERE r.{rp}_{amt} > 1000
-        AND f.{p}_net_profit > 1
-        AND f.{p}_net_paid > 0
-        AND f.{p}_quantity > 0
-        AND {p}_sold_date_sk = d_date_sk
-        AND d_year = 2000
-        AND d_moy = 12
-      GROUP BY f.{p}_item_sk
-    )"""
-
-
-def _q49_channel(alias: str) -> str:
-    """One q49 channel leg, scale-safe: the reference ranks every
-    per-item row twice in ONE partition (rank() OVER (ORDER BY ...)
-    with no PARTITION BY) and keeps rank<=10 on either metric.  The OR
-    of two rank filters defeats Spark's WindowGroupLimit inference, so
-    the verbatim text would move the whole per-item aggregate (grows
-    with item count) into a single task at scale.  Equivalent two-phase
-    construction: (1) each metric's top-10 via its own rank branch —
-    the single-metric rank<=10 filter DOES trigger WindowGroupLimit, so
-    every partition forwards at most 10 rows; (2) the <=20 UNIONed
-    candidates broadcast against the channel aggregate and each exact
-    rank is recovered as 1 + count(strictly smaller), the definition of
-    rank() — ties and all.  Output rows and values are identical to the
-    reference text."""
-    return f"""
-    SELECT '{alias}' AS channel, cand.item, cand.return_ratio,
-           CAST(1 + SUM(CASE WHEN x.return_ratio < cand.return_ratio
-                        THEN 1 ELSE 0 END) AS BIGINT) AS return_rank,
-           CAST(1 + SUM(CASE WHEN x.currency_ratio < cand.currency_ratio
-                        THEN 1 ELSE 0 END) AS BIGINT) AS currency_rank
-    FROM (
-      SELECT item, return_ratio, currency_ratio FROM (
-        SELECT item, return_ratio, currency_ratio,
-               rank() OVER (ORDER BY return_ratio) AS rk
-        FROM in_{alias}) t1 WHERE rk <= 10
-      UNION
-      SELECT item, return_ratio, currency_ratio FROM (
-        SELECT item, return_ratio, currency_ratio,
-               rank() OVER (ORDER BY currency_ratio) AS rk
-        FROM in_{alias}) t2 WHERE rk <= 10
-    ) cand, in_{alias} x
-    GROUP BY cand.item, cand.return_ratio, cand.currency_ratio
-    HAVING 1 + SUM(CASE WHEN x.return_ratio < cand.return_ratio
-                   THEN 1 ELSE 0 END) <= 10
-        OR 1 + SUM(CASE WHEN x.currency_ratio < cand.currency_ratio
-                   THEN 1 ELSE 0 END) <= 10
-    """
-
-
-_register(
-    "tpcds_q49",
-    ", "
-    + _q49_in("web", "web_sales", "web_returns", "ws", "wr").lstrip()
-    + ","
-    + _q49_in("ctlg", "catalog_sales", "catalog_returns", "cs", "cr",
-              amt="return_amount")
-    + ","
-    + _q49_in("store", "store_sales_k", "store_returns", "ssk", "sr")
-    .replace("FROM store_sales_k f", "FROM (SELECT ss_item_sk AS ssk_item_sk,"
-             " ss_ticket_number AS ssk_order_number,"
-             " ss_quantity AS ssk_quantity, ss_net_paid AS ssk_net_paid,"
-             " ss_net_profit AS ssk_net_profit,"
-             " ss_sold_date_sk AS ssk_sold_date_sk FROM store_sales) f")
-    .replace("sr_order_number", "sr_ticket_number")
-    + _q49_channel("web")
-    + " UNION "
-    + _q49_channel("ctlg").replace("'ctlg' AS channel",
-                                   "'catalog' AS channel")
-    + " UNION "
-    + _q49_channel("store")
-    + """
-    ORDER BY 1, 4, 5, 2
-    LIMIT 100
-    """,
-    doc="""TPC-DS q49 (reference tpcds_sql/49.sql) executed: worst
-    return ratios (by quantity and by currency) per channel, ranked
-    twice and UNION-deduplicated across web/catalog/store.  The
-    reference's left-join-then-filter (the return predicate
-    re-inner-joins) is kept verbatim; the store leg aliases its
-    ticket-number as the order key through a projected sub-select so
-    the three channels share one text template.  The unpartitioned
-    double-rank is restructured into the two-phase top-k + count-rank
-    construction (see _q49_channel: WindowGroupLimit-eligible rank
-    branches, then rank = 1 + count(smaller) over broadcast
-    candidates) — row-identical to the reference, no fact-sized
-    SinglePartition window.  The price is exchanges: each channel's
-    per-item rows are consumed three times (two rank branches and the
-    count-rank join), a trade taken for the 100 TB hazard it removes.
-    DECIMAL(15,4) ratio casts become
-    exact-decimal-sum ratios in DOUBLE; the wr_return_amt > 10000
-    threshold retargets to > 1000 (the derived 0.1x-extendedprice
-    refunds cap near 10k, selecting nothing); ordinal ORDER BY
-    1,4,5,2 verbatim.""",
-)
-
-
-def _q66_leg(p: str, ship_mode_pair: str, carrier_a: str, carrier_b: str,
-             date_col: str, time_col: str, wh_col: str, sm_col: str,
-             price: str, net: str, qty: str, fact: str) -> str:
-    """One q66 warehouse-month pivot leg (reference tpcds_sql/66.sql):
-    12 monthly sales + 12 monthly net columns for one channel fact."""
-    months_sales = "\n".join(
-        f"             SUM(CASE WHEN d_moy = {m} THEN amt"
-        f" ELSE CAST(0 AS DECIMAL(38,6)) END) AS m{m:02d}_sales,"
-        for m in range(1, 13))
-    months_net = ",\n".join(
-        f"             SUM(CASE WHEN d_moy = {m} THEN net_amt"
-        f" ELSE CAST(0 AS DECIMAL(38,6)) END) AS m{m:02d}_net"
-        for m in range(1, 13))
-    return f"""
-      SELECT w_warehouse_name, w_warehouse_sq_ft, w_city, w_county,
-             w_state, w_country,
-             '{carrier_a}' || ',' || '{carrier_b}' AS ship_carriers,
-             d_year AS year_,
-{months_sales}
-{months_net}
-      FROM (SELECT {date_col} AS date_sk, {time_col} AS time_sk,
-                   {wh_col} AS wh_sk, {sm_col} AS sm_sk,
-                   CAST(CAST({price} AS DECIMAL(38,6))
-                        * CAST({qty} AS DECIMAL(38,6)) AS DECIMAL(38,6))
-                       AS amt,
-                   CAST(CAST({net} AS DECIMAL(38,6))
-                        * CAST({qty} AS DECIMAL(38,6)) AS DECIMAL(38,6))
-                       AS net_amt
-            FROM {fact}) f, warehouse, date_dim, time_dim, ship_mode
-      WHERE wh_sk = w_warehouse_sk
-        AND date_sk = d_date_sk
-        AND time_sk = t_time_sk
-        AND sm_sk = sm_ship_mode_sk
-        AND d_year = 2000
-        AND t_time BETWEEN 49530 AND 49530 + 28800
-        AND sm_carrier IN ({ship_mode_pair})
-      GROUP BY w_warehouse_name, w_warehouse_sq_ft, w_city, w_county,
-               w_state, w_country, d_year"""
-
-
-_register(
-    "tpcds_q66",
-    """
-    SELECT w_warehouse_name, w_warehouse_sq_ft, w_city, w_county, w_state,
-           w_country, ship_carriers, year_,
-"""
-    + ",\n".join(
-        f"           CAST(SUM(m{m:02d}_sales) AS DOUBLE) AS m{m:02d}_sales"
-        for m in range(1, 13)) + ","
-    + ",\n".join(
-        f"           CAST(SUM(CAST(m{m:02d}_sales AS DOUBLE)"
-        f" / w_warehouse_sq_ft) AS DOUBLE) AS m{m:02d}_sales_per_sq_foot"
-        for m in range(1, 13)) + ","
-    + ",\n".join(
-        f"           CAST(SUM(m{m:02d}_net) AS DOUBLE) AS m{m:02d}_net"
-        for m in range(1, 13))
-    + """
-    FROM ("""
-    + _q66_leg("", "'DIAMOND','AIRBORNE'", "DIAMOND", "AIRBORNE",
-               "ws_sold_date_sk", "ws_sold_time_sk", "ws_warehouse_sk",
-               "ws_ship_mode_sk", "ws_sales_price", "ws_net_paid_inc_tax",
-               "ws_quantity", "web_sales")
-    + """
-      UNION ALL"""
-    + _q66_leg("", "'UPS','FEDEX'", "UPS", "FEDEX",
-               "cs_sold_date_sk", "cs_sold_time_sk", "cs_warehouse_sk",
-               "cs_ship_mode_sk", "cs_sales_price", "cs_net_paid_inc_tax",
-               "cs_quantity", "catalog_sales")
-    + """
-    ) x
-    GROUP BY w_warehouse_name, w_warehouse_sq_ft, w_city, w_county,
-             w_state, w_country, ship_carriers, year_
-    ORDER BY w_warehouse_name
-    LIMIT 100
-    """,
-    doc="""TPC-DS q66 (reference tpcds_sql/66.sql) executed: the
-    warehouse monthly-pivot report — 12 sales + 12 per-sq-ft + 12 net
-    columns per warehouse/carrier/year, web and catalog legs UNION
-    ALLed.  price*quantity products are decimal-exact (the q17 macro
-    shape) and month buckets stay DECIMAL(38,6) until the final CAST
-    DOUBLE; warehouse gains sq_ft/city/county/country; time_dim gains
-    t_time.  d_year 2002 -> 2000 (full-year coverage of the derived
-    calendar); carriers DHL,BARIAN -> UPS,FEDEX (derived sm_carrier
-    domain); the jan..dec column names become m01..m12 so the wide
-    schema stays ordered.  Month columns named mNN_* on both sides;
-    `year` aliased year_ (DuckDB keyword).""",
-)
-
 _register(
     "tpcds_q72",
     """
@@ -2513,272 +2336,3 @@ _register(
     driver (found by a multi-SF timing run); a fact side must never
     be broadcast regardless of what the estimator says.""",
 )
-
-
-_register(
-    "tpcds_q8",
-    """
-    SELECT s_store_name,
-           CAST(SUM(CAST(ss_net_profit AS DECIMAL(38,6))) AS DOUBLE)
-               AS sum_profit
-    FROM store_sales, date_dim, store,
-         (SELECT zip5 AS ca_zip
-          FROM (SELECT substr(ca_zip, 1, 5) AS zip5
-                FROM customer_address
-                WHERE substr(ca_zip, 1, 5) IN (
-                    '00131','00262','00393','00524','00655','00786',
-                    '00917','01048','01179','01310','01441','01572',
-                    '01703','01834','01965','02096','02227','02358',
-                    '02489','02620','03013','03275','03537','03930',
-                    '04323','04585','05240','05764','06288','06550',
-                    '07205','07729','08253','08777','09432','09956',
-                    '10480','11004','11528','12052','12576')
-                INTERSECT
-                SELECT zip5
-                FROM (SELECT substr(ca_zip, 1, 5) AS zip5,
-                             COUNT(*) AS cnt
-                      FROM customer_address, customer
-                      WHERE ca_address_sk = c_current_addr_sk
-                        AND c_preferred_cust_flag = 'Y'
-                      GROUP BY substr(ca_zip, 1, 5)
-                      HAVING COUNT(*) > 4) A1) A2) V1
-    WHERE ss_store_sk = s_store_sk
-      AND ss_sold_date_sk = d_date_sk
-      AND d_qoy = 1 AND d_year = 2001
-      AND (substr(s_zip, 1, 2) = substr(V1.ca_zip, 1, 2))
-    GROUP BY s_store_name
-    ORDER BY s_store_name
-    LIMIT 100
-    """,
-    doc="""TPC-DS q8 (reference tpcds_sql/8.sql) executed: store
-    profit for Q1 restricted to stores whose 2-digit zip prefix
-    appears both in a fixed zip list and among zips with many
-    preferred customers (IN-list INTERSECT grouped-HAVING, then the
-    store-side prefix semi-join).  The reference's 400 literal zips
-    retarget to 41 values of the derived ca_zip prefix domain
-    (multiples of 131, zero-padded); HAVING >10 -> >4 (about 8
-    preferred customers land per prefix at sf0.01, the reference's
-    >10 was tuned to ~300-customer zips); d_year 2002 -> 2001 (last
-    derived Q1).  The reference's substr-alias shadowing its base column
-    in GROUP BY (group by ca_zip meaning the 5-char prefix) is spelled
-    explicitly (zip5 / GROUP BY substr) — both engines otherwise bind
-    the base column and the HAVING never fires.  Note the prefix
-    semi-join duplicates store rows per qualifying zip exactly as the
-    reference text does.""",
-)
-
-
-def _q14_channel(channel: str, fact: str, p: str) -> str:
-    """One q14 channel leg: cross-channel items only, November of the
-    target year, brand/class/category revenue vs the all-channel mean."""
-    return f"""
-       SELECT '{channel}' AS channel, i_brand_id, i_class_id,
-              i_category_id,
-              SUM(CAST(CAST({p}_quantity AS DECIMAL(38,6))
-                  * CAST({p}_list_price AS DECIMAL(38,6))
-                  AS DECIMAL(38,6))) AS sales,
-              CAST(COUNT(*) AS BIGINT) AS number_sales
-       FROM {fact}, item, date_dim
-       WHERE {p}_item_sk IN (SELECT ss_item_sk FROM cross_items)
-         AND {p}_item_sk = i_item_sk
-         AND {p}_sold_date_sk = d_date_sk
-         AND d_year = 1998 + 2
-         AND d_moy = 11
-       GROUP BY i_brand_id, i_class_id, i_category_id
-       HAVING CAST(SUM(CAST(CAST({p}_quantity AS DECIMAL(38,6))
-                  * CAST({p}_list_price AS DECIMAL(38,6))
-                  AS DECIMAL(38,6))) AS DOUBLE)
-              > (SELECT average_sales FROM avg_sales)"""
-
-
-_register(
-    "tpcds_q14",
-    """
-    , cross_items AS (
-      SELECT i_item_sk AS ss_item_sk
-      FROM item,
-           (SELECT iss.i_brand_id AS brand_id, iss.i_class_id AS class_id,
-                   iss.i_category_id AS category_id
-            FROM store_sales, item iss, date_dim d1
-            WHERE ss_item_sk = iss.i_item_sk
-              AND ss_sold_date_sk = d1.d_date_sk
-              AND d1.d_year BETWEEN 1998 AND 1998 + 2
-            INTERSECT
-            SELECT ics.i_brand_id, ics.i_class_id, ics.i_category_id
-            FROM catalog_sales, item ics, date_dim d2
-            WHERE cs_item_sk = ics.i_item_sk
-              AND cs_sold_date_sk = d2.d_date_sk
-              AND d2.d_year BETWEEN 1998 AND 1998 + 2
-            INTERSECT
-            SELECT iws.i_brand_id, iws.i_class_id, iws.i_category_id
-            FROM web_sales, item iws, date_dim d3
-            WHERE ws_item_sk = iws.i_item_sk
-              AND ws_sold_date_sk = d3.d_date_sk
-              AND d3.d_year BETWEEN 1998 AND 1998 + 2) x
-      WHERE i_brand_id = brand_id
-        AND i_class_id = class_id
-        AND i_category_id = category_id
-    ),
-    avg_sales AS (
-      SELECT CAST(SUM(amt) AS DOUBLE) / COUNT(*) AS average_sales
-      FROM (SELECT CAST(CAST(ss_quantity AS DECIMAL(38,6))
-                   * CAST(ss_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM store_sales, date_dim
-            WHERE ss_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2
-            UNION ALL
-            SELECT CAST(CAST(cs_quantity AS DECIMAL(38,6))
-                   * CAST(cs_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM catalog_sales, date_dim
-            WHERE cs_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2
-            UNION ALL
-            SELECT CAST(CAST(ws_quantity AS DECIMAL(38,6))
-                   * CAST(ws_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM web_sales, date_dim
-            WHERE ws_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2) x
-    )
-    SELECT channel, i_brand_id, i_class_id, i_category_id,
-           CAST(SUM(sales) AS DOUBLE) AS sum_sales,
-           CAST(SUM(number_sales) AS BIGINT) AS sum_number_sales
-    FROM ("""
-    + _q14_channel("store", "store_sales", "ss")
-    + """
-       UNION ALL"""
-    + _q14_channel("catalog", "catalog_sales", "cs")
-    + """
-       UNION ALL"""
-    + _q14_channel("web", "web_sales", "ws")
-    + """
-    ) y
-    GROUP BY ROLLUP(channel, i_brand_id, i_class_id, i_category_id)
-    ORDER BY channel ASC NULLS FIRST, i_brand_id ASC NULLS FIRST,
-             i_class_id ASC NULLS FIRST, i_category_id ASC NULLS FIRST
-    LIMIT 100
-    """,
-    doc="""TPC-DS q14 (reference tpcds_sql/14.sql, first statement)
-    executed: brand/class/category identities sold through ALL three
-    channels over 1998-2000 (three-way INTERSECT), then November-2000
-    revenue per channel for those items, kept above the all-channel
-    mean ticket (scalar subquery in HAVING), ROLLUPed.  quantity *
-    list_price products decimal-exact (q17 macro shape); the unnamed
-    sum()s alias sum_sales / sum_number_sales on both sides; NULLS
-    FIRST pins the rollup under LIMIT 100.  Constants verbatim.""",
-)
-# cross_items, a three-channel INTERSECT over three years of facts, is
-# consumed by all three channel legs.  Written once per invocation, q14 at
-# .scale/sf1 ran 7.63 s min against 8.67 s inline (6 interleaved runs,
-# rows identical); no other entry's CTE ran faster written (SCALE.md).
-_materialize("tpcds_q14", "cross_items")
-
-
-_register(
-    "tpcds_q14b",
-    """
-    , cross_items AS (
-      SELECT i_item_sk AS ss_item_sk
-      FROM item,
-           (SELECT iss.i_brand_id AS brand_id, iss.i_class_id AS class_id,
-                   iss.i_category_id AS category_id
-            FROM store_sales, item iss, date_dim d1
-            WHERE ss_item_sk = iss.i_item_sk
-              AND ss_sold_date_sk = d1.d_date_sk
-              AND d1.d_year BETWEEN 1998 AND 1998 + 2
-            INTERSECT
-            SELECT ics.i_brand_id, ics.i_class_id, ics.i_category_id
-            FROM catalog_sales, item ics, date_dim d2
-            WHERE cs_item_sk = ics.i_item_sk
-              AND cs_sold_date_sk = d2.d_date_sk
-              AND d2.d_year BETWEEN 1998 AND 1998 + 2
-            INTERSECT
-            SELECT iws.i_brand_id, iws.i_class_id, iws.i_category_id
-            FROM web_sales, item iws, date_dim d3
-            WHERE ws_item_sk = iws.i_item_sk
-              AND ws_sold_date_sk = d3.d_date_sk
-              AND d3.d_year BETWEEN 1998 AND 1998 + 2) x
-      WHERE i_brand_id = brand_id
-        AND i_class_id = class_id
-        AND i_category_id = category_id
-    ),
-    avg_sales AS (
-      SELECT CAST(SUM(amt) AS DOUBLE) / COUNT(*) AS average_sales
-      FROM (SELECT CAST(CAST(ss_quantity AS DECIMAL(38,6))
-                   * CAST(ss_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM store_sales, date_dim
-            WHERE ss_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2
-            UNION ALL
-            SELECT CAST(CAST(cs_quantity AS DECIMAL(38,6))
-                   * CAST(cs_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM catalog_sales, date_dim
-            WHERE cs_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2
-            UNION ALL
-            SELECT CAST(CAST(ws_quantity AS DECIMAL(38,6))
-                   * CAST(ws_list_price AS DECIMAL(38,6))
-                   AS DECIMAL(38,6)) AS amt
-            FROM web_sales, date_dim
-            WHERE ws_sold_date_sk = d_date_sk
-              AND d_year BETWEEN 1998 AND 1998 + 2) x
-    ),
-    wk AS (
-      SELECT 'store' AS channel, i_brand_id, i_class_id, i_category_id,
-             SUM(CAST(CAST(ss_quantity AS DECIMAL(38,6))
-                 * CAST(ss_list_price AS DECIMAL(38,6))
-                 AS DECIMAL(38,6))) AS sales,
-             CAST(COUNT(*) AS BIGINT) AS number_sales,
-             d_year
-      FROM store_sales, item, date_dim
-      WHERE ss_item_sk IN (SELECT ss_item_sk FROM cross_items)
-        AND ss_item_sk = i_item_sk
-        AND ss_sold_date_sk = d_date_sk
-        AND d_week_seq IN
-            ((SELECT d_week_seq FROM date_dim
-              WHERE d_year = 1998 + 1 AND d_moy = 12 AND d_dom = 16),
-             (SELECT d_week_seq FROM date_dim
-              WHERE d_year = 1998 AND d_moy = 12 AND d_dom = 16))
-      GROUP BY i_brand_id, i_class_id, i_category_id, d_year
-      HAVING CAST(SUM(CAST(CAST(ss_quantity AS DECIMAL(38,6))
-                 * CAST(ss_list_price AS DECIMAL(38,6))
-                 AS DECIMAL(38,6))) AS DOUBLE)
-             > (SELECT average_sales FROM avg_sales)
-    )
-    SELECT this_year.channel AS ty_channel,
-           this_year.i_brand_id AS ty_brand,
-           this_year.i_class_id AS ty_class,
-           this_year.i_category_id AS ty_category,
-           CAST(this_year.sales AS DOUBLE) AS ty_sales,
-           this_year.number_sales AS ty_number_sales,
-           last_year.channel AS ly_channel,
-           last_year.i_brand_id AS ly_brand,
-           last_year.i_class_id AS ly_class,
-           last_year.i_category_id AS ly_category,
-           CAST(last_year.sales AS DOUBLE) AS ly_sales,
-           last_year.number_sales AS ly_number_sales
-    FROM (SELECT * FROM wk WHERE d_year = 1998 + 1) this_year,
-         (SELECT * FROM wk WHERE d_year = 1998) last_year
-    WHERE this_year.i_brand_id = last_year.i_brand_id
-      AND this_year.i_class_id = last_year.i_class_id
-      AND this_year.i_category_id = last_year.i_category_id
-    ORDER BY this_year.channel, this_year.i_brand_id,
-             this_year.i_class_id, this_year.i_category_id
-    LIMIT 100
-    """,
-    doc="""TPC-DS q14 second statement (reference tpcds_sql/14.sql):
-    the cross-channel item gate applied to ONE calendar week (Dec 16)
-    compared across consecutive years, store channel.  The two
-    year-leg scans are folded into one shared weekly aggregate (wk)
-    filtered per year — the reference's two scalar week-seq
-    subqueries become an IN over both weeks; the per-year slices are
-    then self-joined.  Same derivation of d_week_seq/d_dom; decimal
-    products exact; week anchor d_dom 25 -> 16 is NOT needed — the
-    reference's own constant is 16 and both weeks exist in the
-    derived calendar.""",
-)
-

@@ -95,7 +95,7 @@ def _tpch(name: str, tags: tuple, oracle: str, final: str | None = None) -> None
         return statement(spark, fn.plan.final, load_tables(spark, sf_dir, views))
 
     fn.__name__ = name
-    fn.plan = Plan((), final or oracle, oracle)
+    fn.plan = Plan(final or oracle, oracle)
     query(name, oracle=oracle, tags=("tpch",) + tags)(fn)
 
 

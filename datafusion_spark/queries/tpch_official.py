@@ -510,7 +510,7 @@ def _register_official(name: str, sql: str, doc: str,
     fn = _runner(final or sql, (final or "") + sql, overlays)
     fn.__name__ = name
     fn.__doc__ = doc
-    fn.plan = Plan((), final or sql, sql)
+    fn.plan = Plan(final or sql, sql)
     ctes = [
         f"{v} AS ({_EXT_VIEWS[v][0].replace(f'FROM {v}', f'FROM main.{v}')})"
         for v in exts

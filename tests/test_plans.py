@@ -19,9 +19,9 @@ from datafusion_spark.queries.registry import Plan
 from tests.conftest import SF_ORACLE, SF_SMALL
 from tools.capture_plans import load_manifest
 
-# the final statement's operator counts of each registry entry, which
+# the operator counts of each registry entry, which
 # tests/test_registry_smoke.py::test_query_runs pins to the live plan
-FINAL = {name: stmts[-1] for name, stmts in load_manifest().items()}
+MANIFEST = load_manifest()
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -72,18 +72,18 @@ def test_q6_scan_only_needed_columns(spark):
 
 
 def test_dimension_join_broadcasts():
-    assert FINAL["tpch_q5"].get("BroadcastHashJoin", 0), FINAL["tpch_q5"]
+    assert MANIFEST["tpch_q5"].get("BroadcastHashJoin", 0), MANIFEST["tpch_q5"]
 
 
 def test_topk_has_no_global_sort_shuffle():
     # TakeOrderedAndProject handles the LIMIT; the only exchanges should be
     # for joins/aggregations, and a small fixed number of them.
-    assert FINAL["tpch_q3"].get("TakeOrderedAndProject", 0), FINAL["tpch_q3"]
+    assert MANIFEST["tpch_q3"].get("TakeOrderedAndProject", 0), MANIFEST["tpch_q3"]
 
 
 def test_single_shuffle_sessionization():
     # one hash exchange on user_id feeds both window passes + the aggregate
-    assert FINAL["events_sessionization"].get("Exchange", 0) <= 2
+    assert MANIFEST["events_sessionization"].get("Exchange", 0) <= 2
 
 
 def test_explain_analyze_reports_final_plan(spark):
@@ -104,7 +104,7 @@ def test_binned_range_join_is_equi_hash_join():
     """The binned range join must plan as a (broadcast) HASH join on
     bin_id — the whole point is avoiding the nested-loop inequality join
     the naive formulation produces."""
-    c = FINAL["join_range_binned"]
+    c = MANIFEST["join_range_binned"]
     assert "BroadcastNestedLoopJoin" not in c, c
     assert c.get("BroadcastHashJoin", 0) + c.get("ShuffledHashJoin", 0), c
 
@@ -112,13 +112,13 @@ def test_binned_range_join_is_equi_hash_join():
 def test_lateral_join_decorrelated():
     """LATERAL correlated subquery must decorrelate to WindowGroupLimit
     (partial per-partition top-1), never a per-row re-execution."""
-    c = FINAL["join_lateral_topk"]
+    c = MANIFEST["join_lateral_topk"]
     assert "WindowGroupLimit" in c, c
     assert "BroadcastNestedLoopJoin" not in c, c
 
 
 def test_sort_merge_hint_plan_uses_smj():
-    c = FINAL["join_sort_merge_hint"]
+    c = MANIFEST["join_sort_merge_hint"]
     assert "SortMergeJoin" in c, c
     assert "BroadcastHashJoin" not in c, c
 
@@ -201,7 +201,7 @@ def test_join_strategy_invariance_plans_both_operators():
     leg plans SortMergeJoin, the broadcast-hinted leg plans
     BroadcastHashJoin — and the entry's value-equality flag compares
     them (oracle pins strategies_agree = true)."""
-    c = FINAL["join_strategy_invariance"]
+    c = MANIFEST["join_strategy_invariance"]
     assert "SortMergeJoin" in c, c
     assert "BroadcastHashJoin" in c, c
 
@@ -433,14 +433,13 @@ def test_clickbench_hits_pruning_exact_and_equivalent(spark):
         assert got_pruned == got_full, name
 
 
-# Every entry whose executed statements differ from its oracle's Spark
-# spelling (pre-statements, or a final text != inline), derived from the
-# attached plans rather than listed by hand.  Every tpcds_* entry is one:
-# it runs over the stored star, its inline spelling derives the tables
-# inside the statement.
+# Every entry whose executed statement differs from its oracle's Spark
+# spelling (a final text != inline), derived from the attached plans rather
+# than listed by hand.  Every tpcds_* entry is one: it runs over the stored
+# star, its inline spelling derives the tables inside the statement.
 _REWRITTEN = sorted(
     name for name, fn in QUERIES.items()
-    if (p := getattr(fn, "plan", None)) and (p.pre or p.final != p.inline))
+    if (p := getattr(fn, "plan", None)) and p.final != p.inline)
 _TPCDS = sorted(n for n in QUERIES if n.startswith("tpcds_q"))
 # the TPC-DS entries that carried per-query rewrites before the star was
 # stored; they keep their pin at SF_ORACLE too
@@ -474,12 +473,10 @@ def test_rewritten_plan_shapes():
     """Every tpcds_* final is one-line alias CTEs over the stored tables
     other than the returns tables, then the oracle's body verbatim; its
     inline spelling is the same body under the derive prelude.  Neither
-    carries a pushed o_orderdate window.  Three entries differ where
-    measured faster at sf1: q14 writes a CTE first (its pre-statement is
-    the same text ending in ``SELECT * FROM cross_items``, and its final
-    reads it back), q64 reads store sales from 2000 on only (its bound
-    built by the derive's own date-key helper), and q67 runs its rollup in
-    two phases."""
+    carries a pushed o_orderdate window.  Two entries differ where
+    measured faster at sf1: q64 reads store sales from 2000 on only (its
+    bound built by the derive's own date-key helper), and q67 runs its
+    rollup in two phases."""
     import re
 
     import datafusion_spark.queries.tpcds_exec as tx
@@ -496,32 +493,23 @@ def test_rewritten_plan_shapes():
             tx._RETURNS), name
         assert plan.inline == tx._pruned_prelude(body) + body, name
         assert "o_orderdate" not in body, name
-        if name not in ("tpcds_q14", "tpcds_q64", "tpcds_q67"):
-            assert plan == Plan((), prelude + body, plan.inline), name
+        if name not in ("tpcds_q64", "tpcds_q67"):
+            assert plan == Plan(prelude + body, plan.inline), name
     q64 = QUERIES["tpcds_q64"].plan
     body = ORACLES["tpcds_q64"][len(tx._DUCK_DERIVE):]
-    assert q64 == Plan((), (tx._star_prelude(body) + body).replace(
+    assert q64 == Plan((tx._star_prelude(body) + body).replace(
         "FROM tpcds_store_sales)", "FROM tpcds_store_sales WHERE ss_sold_date_sk"
         " >= " + tx._date_sk("DATE '2000-01-01'") + ")"), q64.inline)
     assert "datediff(DATE '2000-01-01', DATE '1992-01-01') + 2450000" in q64.final
     assert tx._SPARK_DERIVE.count(tx._date_sk("CAST(o_orderdate AS DATE)")) == 8
     q67 = QUERIES["tpcds_q67"].plan
     body = ORACLES["tpcds_q67"][len(tx._DUCK_DERIVE):]
-    assert not q67.pre and q67.final.startswith(tx._star_prelude(body))
+    assert q67.final.startswith(tx._star_prelude(body))
     group_by = r"(?i)\bgroup\s+by\b"
     assert len(re.findall(group_by + r"\s+rollup", q67.final)) == 1
     assert len(re.findall(group_by, body)) == 1
     assert len(re.findall(group_by, q67.final)) == 2
     assert "SUM(ps) AS sumsales" in q67.final and ") base" in q67.final
-    q14 = QUERIES["tpcds_q14"].plan
-    ((view, mat),) = q14.pre
-    assert view == "cross_items_tpcds_q14"
-    final = q14.final.replace(f"cross_items AS (SELECT * FROM {view})", "")
-    assert "INTERSECT" in mat and "INTERSECT" not in final
-    body = ORACLES["tpcds_q14"][len(tx._DUCK_DERIVE):]
-    stmt = body[body.index("\n    SELECT channel"):].lstrip()
-    assert mat == (tx._star_prelude(body) + body[:-len(stmt)]
-                   + " SELECT * FROM cross_items")
 
 
 def test_tpcds_edit_lists():
@@ -530,13 +518,16 @@ def test_tpcds_edit_lists():
     matches its stated count and changes the text, an empty list is the
     reference statement verbatim, and the oracle and inline texts, and
     every final but the two respelled ones, carry the generated body
-    unchanged."""
+    unchanged.  The hand bodies are exactly the two whose reasons are a
+    Spark limitation (q41) or a measured A/B (q72)."""
     import datafusion_spark.queries.tpcds_exec as tx
     from datafusion_spark.queries.tpcds_planning import reference_statements
 
     assert set(_TPCDS) == set(tx._EDITS) | set(tx._HAND)
     assert not set(tx._EDITS) & set(tx._HAND)
-    assert len(tx._EDITS) >= 70
+    assert set(tx._HAND) == {"tpcds_q41", "tpcds_q72"}
+    assert {"tpcds_q8", "tpcds_q14", "tpcds_q14b", "tpcds_q49",
+            "tpcds_q66"} <= set(tx._EDITS)
     assert all(r.strip() and "\n" not in r for r in tx._HAND.values())
 
     for name, edits in tx._EDITS.items():
@@ -548,7 +539,6 @@ def test_tpcds_edit_lists():
         plan = QUERIES[name].plan
         assert ORACLES[name] == tx._DUCK_DERIVE + body, name
         assert plan.inline == tx._pruned_prelude(body) + body, name
-        assert not plan.pre, name
         # q64's respelling rewrites its prelude, q67's its rollup; both are
         # pinned in test_rewritten_plan_shapes
         assert (plan.final == tx._star_prelude(body) + body
@@ -583,41 +573,30 @@ def test_tpcds_edit_lists():
 
 
 def test_scratch_keeps_only_latest_invocation(spark):
-    """Re-invoking the materializing entry removes its previous scratch:
-    only the latest invocation's directories remain under the entry's
-    subdirectory.  Invoking entries never rewrites the stored star."""
+    """The only scratch an entry leaves is the stored star: once an SF's
+    star is stored, re-invoking entries never rewrites it and leaves no
+    temp directory beside it."""
     import datafusion_spark.queries.tpcds_exec as tx
 
-    name = "tpcds_q14"
-    views = [v for v, _ in QUERIES[name].plan.pre]
     star = tx._star_dir(SF_SMALL)
-
-    def invoke():
-        QUERIES[name](spark, SF_SMALL).collect()
-        (inv,) = os.listdir(os.path.join(tx._MAT_TMP, name))
-        inv = os.path.join(tx._MAT_TMP, name, inv)
-        assert sorted(os.listdir(inv)) == views
-        return inv
 
     def listing():
         root = os.path.dirname(star)
         return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
                 for d, _, files in os.walk(root) for f in files}
 
-    first = invoke()
+    QUERIES["tpcds_q14"](spark, SF_SMALL).collect()
     stored = listing()
     assert sorted(os.listdir(star)) == sorted(tx._STAR)
     assert not [d for d in os.listdir(os.path.dirname(star)) if ".tmp" in d]
-    second = invoke()
-    assert first != second and not os.path.exists(first)
     QUERIES["tpcds_q74"](spark, SF_SMALL).collect()
+    QUERIES["tpcds_q14"](spark, SF_SMALL).collect()
     assert listing() == stored
 
 
 def test_scratch_lazy_and_removed_at_exit(tmp_path):
-    """Importing the registry creates no star and no scratch directory, and
-    scratch allocated through the runner's helper is gone once the process
-    exits."""
+    """Importing the registry creates no star, and a process that imports
+    it leaves nothing in the temp directory once it exits."""
     import datafusion_spark.queries.tpcds_exec as tx
 
     star = os.path.dirname(os.path.dirname(tx._star_dir(SF_SMALL)))
@@ -627,17 +606,12 @@ def test_scratch_lazy_and_removed_at_exit(tmp_path):
                       for x in dirs + files)
 
     before = listing()
-    code = (
-        "import glob, os, tempfile\n"
-        "from datafusion_spark.queries import tpcds_exec as tx\n"
-        "mats = os.path.join(tempfile.gettempdir(), 'dfspark_tpcds_mat_*')\n"
-        "assert not glob.glob(mats), glob.glob(mats)\n"
-        "open(os.path.join(tx._scratch('tpcds_q14'), 'part'), 'w').close()\n"
-        "assert glob.glob(mats + '/tpcds_q14/*/part')\n")
+    code = ("import datafusion_spark.queries\n"
+            "from datafusion_spark.queries import tpcds_exec\n")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
                    env=dict(os.environ, TMPDIR=str(tmp_path)))
-    assert not list(tmp_path.glob("dfspark_tpcds_mat_*"))
+    assert not list(tmp_path.iterdir())
     assert listing() == before
 
 

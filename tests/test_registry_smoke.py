@@ -9,12 +9,11 @@ from __future__ import annotations
 
 import os
 import re
-from itertools import zip_longest
 
 import pytest
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from datafusion_spark.plans import statement_counts
+from datafusion_spark.plans import operator_counts
 from datafusion_spark.queries import ORACLES, QUERIES, TAGS
 from tests.conftest import SF_ORACLE, SF_SMALL
 from tools.capture_plans import load_manifest
@@ -39,16 +38,13 @@ def test_manifest_covers_registry(manifest):
         "regenerate with python tools/capture_plans.py")
 
 
-def _counts_diff(name: str, want: list[dict] | None, got: list[dict]) -> str:
-    """The manifest fields that differ, per statement, as ``old -> new``."""
-    lines = [f"{name}: plan differs from plans/manifest.json"]
-    for i, (w, g) in enumerate(zip_longest(want or [], got, fillvalue={})):
-        fields = [f"{k} {w.get(k, 0)} -> {g.get(k, 0)}"
-                  for k in sorted(set(w) | set(g)) if w.get(k, 0) != g.get(k, 0)]
-        if fields:
-            lines.append(f"  statement {i + 1}/{len(got)}: " + ", ".join(fields))
-    lines.append(f"  if intended: python tools/capture_plans.py {name}")
-    return "\n".join(lines)
+def _counts_diff(name: str, want: dict | None, got: dict) -> str:
+    """The manifest fields that differ, as ``old -> new``."""
+    want = want or {}
+    fields = [f"{k} {want.get(k, 0)} -> {got.get(k, 0)}"
+              for k in sorted(set(want) | set(got)) if want.get(k, 0) != got.get(k, 0)]
+    return (f"{name}: plan differs from plans/manifest.json\n  " + ", ".join(fields)
+            + f"\n  if intended: python tools/capture_plans.py {name}")
 
 
 def test_sf_literal_oracles_are_sf_pinned():
@@ -101,8 +97,8 @@ def test_query_runs(spark, manifest, name):
     # stable schema: re-planning yields identical columns
     df2 = QUERIES[name](spark, SF_SMALL)
     assert df.columns == df2.columns
-    # plan shape, warm: exact operator counts per statement
-    counts = statement_counts(spark, QUERIES[name], df2)
+    # plan shape, warm: exact operator counts
+    counts = operator_counts(df2)
     assert counts == manifest.get(name), _counts_diff(
         name, manifest.get(name), counts)
 

@@ -148,6 +148,39 @@ def test_temp_functions_and_catalog_relations_are_not_kept(spark, fresh):
         spark.sql("DROP TEMPORARY FUNCTION IF EXISTS stmt_plus_one")
 
 
+def test_short_tree_keeps_the_verdict(spark):
+    """_keepable reads the analyzed tree printed with one field per list;
+    the verdict of _reads_only is the one the full tree gives, for kept
+    texts, a path relation, a view not given, and a TPC-DS entry."""
+    from datafusion_spark.queries import tpcds_exec
+    from datafusion_spark.queries.registry import _reads_only
+
+    spark.range(3).createOrReplaceTempView("stmt_unlisted")
+    path = catalog.table_path(SF_SMALL, "region")
+    views = _orders(spark, SF_SMALL)
+    catalog.bind_views(spark, views)
+    texts = {"SELECT COUNT(*) AS n FROM orders": True,
+             "WITH o AS (SELECT * FROM orders) SELECT COUNT(*) AS n FROM o"
+             " JOIN (VALUES (1)) v(x) ON o.o_orderkey >= v.x"
+             " WHERE o.o_orderkey IN (SELECT id FROM range(100))": True,
+             "SELECT COUNT(*) AS n FROM orders, stmt_unlisted": False,
+             f"SELECT COUNT(*) AS n FROM orders, parquet.`{path}`": False}
+    try:
+        for text, keep in texts.items():
+            analyzed = spark.sql(text)._jdf.queryExecution().analyzed()
+            full, short = (analyzed.treeString(),
+                           analyzed.treeString(False, False, 1, False, False))
+            assert _reads_only(full, views) == _reads_only(short, views) == keep, text
+        analyzed = QUERIES["tpcds_q49"](spark, SF_SMALL)._jdf.queryExecution().analyzed()
+        full, short = (analyzed.treeString(),
+                       analyzed.treeString(False, False, 1, False, False))
+        names = {n.lower() for n in tpcds_exec._ensure_star(spark, SF_SMALL)}
+        for given, keep in ((names, True), (names - {"web_returns"}, False)):
+            assert _reads_only(full, given) == _reads_only(short, given) == keep
+    finally:
+        spark.catalog.dropTempView("stmt_unlisted")
+
+
 def test_tpch_entry_at_two_sfs_matches_oracle(spark, fresh):
     """One process runs tpch_q3 at SF_SMALL, then SF_ORACLE, then SF_SMALL
     again and gets each SF's oracle rows."""

@@ -4,9 +4,9 @@ Usage:
     python tools/capture_plans.py            # every entry
     python tools/capture_plans.py name...    # only these; other lines kept
 
-The manifest has one line per entry, keys sorted.  Each line lists, per
-statement the entry runs (every pre-statement of ``fn.plan.pre`` in order,
-then the final one), the nonzero ``operator_counts`` of its plan.  Counts
+The manifest has one line per entry, keys sorted.  Each line lists the
+nonzero ``operator_counts`` of the plan of the DataFrame the entry returns
+(the plan before execution: an adaptive plan's initial one).  Counts
 are taken warm, in the state tests/test_registry_smoke.py::test_query_runs
 compares them in: invoke, collect, invoke again, count — on the tier-1
 session (local[4], 4 shuffle partitions) at SF_SMALL.  A plan change is a
@@ -46,7 +46,7 @@ def main() -> None:
 
     sys.path.insert(0, ROOT)
     from datafusion_spark import get_spark
-    from datafusion_spark.plans import statement_counts
+    from datafusion_spark.plans import operator_counts
     from datafusion_spark.queries import QUERIES
     from tests.conftest import SESSION, SF_SMALL
 
@@ -62,7 +62,7 @@ def main() -> None:
         fn = QUERIES[name]
         try:
             fn(spark, SF_SMALL).collect()
-            manifest[name] = statement_counts(spark, fn, fn(spark, SF_SMALL))
+            manifest[name] = operator_counts(fn(spark, SF_SMALL))
         except Exception as e:  # noqa: BLE001 - keep the old line, report
             failed += 1
             print(f"FAIL {name}: {str(e).splitlines()[0][:160]}", file=sys.stderr)
