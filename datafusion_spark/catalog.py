@@ -114,30 +114,62 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Resolved base-table relations per (applicationId, sf_dir, table, mtime_ns).
-# Creating a parquet relation costs ~0.15-0.4 s of DRIVER work per call even
-# warm (py4j + file listing + a footer-read schema-inference job) — measured
-# r12; a whole bench run pays it hundreds of times.  Caching the resolved
-# DataFrame is the DataFrame-path twin of register_views()' per-session view
-# cache (and of DataFusion's register_parquet, which lists once at
-# registration): pure plan/metadata reuse — every execution still scans the
-# parquet files.  The path's mtime_ns keys the entry so a regenerated table
-# (make_scale_data overwriting a scratch sf_dir mid-session) is re-resolved,
-# never served from a stale file index.
-_RELATION_CACHE: dict[tuple[str, str, str, int], DataFrame] = {}
+# Resolved base-table relations per (applicationId, sf_dir, table,
+# mtime_ns, the file scanned).  Creating a parquet relation costs ~0.15-0.4 s
+# of DRIVER work per call even warm (py4j + file listing + a footer-read
+# schema-inference job) — measured r12; a whole bench run pays it hundreds
+# of times.  Caching the resolved DataFrame is the DataFrame-path twin of
+# register_views()' per-session view cache (and of DataFusion's
+# register_parquet, which lists once at registration): pure plan/metadata
+# reuse — every execution still scans the parquet files.  The path's
+# mtime_ns keys the entry so a regenerated table (make_scale_data
+# overwriting a scratch sf_dir mid-session) is re-resolved, never served
+# from a stale file index; the file scanned keys it so a split-count change
+# (another maxPartitionBytes or openCostInBytes) reads the copy cut for it.
+_RELATION_CACHE: dict[tuple, DataFrame] = {}
+# The file each (applicationId, sf_dir, table, mtime_ns) scans, with the
+# conf generation it was chosen under (_split_path reads the SQL conf).
+_SCANNED: dict[tuple[str, str, str, int], tuple[int, str]] = {}
+# applicationId -> [session, its SQL conf, the conf map last read, generation]
+_CONF_STATE: dict[str, list] = {}
+
+
+def conf_generation(spark: SparkSession) -> int:
+    """A count that moves whenever ``spark``'s session or its SQL conf map
+    (compared by value, in the JVM) changed since the previous call: two
+    gateway commands.  Caches of what a conf decides key on it."""
+    app, js = app_id(spark), spark._jsparkSession
+    st = _CONF_STATE.get(app)
+    if st is None or st[0] is not js:
+        gen = st[3] + 1 if st else 0
+        st = _CONF_STATE[app] = [js, js.sessionState().conf(), None, gen]
+    confs = st[1].getAllConfs()
+    if st[2] is None or not confs.equals(st[2]):
+        st[2] = confs
+        st[3] += 1
+    return st[3]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Filters/projections compose onto this scan and reach
     the parquet reader via Catalyst (check .explain: PushedFilters/ReadSchema)."""
     ensure_runtime_tuned(spark)
+    return _load(spark, sf_dir, name, conf_generation(spark))
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str, gen: int) -> DataFrame:
+    """load_table under conf generation ``gen``: the split path is chosen
+    again only when the conf moved, the relation read again only when the
+    file to scan changed."""
     key = (app_id(spark), sf_dir, name, _mtime_ns(sf_dir, name))
-    cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, sf_dir, name)
-    _RELATION_CACHE[key] = df
-    return df
+    scanned = _SCANNED.get(key)
+    if scanned is None or scanned[0] != gen:
+        scanned = _SCANNED[key] = (gen, _split_path(spark, sf_dir, name))
+    cached = _RELATION_CACHE.get(key + (scanned[1],))
+    if cached is None:
+        cached = _RELATION_CACHE[key + (scanned[1],)] = _read_table(
+            spark, sf_dir, name)
+    return cached
 
 
 def _mtime_ns(sf_dir: str, name: str) -> int:
@@ -317,8 +349,11 @@ def _same_layout(a, b) -> bool:
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    """load_table of each of ``names`` (default: all), by name."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
+    """load_table of each of ``names`` (default: all), by name: one conf
+    check for all of them."""
+    ensure_runtime_tuned(spark)
+    gen = conf_generation(spark)
+    return {name: _load(spark, sf_dir, name, gen) for name in names}
 
 
 # Temp views per session: applicationId -> {view name: the DataFrame bound

@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_spark.catalog import bind_views
+from datafusion_spark.catalog import bind_views, conf_generation
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -84,13 +84,13 @@ _TEMP_VIEW = re.compile(r"View \(`([^`]+)`, ")
 @dataclass
 class _Statements:
     """The analyzed plans kept for one session under one SQL conf map
-    (``confs``): text -> (the views it was analyzed over, its plan)."""
+    (conf generation ``gen``): text -> (the views it was analyzed over, its
+    plan)."""
 
     session: object
-    conf: object
     catalog: object
     of_rows: object
-    confs: object = None
+    gen: int = -1
     plans: dict = field(default_factory=dict)
 
 
@@ -99,17 +99,17 @@ _KEPT: _Statements | None = None
 
 def _kept(spark: SparkSession) -> _Statements:
     """The session's kept plans, emptied when the session or its conf map
-    changed since the last call.  Two gateway commands per call."""
+    changed since the last call (catalog.conf_generation).  Two gateway
+    commands per call."""
     global _KEPT
     js = spark._jsparkSession
     if _KEPT is None or _KEPT.session is not js:
-        state = js.sessionState()
-        _KEPT = _Statements(js, state.conf(), state.catalog(),
+        _KEPT = _Statements(js, js.sessionState().catalog(),
                             spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows)
-    confs = _KEPT.conf.getAllConfs()
-    if _KEPT.confs is None or not confs.equals(_KEPT.confs):
+    gen = conf_generation(spark)
+    if _KEPT.gen != gen:
         _KEPT.plans.clear()
-        _KEPT.confs = confs
+        _KEPT.gen = gen
     return _KEPT
 
 

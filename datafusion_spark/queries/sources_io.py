@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
 from datafusion_spark.queries.registry import query
-from datafusion_spark.queries.helpers import values_df
+from datafusion_spark.queries.helpers import sql_sum_limbs, sql_units6, values_df
 from datafusion_spark.sources.io import (
     copy_to,
     copy_to_arrow_ipc,
@@ -167,15 +167,17 @@ def source_parquet_zstd_roundtrip(spark, sf_dir):
     'zstd'), datafusion/common/src/file_options); zstd is the right codec
     at 100 TB (≈2× better ratio than snappy at similar scan speed).  The
     copy is read back with the schema just written, so no footer-inference
-    job runs before the scan."""
+    job runs before the scan.  The total is the exact long-limb sum
+    (helpers.sql_sum_limbs, as tpch_q1 sums): l_extendedprice is at cents
+    and below 4.5e9, so it equals the oracle's decimal sum bit for bit
+    without a per-row decimal."""
     li = load_table(spark, sf_dir, "lineitem")
     path = os.path.join(_SCRATCH, "lineitem_zstd")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
     back = spark.read.schema(li.schema).parquet(path)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double")
-        .alias("total"),
+        F.expr(sql_sum_limbs(sql_units6("l_extendedprice"))).alias("total"),
     )
 
 

@@ -463,9 +463,15 @@ def test_rewritten_rows_match_inline(spark, name, sf):
     (the text the DuckDB oracle's body runs as in Spark: for tpcds_*, the
     body over the tables derived inside the statement, so stored ==
     derived).  The entry runs first: it registers the session views the
-    inline text reads."""
+    inline text reads.  A tpcds_* inline text runs under the entries' one
+    output rule, DECIMAL outputs as DOUBLE (tpcds_exec._doubled)."""
+    import datafusion_spark.queries.tpcds_exec as tx
+
     got = Counter(map(repr, QUERIES[name](spark, sf).collect()))
-    inline = Counter(map(repr, spark.sql(QUERIES[name].plan.inline).collect()))
+    text = QUERIES[name].plan.inline
+    if name in _TPCDS:
+        text = tx._doubled(spark, text)
+    inline = Counter(map(repr, spark.sql(text).collect()))
     assert got == inline
 
 
@@ -556,6 +562,20 @@ def test_tpcds_edit_lists():
                    for s in reference_statements(q))
     assert tx._EDITS["tpcds_q73"] == ()
 
+    # edits per reason, so a house money edit cannot creep back unnoticed:
+    # the star's money is DECIMAL(p,2), and the _MONEY edits left are the
+    # products of its DOUBLE quantities with a price
+    whys = Counter(e.why for edits in tx._EDITS.values() for e in edits)
+    pinned = {"_MONEY": 27, "_AVG": 40, "_RATIO": 15, "_STDEV": 5,
+              "_ALIAS": 22, "_QUOTED": 11, "_INT": 15, "_HUGEINT": 26,
+              "_RETURNS_": 11, "_NULLS": 9, "_TIEBREAK": 7, "_RETARGET": 51,
+              "_UNPARSE": 2, "_SEQ": 13, "_CALENDAR": 5, "_YEARS": 4,
+              "_CATEGORY": 5}
+    assert {r: whys[getattr(tx, r)] for r in pinned} == pinned
+    assert sum(whys.values()) == 374
+    assert all("DECIMAL(38,6)" in e.new for edits in tx._EDITS.values()
+               for e in edits if e.why == tx._MONEY)
+
     # an edit that no longer applies fails
     def gen(*edit):
         return tx._generate("tpcds_q3", (tx.Edit(*edit),))
@@ -570,6 +590,62 @@ def test_tpcds_edit_lists():
     assert "LIMIT 7" in gen("limit  100", "LIMIT 7", "why")
     with pytest.raises(AssertionError, match="occurs 0 times"):
         gen("LIMIT 100", "x", "why")
+
+
+def test_tpcds_star_money_types(spark):
+    """The star's 49 money columns are DECIMAL(p,2) with p <= 8, so Spark
+    sums each on its long-backed path: SUM of DECIMAL(p,2) is
+    DECIMAL(p+10,2), 18 digits or fewer.  The six quantity columns stay
+    DOUBLE (integer-valued, so their sums are exact), and no other column
+    is DOUBLE.  Analysis only."""
+    from pyspark.sql.types import DecimalType, DoubleType
+
+    import datafusion_spark.queries.tpcds_exec as tx
+
+    views = tx._ensure_star(spark, SF_SMALL)
+    money, doubles = {}, []
+    for name in tx._STAR:
+        df = views[f"tpcds_{name}"]
+        cols = []
+        for f in df.schema.fields:
+            if isinstance(f.dataType, DecimalType):
+                money[f.name] = (f.dataType.precision, f.dataType.scale)
+                cols.append(f.name)
+            elif isinstance(f.dataType, DoubleType):
+                doubles.append(f.name)
+        if cols:
+            sums = df.selectExpr(*(f"SUM({c}) AS {c}" for c in cols)).schema
+            assert {(f.dataType.precision, f.dataType.scale)
+                    for f in sums.fields} <= {(p, 2) for p in range(11, 19)}
+    assert len(money) == 49
+    assert all(s == 2 and p <= 8 for p, s in money.values()), money
+    assert sorted(doubles) == sorted(
+        f"{p}_{q}quantity" for p, q in (("ss", ""), ("ws", ""), ("cs", ""),
+                                        ("sr", "return_"), ("wr", "return_"),
+                                        ("cr", "return_")))
+
+
+def test_decimal_money_sum_overflow_raises(spark):
+    """The 100 TB bound of a star money sum.  A DECIMAL(8,2) column sums
+    to DECIMAL(18,2): a group of 10,000,000,100 rows at the type's maximum
+    (999,999.99) is still exact, and one row more overflows, which under
+    ANSI (Spark's default, and the test session's) raises rather than
+    returning NULL.  Two ranges of 10^10 rows, seconds on 4 cores."""
+    from decimal import Decimal
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    top = 99999999  # 999,999.99 in cents
+    n = (10**18 - 1) // top
+    assert n == 10_000_000_100
+
+    def group_sum(rows):
+        return spark.sql(
+            "SELECT SUM(x) AS s FROM (SELECT CAST(999999.99 AS DECIMAL(8,2))"
+            f" AS x FROM range({rows}))").collect()[0].s
+
+    assert group_sum(n) == Decimal(n * top).scaleb(-2)
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        group_sum(n + 1)
 
 
 def test_scratch_keeps_only_latest_invocation(spark):

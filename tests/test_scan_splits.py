@@ -124,6 +124,32 @@ def test_split_copy_matches_the_scan_split_count(spark, sf_copy):
         spark.conf.set(key, saved)
 
 
+def test_load_table_follows_the_split_count(spark, sf_copy):
+    """load_table scans the copy cut for the split count of the current
+    conf: after maxPartitionBytes changes in a session, the next call reads
+    the copy for the new count, not the relation resolved under the old
+    one, and back under the first conf it serves the first relation
+    again."""
+    sf, derived = sf_copy
+    src = catalog.table_path(sf, "lineitem")
+    mtime = os.stat(src).st_mtime_ns
+    saved = spark.conf.get(_MPB)
+    try:
+        frames, counts = [], []
+        for mpb in ("256k", "128k", "256k"):
+            spark.conf.set(_MPB, mpb)
+            splits = catalog._scan_splits(spark, os.path.getsize(src))
+            df = catalog.load_table(spark, sf, "lineitem")
+            assert _scanned_file(df) == os.path.join(
+                derived, str(mtime), str(splits), "lineitem.parquet"), mpb
+            frames.append(df)
+            counts.append(splits)
+        assert counts[0] != counts[1] and counts[0] == counts[2]
+        assert frames[2] is frames[0]
+    finally:
+        spark.conf.set(_MPB, saved)
+
+
 def test_dataframe_debugging_off(spark, monkeypatch):
     """Sessions from get_spark build Columns without PySpark's call-site
     capture.  The knob is static, so ensure_runtime_tuned (which runs on

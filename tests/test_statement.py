@@ -197,8 +197,9 @@ def test_tpch_entry_at_two_sfs_matches_oracle(spark, fresh):
 
 def test_cached_tpch_build_sends_few_gateway_commands(spark):
     """A tpch_* build whose analyzed plan is kept sends at most 7 Py4J
-    commands (3 measured: the conf map read and compare, and the Dataset
-    over the kept plan)."""
+    commands (5 measured: the conf map read and compare for the table
+    loads and again for the statement, and the Dataset over the kept
+    plan)."""
     calls = {}
     for name in [n for n in QUERIES if n.startswith("tpch_")]:
         QUERIES[name](spark, SF_SMALL)

@@ -6,7 +6,11 @@ Usage:
 
 The manifest has one line per entry, keys sorted.  Each line lists the
 nonzero ``operator_counts`` of the plan of the DataFrame the entry returns
-(the plan before execution: an adaptive plan's initial one).  Counts
+(the plan before execution: an adaptive plan's initial one).  So a count
+bounds the initial plan, not what runs: adaptive execution may reuse an
+exchange at run time, but the initial plan holds every copy, each counted,
+and no ``ReusedExchange`` (tpcds_q14 counts 49 exchanges; its executed
+plan at sf0.1 runs 14 and reuses 13).  Counts
 are taken warm, in the state tests/test_registry_smoke.py::test_query_runs
 compares them in: invoke, collect, invoke again, count — on the tier-1
 session (local[4], 4 shuffle partitions) at SF_SMALL.  A plan change is a
