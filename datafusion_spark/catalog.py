@@ -6,9 +6,23 @@ datafusion/catalog-listing).  Spark-native equivalent: ``spark.read.parquet``
 which gives us predicate pushdown, column pruning, partition pruning and
 vectorized Arrow-compatible scans for free.
 
+A base-table file that Spark reads as one split is returned as one
+partition (``coalesce(1)``), as DataFusion keeps a file under
+``repartition_file_min_size`` in one partition and plans an aggregate over
+it as one ``AggregateMode::Single`` operator.  Catalyst then sees
+``SinglePartition``: an aggregate, sort or window over the table plans no
+exchange, nor does a join whose every side is one partition, while a
+join with a multi-split side still shuffles both sides to the shuffle
+partition count.  Such a file is at most ``openCostInBytes`` (4 MB by
+default), and adaptive execution coalesced every shuffle downstream of it
+to one partition anyway, so the exchange ran the same single task one
+stage and one job later.  The decision is taken with the split-copy choice once
+per conf generation (_split_path).
+
 At 100 TB these tables would be directory-partitioned (e.g. orders by
 o_orderdate month); ``spark.read.parquet`` on a directory picks up hive-style
-partition columns automatically, so nothing here changes — only the paths do.
+partition columns automatically, and a directory is never coalesced, so
+nothing here changes — only the paths do.
 """
 
 from __future__ import annotations
@@ -115,21 +129,23 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # Resolved base-table relations per (applicationId, sf_dir, table,
-# mtime_ns, the file scanned).  Creating a parquet relation costs ~0.15-0.4 s
-# of DRIVER work per call even warm (py4j + file listing + a footer-read
-# schema-inference job) — measured r12; a whole bench run pays it hundreds
-# of times.  Caching the resolved DataFrame is the DataFrame-path twin of
-# register_views()' per-session view cache (and of DataFusion's
-# register_parquet, which lists once at registration): pure plan/metadata
-# reuse — every execution still scans the parquet files.  The path's
-# mtime_ns keys the entry so a regenerated table (make_scale_data
+# mtime_ns, the file scanned, whether it is one split).  Creating a parquet
+# relation costs ~0.15-0.4 s of DRIVER work per call even warm (py4j + file
+# listing + a footer-read schema-inference job) — measured r12; a whole
+# bench run pays it hundreds of times.  Caching the resolved DataFrame is
+# the DataFrame-path twin of register_views()' per-session view cache (and
+# of DataFusion's register_parquet, which lists once at registration): pure
+# plan/metadata reuse — every execution still scans the parquet files.  The
+# path's mtime_ns keys the entry so a regenerated table (make_scale_data
 # overwriting a scratch sf_dir mid-session) is re-resolved, never served
-# from a stale file index; the file scanned keys it so a split-count change
-# (another maxPartitionBytes or openCostInBytes) reads the copy cut for it.
+# from a stale file index; the file scanned and its single-split flag key
+# it so a split-count change (another maxPartitionBytes or openCostInBytes)
+# reads the copy cut for it, in as many partitions.
 _RELATION_CACHE: dict[tuple, DataFrame] = {}
-# The file each (applicationId, sf_dir, table, mtime_ns) scans, with the
-# conf generation it was chosen under (_split_path reads the SQL conf).
-_SCANNED: dict[tuple[str, str, str, int], tuple[int, str]] = {}
+# The file each (applicationId, sf_dir, table, mtime_ns) scans and whether
+# it is one split, with the conf generation they were chosen under
+# (_split_path reads the SQL conf).
+_SCANNED: dict[tuple[str, str, str, int], tuple[int, str, bool]] = {}
 # applicationId -> [session, its SQL conf, the conf map last read, generation]
 _CONF_STATE: dict[str, list] = {}
 
@@ -158,17 +174,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str, gen: int) -> DataFrame:
-    """load_table under conf generation ``gen``: the split path is chosen
-    again only when the conf moved, the relation read again only when the
-    file to scan changed."""
+    """load_table under conf generation ``gen``: the file to scan and its
+    partitioning are chosen again only when the conf moved, the relation
+    read again only when they changed.  A warm call sends no gateway
+    command."""
     key = (app_id(spark), sf_dir, name, _mtime_ns(sf_dir, name))
     scanned = _SCANNED.get(key)
     if scanned is None or scanned[0] != gen:
-        scanned = _SCANNED[key] = (gen, _split_path(spark, sf_dir, name))
-    cached = _RELATION_CACHE.get(key + (scanned[1],))
+        scanned = _SCANNED[key] = (gen, *_split_path(spark, sf_dir, name))
+    cached = _RELATION_CACHE.get(key + scanned[1:])
     if cached is None:
-        cached = _RELATION_CACHE[key + (scanned[1],)] = _read_table(
-            spark, sf_dir, name)
+        path, single = scanned[1:]
+        df = _read_table(spark, path, name)
+        cached = _RELATION_CACHE[key + scanned[1:]] = df.coalesce(1) if single else df
     return cached
 
 
@@ -203,8 +221,8 @@ def cached_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return cached
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = _split_path(spark, sf_dir, name)
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """Table ``name`` read from the parquet file at ``path``."""
     if name == "events":
         # events.ts has shipped as either parquet TIMESTAMP(NANOS) (which
         # Spark's vectorized reader rejects outright) or TIMESTAMP(MICROS)
@@ -258,40 +276,44 @@ def _scan_splits(spark: SparkSession, file_bytes: int) -> int:
     return math.ceil(file_bytes / split)
 
 
-def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """The file to scan for one table: the source, or a row-group-aligned
-    copy when the source has fewer row groups than Spark has splits.
+def _split_path(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, bool]:
+    """The file to scan for one table, and whether Spark reads it as one
+    split: the source, or a row-group-aligned copy when the source has
+    fewer row groups than Spark has splits.
 
-    A parquet split reads only the row groups whose midpoint falls inside
-    it, so a single-row-group file of three splits runs as one busy task
-    and two empty ones (sf0.1 lineitem: one task reads all 600k rows).  The
-    copy has the same rows, order, schema and codec, one row group per
-    split, and is written once under ``spark-warehouse/derived_splits/
-    <sf_dir basename>/<source mtime_ns>/<splits>/``: a copy cut for another
-    split count (written under another conf or core count) is never read,
-    since a split holding two row groups runs as one task of double length.
-    Files under the open cost (4 MB) stay one split and are never copied;
-    writer-sized row groups (every table at 100 TB) already cover their
-    splits, and directories are left to Spark."""
+    A source of one split under the session's split sizing (at 4 cores, a
+    file of at most ``openCostInBytes``, 4 MB) is scanned as it is and
+    read as one partition (see the module docstring).  A parquet split
+    reads only the row groups whose midpoint falls inside it, so a
+    single-row-group file of three splits runs as one busy task and two
+    empty ones (sf0.1 lineitem: one task reads all 600k rows).  The copy
+    has the same rows, order, schema and codec, one row group per split,
+    and is written once under ``spark-warehouse/derived_splits/<sf_dir
+    basename>/<source mtime_ns>/<splits>/``: a copy cut for another split
+    count (written under another conf or core count) is never read, since
+    a split holding two row groups runs as one task of double length.
+    Writer-sized row groups (every table at 100 TB) already cover their
+    splits.  A multi-split source, a copy and a directory (left to Spark)
+    keep Spark's partitions."""
     src = table_path(sf_dir, name)
     try:
         st = os.stat(src)
     except OSError:
-        return src  # missing or unreadable: let spark.read raise
+        return src, False  # missing or unreadable: let spark.read raise
     if not os.path.isfile(src):
-        return src
+        return src, False
     splits = _scan_splits(spark, st.st_size)
     if splits < 2:
-        return src
+        return src, True
     import pyarrow.parquet as pq
 
     try:
         src_md = pq.ParquetFile(src).metadata
     except (OSError, ValueError):
-        return src  # not readable as parquet here: let spark.read decide
+        return src, False  # not readable as parquet here: let spark.read decide
     splits = min(splits, src_md.num_rows)  # a row group holds a row at least
     if src_md.num_row_groups >= splits:
-        return src
+        return src, False
     out = os.path.join(repo_root(), "spark-warehouse", "derived_splits",
                        os.path.basename(os.path.normpath(sf_dir)),
                        str(st.st_mtime_ns), str(splits), f"{name}.parquet")
@@ -304,8 +326,8 @@ def _split_path(spark: SparkSession, sf_dir: str, name: str) -> str:
             _write_row_groups(src, out, splits)
             copy_md = pq.ParquetFile(out).metadata
         except (OSError, ValueError):
-            return src  # e.g. a read-only checkout: scan the source
-    return out if _same_layout(src_md, copy_md) else src
+            return src, False  # e.g. a read-only checkout: scan the source
+    return (out if _same_layout(src_md, copy_md) else src), False
 
 
 def _write_row_groups(src: str, out: str, groups: int) -> None:
@@ -351,9 +373,22 @@ def _same_layout(a, b) -> bool:
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
     """load_table of each of ``names`` (default: all), by name: one conf
     check for all of them."""
+    return load_checked(spark, sf_dir, names)[1]
+
+
+def load_checked(spark: SparkSession, sf_dir: str, names) -> tuple[int, dict[str, DataFrame]]:
+    """load_tables, with the conf generation that holds after the loads.
+    A table read afresh may have set the conf (the events reader does), so
+    then the conf is checked again and the loads are redone under it."""
+    names = tuple(names)
     ensure_runtime_tuned(spark)
     gen = conf_generation(spark)
-    return {name: _load(spark, sf_dir, name, gen) for name in names}
+    relations = len(_RELATION_CACHE)
+    tables = {name: _load(spark, sf_dir, name, gen) for name in names}
+    if len(_RELATION_CACHE) != relations:
+        gen = conf_generation(spark)
+        tables = {name: _load(spark, sf_dir, name, gen) for name in names}
+    return gen, tables
 
 
 # Temp views per session: applicationId -> {view name: the DataFrame bound

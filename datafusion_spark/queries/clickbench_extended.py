@@ -23,10 +23,9 @@ scan-side expression evaluation (zero shuffles).
 
 from __future__ import annotations
 
-from datafusion_spark.catalog import load_table
 from datafusion_spark.queries.clickbench_full import _hits_select, _pruned_hits_spark
 from datafusion_spark.queries.helpers import two_level_distinct
-from datafusion_spark.queries.registry import Plan, query, statement
+from datafusion_spark.queries.registry import Plan, query, table_statement
 
 
 def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
@@ -48,7 +47,7 @@ def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
         text = fn.plan.final
         if big_sql and two_level_distinct(sf_dir, "events"):
             text = big_sql
-        return statement(spark, text, {"events_cb": load_table(spark, sf_dir, "events")})
+        return table_statement(spark, text, sf_dir, {"events_cb": "events"})
 
     # fn.plan is the below-crossover shape (big_sql is pinned separately)
     fn.plan = Plan(spark_sql, spark_sql)

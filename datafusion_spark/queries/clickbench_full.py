@@ -29,8 +29,7 @@ from __future__ import annotations
 
 import re
 
-from datafusion_spark.catalog import load_table
-from datafusion_spark.queries.registry import Plan, query, statement
+from datafusion_spark.queries.registry import Plan, query, table_statement
 
 # Shared hits projection.  {EPOCH} = seconds-since-epoch of ts as BIGINT
 # (dialect macro); {SRC} = the events relation name.
@@ -180,8 +179,7 @@ def _cb(n: int, body: str, duck_body: str | None = None, tags: tuple = ()):
     duck_sql = f"WITH hits AS ({_hits_select('duck')})\n{duck_body or body}"
 
     def fn(spark, sf_dir):
-        return statement(spark, fn.plan.final,
-                         {"events_cb": load_table(spark, sf_dir, "events")})
+        return table_statement(spark, fn.plan.final, sf_dir, {"events_cb": "events"})
 
     fn.plan = Plan(spark_sql, spark_sql)
     fn.__name__ = f"cb_q{n:02d}"

@@ -4,8 +4,10 @@ Each entry's query text is written in the REFERENCE dialect (function names
 and semantics from docs/source/user-guide/sql/scalar_functions.md /
 aggregate_functions.md; implementations under datafusion/functions*/src/),
 then translated by :func:`datafusion_spark.compat.dialect.translate_sql`
-and executed by ``spark.sql`` — exactly the path a migrating reference user
-takes via :class:`datafusion_spark.compat.SessionContext`.  The DuckDB
+and executed as Spark SQL — the path a migrating reference user takes via
+:class:`datafusion_spark.compat.SessionContext` — through
+``registry.table_statement`` over the tables the text reads, so a repeated
+call reuses its analyzed plan.  The DuckDB
 oracle restates the same semantics in DuckDB's own dialect, so the gate
 verifies the TRANSLATION, not just Spark.
 
@@ -19,14 +21,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_spark.catalog import register_views
+from datafusion_spark.catalog import register_views, tables_in
 from datafusion_spark.compat.dialect import translate_sql
-from datafusion_spark.queries.registry import query
+from datafusion_spark.queries.registry import query, table_statement
 
 
 def _run(spark: SparkSession, sf_dir: str, df_sql: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(translate_sql(df_sql))
+    sql = translate_sql(df_sql)
+    return table_statement(spark, sql, sf_dir, tables_in(sql))
 
 
 @query(

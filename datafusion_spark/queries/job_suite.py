@@ -20,7 +20,7 @@ on the TPC-H-ish schema PRESERVING its join graph and predicate structure:
     country_code   -> nation (via s_nationkey / c_nationkey)
 
 The SQL text is fully portable: the SAME string is the Spark plan (via
-registry.statement over the views it reads) and the DuckDB oracle — so the
+registry.table_statement over the tables it reads) and the DuckDB oracle — so the
 correctness gate also proves the SQL frontend handles comma-join syntax.
 What the suite exercises on Spark: Catalyst's join-graph extraction from
 WHERE equalities, CBO+AQE join reordering, broadcast selection for the dim
@@ -31,8 +31,8 @@ before the single-row aggregate (operator counts pinned in plans/manifest.json).
 
 from __future__ import annotations
 
-from datafusion_spark.catalog import load_tables, tables_in
-from datafusion_spark.queries.registry import query, statement
+from datafusion_spark.catalog import tables_in
+from datafusion_spark.queries.registry import query, table_statement
 
 _JOB: dict[str, str] = {}
 
@@ -282,7 +282,7 @@ def _register(name: str, sql: str) -> None:
     views = tables_in(sql)
 
     def fn(spark, sf_dir, _sql=sql):
-        return statement(spark, _sql, load_tables(spark, sf_dir, views))
+        return table_statement(spark, _sql, sf_dir, views)
 
     fn.__name__ = name
     ref = name.replace("job_", "")

@@ -8,7 +8,8 @@ order-deterministic (see helpers.py).
 
 An entry whose plan is SQL text runs it through one function,
 ``statement(spark, text, views)``: ``views`` names the DataFrame bound to
-each view the text reads.  The first call parses and analyzes the text;
+each view the text reads (``table_statement`` loads them from base tables
+under the conf check it then hands on).  The first call parses and analyzes the text;
 later calls wrap the kept analyzed plan in a new Dataset, so each call
 still optimizes, plans, executes and fetches afresh and only the parse
 and analysis are reused (DataFusion's PREPARE/EXECUTE binds a planned
@@ -32,7 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_spark.catalog import bind_views, conf_generation
+from datafusion_spark.catalog import bind_views, conf_generation, load_checked
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -97,16 +98,17 @@ class _Statements:
 _KEPT: _Statements | None = None
 
 
-def _kept(spark: SparkSession) -> _Statements:
+def _kept(spark: SparkSession, gen: int | None) -> _Statements:
     """The session's kept plans, emptied when the session or its conf map
-    changed since the last call (catalog.conf_generation).  Two gateway
-    commands per call."""
+    changed since the last check (catalog.conf_generation): ``gen`` if the
+    caller has just made it, else two gateway commands here."""
     global _KEPT
     js = spark._jsparkSession
     if _KEPT is None or _KEPT.session is not js:
         _KEPT = _Statements(js, js.sessionState().catalog(),
                             spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows)
-    gen = conf_generation(spark)
+    if gen is None:
+        gen = conf_generation(spark)
     if _KEPT.gen != gen:
         _KEPT.plans.clear()
         _KEPT.gen = gen
@@ -152,17 +154,20 @@ def _keepable(kept: _Statements, text: str, views, analyzed) -> bool:
     return _reads_only(tree, {n.lower() for n in views})
 
 
-def statement(spark: SparkSession, text: str, views: dict[str, DataFrame]) -> DataFrame:
+def statement(spark: SparkSession, text: str, views: dict[str, DataFrame],
+              gen: int | None = None) -> DataFrame:
     """The DataFrame of SQL ``text`` over temp views ``views`` (name ->
     DataFrame; each name is re-bound only when its DataFrame changed).
     The first call analyzes ``text``; a later call over the very same
     DataFrames, in the same session under the same conf map, reuses that
     analyzed plan in a new Dataset: 3 gateway commands, where parsing and
-    analysis cost 10-30 ms.  A kept plan holds its DataFrames, so no new
-    DataFrame can pass for one of them.  See the module docstring for what
-    is never kept."""
+    analysis cost 10-30 ms.  ``gen`` is a conf generation the caller has
+    just checked, with nothing since that could set the conf (it saves 2
+    of those commands; see table_statement).  A kept plan holds its
+    DataFrames, so no new DataFrame can pass for one of them.  See the
+    module docstring for what is never kept."""
     bind_views(spark, views)
-    kept = _kept(spark)
+    kept = _kept(spark, gen)
     hit = kept.plans.get(text)
     if hit is not None and hit[0].keys() == views.keys() \
             and all(hit[0][n] is df for n, df in views.items()):
@@ -177,3 +182,16 @@ def statement(spark: SparkSession, text: str, views: dict[str, DataFrame]) -> Da
         kept.plans.pop(text, None)
         STATEMENT_CALLS["uncached"] += 1
     return df
+
+
+def table_statement(spark: SparkSession, text: str, sf_dir: str,
+                    tables) -> DataFrame:
+    """statement() of ``text`` over base tables of ``sf_dir``: ``tables``
+    names the tables it reads, each bound as a view of its own name, or
+    maps view names to tables.  The loads and the kept-plan lookup share
+    one SQL-conf check (catalog.load_checked), so a warm build sends 3
+    gateway commands."""
+    if not isinstance(tables, dict):
+        tables = {t: t for t in tables}
+    gen, loaded = load_checked(spark, sf_dir, tables.values())
+    return statement(spark, text, {v: loaded[t] for v, t in tables.items()}, gen)

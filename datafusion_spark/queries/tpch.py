@@ -4,8 +4,8 @@ DataFusion runs the full TPC-H as its core benchmark from SQL text
 (reference: benchmarks/queries/q1.sql … q22.sql, one frontend into one
 LogicalPlan); so does this module.  Every entry is one Spark SQL statement
 (``fn.plan.final``) next to its oracle text (``fn.plan.inline``), and one
-runner passes the statement and the views it reads to
-``registry.statement``, which analyzes it once per session and conf.
+runner passes the statement and the tables it reads to
+``registry.table_statement``, which analyzes it once per session and conf.
 Plan choices that Catalyst would not make on its own are SQL hints
 (``BROADCAST``, ``MERGE``, ``SHUFFLE_HASH``) or a rewritten text; each is
 explained at its entry, and an entry whose final text differs from its
@@ -71,7 +71,7 @@ here for continuity, and the official joins/subqueries are exercised there.
 
 from __future__ import annotations
 
-from datafusion_spark.catalog import load_tables, tables_in
+from datafusion_spark.catalog import tables_in
 from datafusion_spark.queries.helpers import (
     SQL_REVENUE,
     sql_davg,
@@ -79,12 +79,12 @@ from datafusion_spark.queries.helpers import (
     sql_sum_limbs,
     sql_units6,
 )
-from datafusion_spark.queries.registry import Plan, query, statement
+from datafusion_spark.queries.registry import Plan, query, table_statement
 
 
 def _tpch(name: str, tags: tuple, oracle: str, final: str | None = None) -> None:
     """Register ``name``: the entry runs ``final`` (default: the oracle
-    text itself) through ``registry.statement`` over the base-table views
+    text itself) through ``registry.table_statement`` over the base tables
     either text reads; ``fn.plan`` holds both texts.  A table counts as
     read wherever its name stands as a word, whatever the case or the
     FROM-list spelling: a view missed here would silently resolve to one an
@@ -92,7 +92,7 @@ def _tpch(name: str, tags: tuple, oracle: str, final: str | None = None) -> None
     views = tables_in(oracle + (final or ""))
 
     def fn(spark, sf_dir):
-        return statement(spark, fn.plan.final, load_tables(spark, sf_dir, views))
+        return table_statement(spark, fn.plan.final, sf_dir, views)
 
     fn.__name__ = name
     fn.plan = Plan(final or oracle, oracle)

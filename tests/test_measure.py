@@ -52,7 +52,8 @@ def test_kernels_return_positive_seconds(spark, tmp_path):
 
 def test_tpch_builds_send_few_gateway_commands(spark):
     """Every tpch_* entry builds as one spark.sql statement over cached
-    views: at most 10 Py4J commands per warm build (7 measured).  The
+    views: at most 10 Py4J commands per warm build (3 measured, 5 for
+    tpch_official_*).  The
     Column-API spelling sent 64-280 per build, so a regression to it fails
     here as a number."""
     from datafusion_spark.queries import QUERIES

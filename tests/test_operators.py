@@ -1031,13 +1031,14 @@ def test_expr_fold_helpers_bit_equal(spark):
     assert norm(old) == norm(new)
 
 
-def test_two_level_distinct_guard_shapes(spark, monkeypatch):
+def test_two_level_distinct_guard_shapes(at_scale, monkeypatch):
     """r13: multi-DISTINCT entries carry two plan shapes behind the
     input-size guard (helpers.two_level_distinct) — Spark's Expand-based
     single-scan aggregate below the crossover (the shape the driver's
     bench always sees at the testdata SFs), independent single-distinct
     branches above it.  Both shapes must return identical rows at two SFs
-    and must actually BE the two shapes (Expand present/absent)."""
+    and must actually BE the two shapes (Expand present/absent), their
+    exchanges taken under the split sizing of tables at scale."""
     import re
     from collections import Counter
 
@@ -1048,6 +1049,7 @@ def test_two_level_distinct_guard_shapes(spark, monkeypatch):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
 
+    spark = at_scale
     for sf in (SF_SMALL, "/root/testdata/sf0.01"):
         for name in ("cb_overview_counts", "cbx_q00", "cbx_q01"):
             monkeypatch.delenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES",

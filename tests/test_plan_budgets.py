@@ -24,6 +24,9 @@ from tests.conftest import SF_SMALL
 from tools.capture_plans import load_manifest
 
 MANIFEST = load_manifest()
+# The shape checks below run under the split sizing of tables at scale
+# (conftest.AT_SCALE_SPLITS), where the manifest is captured too.
+pytestmark = pytest.mark.usefixtures("at_scale")
 
 # budget -> entries whose shuffle exchanges must stay within it (the
 # audited counts of the initial plan at the time each plan was tuned, every

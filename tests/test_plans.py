@@ -44,13 +44,16 @@ def test_events_read_leaves_other_tables_types(spark):
     """Reading events as LTZ turns NTZ inference off for that read only:
     lineitem's dtypes in a session that read events first equal a fresh
     session's, and events.ts keeps its LTZ type and pushed filters."""
-    from datafusion_spark.catalog import _read_table
+    from datafusion_spark.catalog import _read_table, table_path
 
-    fresh = _read_table(spark.newSession(), SF_SMALL, "lineitem").dtypes
+    def read(session, name):
+        return _read_table(session, table_path(SF_SMALL, name), name)
+
+    fresh = read(spark.newSession(), "lineitem").dtypes
     assert "timestamp_ntz" in dict(fresh).values()
     session = spark.newSession()
-    ev = _read_table(session, SF_SMALL, "events")
-    assert _read_table(session, SF_SMALL, "lineitem").dtypes == fresh
+    ev = read(session, "events")
+    assert read(session, "lineitem").dtypes == fresh
     assert dict(ev.dtypes)["ts"] == "timestamp"
     ev = ev.filter(F.col("ts") >= "2024-01-02 00:00:00")
     assert any("ts" in f for f in pushed_filters(ev)), pushed_filters(ev)
@@ -86,12 +89,14 @@ def test_single_shuffle_sessionization():
     assert MANIFEST["events_sessionization"].get("Exchange", 0) <= 2
 
 
-def test_explain_analyze_reports_final_plan(spark):
+def test_explain_analyze_reports_final_plan(at_scale):
     """explain_analyze executes the DataFrame's own query execution, so the
-    plan it reports is the final adaptive plan, with per-operator rows."""
+    plan it reports is the final adaptive plan, with per-operator rows
+    (under the split sizing of tables at scale, where q6 has its
+    exchange)."""
     from datafusion_spark.plans import explain_analyze
 
-    out = explain_analyze(QUERIES["tpch_q6"](spark, SF_SMALL))
+    out = explain_analyze(QUERIES["tpch_q6"](at_scale, SF_SMALL))
     assert out["rows"] == 1
     assert "isFinalPlan=true" in out["final_plan"], out["final_plan"]
     assert out["initial"]["Exchange"] == out["final"]["Exchange"] == 1

@@ -1,5 +1,6 @@
 """Every registered query runs at sf0.001, returns a stable schema and
-plans exactly the operator counts plans/manifest.json records for it.
+plans exactly the operator counts plans/manifest.json records for it
+(under conftest.AT_SCALE_SPLITS, the split sizing of tables at scale).
 
 This is the cheap half of the correctness gate (the driver's entry()
 smoke); the oracle comparison lives in test_oracle_parity.py.
@@ -78,7 +79,8 @@ def _contains_list_or_map(dt: DataType) -> bool:
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(spark, manifest, name):
+def test_query_runs(at_scale, manifest, name):
+    spark = at_scale
     df = QUERIES[name](spark, SF_SMALL)
     # Driver-harness contract: oracle-checked entries must not expose
     # ARRAY/MAP-typed output columns — render them to text (array_join /

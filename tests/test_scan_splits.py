@@ -1,5 +1,6 @@
-"""Row-group-aligned scan copies (catalog._split_path) and the build-path
-session setting (no per-Column call-site capture)."""
+"""Row-group-aligned scan copies and single-split tables read as one
+partition (catalog._split_path), and the build-path session setting (no
+per-Column call-site capture)."""
 
 from __future__ import annotations
 
@@ -11,10 +12,16 @@ from urllib.parse import urlparse
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
 from datafusion_spark import catalog
-from tests.conftest import SF_ORACLE
+from datafusion_spark.plans import explain_str
+from datafusion_spark.queries import QUERIES
+from tests.conftest import AT_SCALE_SPLITS, SF_ORACLE, SF_SMALL
+from tools.measure import confs_applied, gateway_commands, stage_records
 
 _MPB = "spark.sql.files.maxPartitionBytes"
+_OPEN = "spark.sql.files.openCostInBytes"
 
 
 @pytest.fixture
@@ -41,7 +48,7 @@ def test_default_settings_write_no_copy(spark, sf_copy):
     sf, derived = sf_copy
     for name in catalog.TABLES:
         assert catalog._split_path(spark, SF_ORACLE, name) == \
-            catalog.table_path(SF_ORACLE, name)
+            (catalog.table_path(SF_ORACLE, name), True)
     df = catalog.load_table(spark, sf, "lineitem")
     assert _scanned_file(df) == catalog.table_path(sf, "lineitem")
     assert not os.path.exists(derived)
@@ -79,7 +86,7 @@ def test_split_copy_rows_order_and_reuse(spark, sf_copy):
 
         # A second resolution reuses the copy as written.
         built = os.stat(copy).st_mtime_ns
-        assert catalog._split_path(spark, sf, "lineitem") == copy
+        assert catalog._split_path(spark, sf, "lineitem") == (copy, False)
         assert os.stat(copy).st_mtime_ns == built
 
         # A rewritten source (new mtime) gets a new copy.
@@ -106,7 +113,7 @@ def test_split_copy_matches_the_scan_split_count(spark, sf_copy):
     def scan(open_cost):
         spark.conf.set(key, open_cost)
         splits = catalog._scan_splits(spark, os.path.getsize(src))
-        path = catalog._split_path(spark, sf, "lineitem")
+        path, _ = catalog._split_path(spark, sf, "lineitem")
         return splits, path, spark.read.parquet(path)
 
     try:
@@ -148,6 +155,162 @@ def test_load_table_follows_the_split_count(spark, sf_copy):
         assert frames[2] is frames[0]
     finally:
         spark.conf.set(_MPB, saved)
+
+
+def _plan(df) -> str:
+    return explain_str(df, "simple")
+
+
+def _run(spark, df):
+    """df's rows and the Spark jobs collecting them ran (tools.measure
+    stage_records)."""
+    sc = spark.sparkContext
+    group = f"scan-splits-{time.time_ns()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, stage_records(spark, group)
+
+
+def _agg_and_sort(orders):
+    """An aggregate and an ORDER BY over ``orders``."""
+    return (orders.groupBy("o_orderstatus").agg(F.count("*").alias("n"),
+                                                F.max("o_orderkey").alias("k")),
+            orders.select("o_orderkey", "o_custkey").orderBy("o_orderkey"))
+
+
+def _same_rows(df, ref, rows):
+    """``rows`` of ``df`` equal ``ref``'s, in order if df sorts."""
+    want = ref.collect()
+    if "Sort" not in _plan(df):
+        rows, want = sorted(rows), sorted(want)
+    assert rows == want
+
+
+@pytest.fixture
+def small_copy(tmp_path):
+    """A writable data dir holding SF_SMALL's orders and lineitem under a
+    unique basename; its derived_splits dir is removed afterwards."""
+    sf = tmp_path / f"single{os.getpid()}x{time.time_ns()}"
+    sf.mkdir()
+    for name in ("orders", "lineitem"):
+        shutil.copyfile(catalog.table_path(SF_SMALL, name), sf / f"{name}.parquet")
+    yield str(sf)
+    shutil.rmtree(os.path.join(catalog.repo_root(), "spark-warehouse",
+                               "derived_splits", sf.name), ignore_errors=True)
+
+
+def test_single_split_table_plans_no_exchange(spark):
+    """A base table of one split is read as one partition: an aggregate
+    and an ORDER BY over it plan no exchange (the sort samples no range
+    bounds) and run one job each, with the rows of the plain scan."""
+    path = catalog.table_path(SF_SMALL, "orders")
+    assert catalog._scan_splits(spark, os.path.getsize(path)) == 1
+    orders = catalog.load_table(spark, SF_SMALL, "orders")
+    assert orders.rdd.getNumPartitions() == 1
+    for df, ref in zip(_agg_and_sort(orders), _agg_and_sort(spark.read.parquet(path))):
+        assert "Exchange" not in _plan(df)
+        rows, jobs = _run(spark, df)
+        assert len(jobs) == 1, jobs
+        _same_rows(df, ref, rows)
+
+
+def test_table_of_several_splits_keeps_its_exchanges(spark, small_copy):
+    """The same table cut into several splits by a lower open cost keeps
+    its partitions, and the aggregate and ORDER BY keep their exchanges."""
+    path = catalog.table_path(small_copy, "orders")
+    with confs_applied(spark, {_OPEN: "1k"}):
+        splits = catalog._scan_splits(spark, os.path.getsize(path))
+        assert splits >= 2
+        orders = catalog.load_table(spark, small_copy, "orders")
+        assert orders.rdd.getNumPartitions() == splits
+        agg, ordered = _agg_and_sort(orders)
+        assert "Exchange hashpartitioning" in _plan(agg)
+        assert "Exchange rangepartitioning" in _plan(ordered)
+        for df, ref in zip((agg, ordered), _agg_and_sort(spark.read.parquet(path))):
+            rows, jobs = _run(spark, df)
+            assert len(jobs) >= 2, jobs
+            _same_rows(df, ref, rows)
+
+
+def test_join_with_a_multi_split_side_shuffles_both(spark, small_copy):
+    """A shuffle join of a single-split table with a table of several
+    splits plans as before: both sides shuffle to the shuffle partition
+    count, and the multi-split scan runs one task per split."""
+    orders_path = catalog.table_path(small_copy, "orders")
+    lines_path = catalog.table_path(small_copy, "lineitem")
+    with confs_applied(spark, {_OPEN: "96k",
+                               "spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        assert catalog._scan_splits(spark, os.path.getsize(orders_path)) == 1
+        splits = catalog._scan_splits(spark, os.path.getsize(lines_path))
+        assert splits >= 2
+
+        def join(orders, lines):
+            return (orders.join(lines, orders.o_orderkey == lines.l_orderkey)
+                    .groupBy("o_orderstatus")
+                    .agg(F.count("*").alias("n"), F.max("l_linenumber").alias("m")))
+
+        df = join(catalog.load_table(spark, small_copy, "orders"),
+                  catalog.load_table(spark, small_copy, "lineitem"))
+        plan = _plan(df)
+        parts = spark.conf.get("spark.sql.shuffle.partitions")
+        assert plan.count("Exchange hashpartitioning") == 3, plan
+        assert f", {parts}), ENSURE_REQUIREMENTS" in plan
+        assert "SinglePartition" not in plan
+        rows, jobs = _run(spark, df)
+        scans = sorted(s["tasks"] for j in jobs for s in j["stages"] if s["input_b"])
+        assert scans == [1, splits], jobs
+        _same_rows(df, join(spark.read.parquet(orders_path),
+                            spark.read.parquet(lines_path)), rows)
+
+
+def test_split_decision_follows_the_open_cost(spark, small_copy):
+    """Changing openCostInBytes in a session flips the decision at the
+    next load, and back at the first setting the first relation is served
+    again."""
+    frames = []
+    for cost in (None, "1k", None):
+        with confs_applied(spark, {_OPEN: cost} if cost else {}):
+            df = catalog.load_table(spark, small_copy, "orders")
+            agg = _agg_and_sort(df)[0]
+            assert ("Exchange" in _plan(agg)) == (cost is not None), cost
+            frames.append(df)
+    assert frames[2] is frames[0] and frames[1] is not frames[0]
+
+
+def test_warm_load_sends_only_the_conf_check(spark):
+    """A warm load of every table sends the 2 gateway commands of its one
+    conf check and nothing else: the split decision is kept with the
+    relation under the conf generation."""
+    catalog.load_tables(spark, SF_SMALL)
+    with gateway_commands() as sent:
+        catalog.load_tables(spark, SF_SMALL)
+    assert sent[0] == 2
+
+
+# The entries of both perfbench workloads.
+_PERFBENCH = """
+    tpch_q1 tpch_q6 tpch_q12 tpch_q13 cb_q00 cb_q03 cb_q14 cb_q15 cb_q19
+    cb_q31 job_1a compat_sql_strings compat_sql_datetime
+    source_parquet_zstd_roundtrip
+""".split()
+
+
+def _canon(rows) -> list:
+    def value(v):
+        return float(f"{v:.9g}") if isinstance(v, float) else v
+    return sorted((tuple(value(v) for v in r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("name", _PERFBENCH)
+def test_rows_match_at_scale_split_sizing(spark, name):
+    """Each benchmark entry returns the same rows with its tables read as
+    one partition and under the split sizing of tables at scale."""
+    rows = _canon(QUERIES[name](spark, SF_SMALL).collect())
+    with confs_applied(spark, AT_SCALE_SPLITS):
+        assert _canon(QUERIES[name](spark, SF_SMALL).collect()) == rows
 
 
 def test_dataframe_debugging_off(spark, monkeypatch):

@@ -13,7 +13,10 @@ and no ``ReusedExchange`` (tpcds_q14 counts 49 exchanges; its executed
 plan at sf0.1 runs 14 and reuses 13).  Counts
 are taken warm, in the state tests/test_registry_smoke.py::test_query_runs
 compares them in: invoke, collect, invoke again, count — on the tier-1
-session (local[4], 4 shuffle partitions) at SF_SMALL.  A plan change is a
+session (local[4], 4 shuffle partitions) at SF_SMALL, under the split
+sizing that cuts every SF_SMALL table into 2 to 4 splits as at scale
+(tests/conftest.py AT_SCALE_SPLITS: a table of one split plans no
+exchange).  A plan change is a
 one-line diff of the entry whose plan changed; review it before
 committing.
 """
@@ -52,7 +55,8 @@ def main() -> None:
     from datafusion_spark import get_spark
     from datafusion_spark.plans import operator_counts
     from datafusion_spark.queries import QUERIES
-    from tests.conftest import SESSION, SF_SMALL
+    from tests.conftest import AT_SCALE_SPLITS, SESSION, SF_SMALL
+    from tools.measure import confs_applied
 
     names = args.names or list(QUERIES)
     unknown = [n for n in names if n not in QUERIES]
@@ -62,14 +66,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     manifest = {k: v for k, v in load_manifest().items() if k in QUERIES}
     failed = 0
-    for name in names:
-        fn = QUERIES[name]
-        try:
-            fn(spark, SF_SMALL).collect()
-            manifest[name] = operator_counts(fn(spark, SF_SMALL))
-        except Exception as e:  # noqa: BLE001 - keep the old line, report
-            failed += 1
-            print(f"FAIL {name}: {str(e).splitlines()[0][:160]}", file=sys.stderr)
+    with confs_applied(spark, AT_SCALE_SPLITS):
+        for name in names:
+            fn = QUERIES[name]
+            try:
+                fn(spark, SF_SMALL).collect()
+                manifest[name] = operator_counts(fn(spark, SF_SMALL))
+            except Exception as e:  # noqa: BLE001 - keep the old line, report
+                failed += 1
+                print(f"FAIL {name}: {str(e).splitlines()[0][:160]}", file=sys.stderr)
     write_manifest(manifest)
     print(f"wrote {MANIFEST}: {len(names) - failed} of {len(names)} captured",
           file=sys.stderr)
