@@ -6,18 +6,24 @@ datafusion/catalog-listing).  Spark-native equivalent: ``spark.read.parquet``
 which gives us predicate pushdown, column pruning, partition pruning and
 vectorized Arrow-compatible scans for free.
 
-A base-table file that Spark reads as one split is returned as one
-partition (``coalesce(1)``), as DataFusion keeps a file under
-``repartition_file_min_size`` in one partition and plans an aggregate over
-it as one ``AggregateMode::Single`` operator.  Catalyst then sees
-``SinglePartition``: an aggregate, sort or window over the table plans no
-exchange, nor does a join whose every side is one partition, while a
-join with a multi-split side still shuffles both sides to the shuffle
-partition count.  Such a file is at most ``openCostInBytes`` (4 MB by
-default), and adaptive execution coalesced every shuffle downstream of it
-to one partition anyway, so the exchange ran the same single task one
-stage and one job later.  The decision is taken with the split-copy choice once
-per conf generation (_split_path).
+A base-table file that Spark reads as one split and that is at most
+adaptive execution's ``coalescePartitions.minPartitionSize`` (1 MB) is
+returned as one partition (``coalesce(1)``), as DataFusion keeps a file
+under ``repartition_file_min_size`` in one partition and plans an
+aggregate over it as one ``AggregateMode::Single`` operator.  Catalyst
+then sees ``SinglePartition``: an aggregate, sort or window over the table
+plans no exchange, nor does a join whose every side is one partition,
+while a join with a multi-split side still shuffles both sides to the
+shuffle partition count.  Adaptive execution (``parallelismFirst``, the
+default) sizes the partitions of a shuffle at max(min(64 MB, its bytes /
+default parallelism), minPartitionSize), so it runs a shuffle on one task
+only when that shuffle moves at most minPartitionSize, and spreads a
+larger one over up to one task per core.  The file size stands in for the
+shuffle's: an exchange over a file of at most 1 MB mostly ran one task one
+stage and one job later, while a larger single-split file (up to
+``openCostInBytes``, 4 MB) keeps its exchanges and their parallelism.
+The decision is taken with the split-copy choice once per conf generation
+(_split_path).
 
 At 100 TB these tables would be directory-partitioned (e.g. orders by
 o_orderdate month); ``spark.read.parquet`` on a directory picks up hive-style
@@ -129,22 +135,22 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 # Resolved base-table relations per (applicationId, sf_dir, table,
-# mtime_ns, the file scanned, whether it is one split).  Creating a parquet
-# relation costs ~0.15-0.4 s of DRIVER work per call even warm (py4j + file
-# listing + a footer-read schema-inference job) — measured r12; a whole
-# bench run pays it hundreds of times.  Caching the resolved DataFrame is
+# mtime_ns, the file scanned, whether it is read as one partition).
+# Creating a parquet relation costs ~0.15-0.4 s of DRIVER work per call
+# even warm (py4j + file listing + a footer-read schema-inference job) —
+# measured r12; a whole bench run pays it hundreds of times.  Caching the resolved DataFrame is
 # the DataFrame-path twin of register_views()' per-session view cache (and
 # of DataFusion's register_parquet, which lists once at registration): pure
 # plan/metadata reuse — every execution still scans the parquet files.  The
 # path's mtime_ns keys the entry so a regenerated table (make_scale_data
 # overwriting a scratch sf_dir mid-session) is re-resolved, never served
-# from a stale file index; the file scanned and its single-split flag key
-# it so a split-count change (another maxPartitionBytes or openCostInBytes)
-# reads the copy cut for it, in as many partitions.
+# from a stale file index; the file scanned and its one-partition flag
+# key it so a split-count change (another maxPartitionBytes or
+# openCostInBytes) reads the copy cut for it, in as many partitions.
 _RELATION_CACHE: dict[tuple, DataFrame] = {}
 # The file each (applicationId, sf_dir, table, mtime_ns) scans and whether
-# it is one split, with the conf generation they were chosen under
-# (_split_path reads the SQL conf).
+# it is read as one partition, with the conf generation they were chosen
+# under (_split_path reads the SQL conf).
 _SCANNED: dict[tuple[str, str, str, int], tuple[int, str, bool]] = {}
 # applicationId -> [session, its SQL conf, the conf map last read, generation]
 _CONF_STATE: dict[str, list] = {}
@@ -276,14 +282,23 @@ def _scan_splits(spark: SparkSession, file_bytes: int) -> int:
     return math.ceil(file_bytes / split)
 
 
+def _one_task_bytes(spark: SparkSession) -> int:
+    """The largest shuffle adaptive execution always runs as one task:
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``."""
+    as_bytes = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    return as_bytes(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB"))
+
+
 def _split_path(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, bool]:
-    """The file to scan for one table, and whether Spark reads it as one
-    split: the source, or a row-group-aligned copy when the source has
+    """The file to scan for one table, and whether to read it as one
+    partition: the source, or a row-group-aligned copy when the source has
     fewer row groups than Spark has splits.
 
     A source of one split under the session's split sizing (at 4 cores, a
-    file of at most ``openCostInBytes``, 4 MB) is scanned as it is and
-    read as one partition (see the module docstring).  A parquet split
+    file of at most ``openCostInBytes``, 4 MB) is scanned as it is, and
+    read as one partition when it is at most ``minPartitionSize`` (1 MB;
+    see the module docstring).  A parquet split
     reads only the row groups whose midpoint falls inside it, so a
     single-row-group file of three splits runs as one busy task and two
     empty ones (sf0.1 lineitem: one task reads all 600k rows).  The copy
@@ -304,7 +319,7 @@ def _split_path(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, bool]
         return src, False
     splits = _scan_splits(spark, st.st_size)
     if splits < 2:
-        return src, True
+        return src, st.st_size <= _one_task_bytes(spark)
     import pyarrow.parquet as pq
 
     try:

@@ -21,13 +21,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_spark.catalog import register_views, tables_in
+from datafusion_spark.catalog import tables_in
 from datafusion_spark.compat.dialect import translate_sql
 from datafusion_spark.queries.registry import query, table_statement
 
 
 def _run(spark: SparkSession, sf_dir: str, df_sql: str) -> DataFrame:
-    sql = translate_sql(df_sql)
+    return _run_plain(spark, sf_dir, translate_sql(df_sql))
+
+
+def _run_plain(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Spark SQL ``sql`` over the base tables it reads, without dialect
+    translation: for entries whose text is ALREADY valid in both Spark and
+    the oracle (the pg_compat surface), and for _run once it translated."""
     return table_statement(spark, sql, sf_dir, tables_in(sql))
 
 
@@ -433,13 +439,6 @@ def compat_sql_qualify(spark, sf_dir):
     QUALIFY rn <= 2 AND n_ord > 20
     ORDER BY o_custkey, rn
     """)
-
-
-def _run_plain(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Like _run but without dialect translation: for entries whose text is
-    ALREADY valid in both Spark and the oracle (the pg_compat surface)."""
-    register_views(spark, sf_dir)
-    return spark.sql(sql)
 
 
 _PG_COMPAT_SQL = """

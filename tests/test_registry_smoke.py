@@ -1,6 +1,7 @@
-"""Every registered query runs at sf0.001, returns a stable schema and
-plans exactly the operator counts plans/manifest.json records for it
-(under conftest.AT_SCALE_SPLITS, the split sizing of tables at scale).
+"""Every registered query runs at sf0.001 under the default session,
+returns a stable schema and plans exactly the operator counts
+plans/manifest.json records for it (those under conftest.AT_SCALE_SPLITS,
+the split sizing of tables at scale).
 
 This is the cheap half of the correctness gate (the driver's entry()
 smoke); the oracle comparison lives in test_oracle_parity.py.
@@ -16,8 +17,9 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from datafusion_spark.plans import operator_counts
 from datafusion_spark.queries import ORACLES, QUERIES, TAGS
-from tests.conftest import SF_ORACLE, SF_SMALL
+from tests.conftest import AT_SCALE_SPLITS, SF_ORACLE, SF_SMALL
 from tools.capture_plans import load_manifest
+from tools.measure import confs_applied
 
 
 def test_registry_nonempty():
@@ -79,8 +81,7 @@ def _contains_list_or_map(dt: DataType) -> bool:
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(at_scale, manifest, name):
-    spark = at_scale
+def test_query_runs(spark, manifest, name):
     df = QUERIES[name](spark, SF_SMALL)
     # Driver-harness contract: oracle-checked entries must not expose
     # ARRAY/MAP-typed output columns — render them to text (array_join /
@@ -96,11 +97,13 @@ def test_query_runs(at_scale, manifest, name):
     rows = df.collect()
     assert rows is not None
     assert len(df.columns) > 0
-    # stable schema: re-planning yields identical columns
-    df2 = QUERIES[name](spark, SF_SMALL)
-    assert df.columns == df2.columns
-    # plan shape, warm: exact operator counts
-    counts = operator_counts(df2)
+    # stable schema: re-planning yields identical columns, under the
+    # at-scale split sizing too
+    with confs_applied(spark, AT_SCALE_SPLITS):
+        df2 = QUERIES[name](spark, SF_SMALL)
+        assert df.columns == df2.columns
+        # plan shape at scale, warm: exact operator counts
+        counts = operator_counts(df2)
     assert counts == manifest.get(name), _counts_diff(
         name, manifest.get(name), counts)
 

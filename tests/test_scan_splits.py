@@ -22,6 +22,7 @@ from tools.measure import confs_applied, gateway_commands, stage_records
 
 _MPB = "spark.sql.files.maxPartitionBytes"
 _OPEN = "spark.sql.files.openCostInBytes"
+_MIN = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
 
 @pytest.fixture
@@ -44,7 +45,8 @@ def _scanned_file(df) -> str:
 
 def test_default_settings_write_no_copy(spark, sf_copy):
     """Files under the open cost are one split at default settings: every
-    table scans its source file and nothing is written."""
+    table scans its source file, read as one partition (every SF_ORACLE
+    file is at most 1 MB), and nothing is written."""
     sf, derived = sf_copy
     for name in catalog.TABLES:
         assert catalog._split_path(spark, SF_ORACLE, name) == \
@@ -233,6 +235,27 @@ def test_table_of_several_splits_keeps_its_exchanges(spark, small_copy):
             rows, jobs = _run(spark, df)
             assert len(jobs) >= 2, jobs
             _same_rows(df, ref, rows)
+
+
+def test_one_split_over_the_min_partition_size_keeps_its_exchanges(spark, small_copy):
+    """A file of one split larger than adaptive execution's
+    minPartitionSize keeps Spark's partition, since a shuffle over it may
+    run on more than one task: the aggregate and ORDER BY keep their
+    exchanges.  At minPartitionSize itself the file is one partition."""
+    path = catalog.table_path(small_copy, "orders")
+    size = os.path.getsize(path)
+    with confs_applied(spark, {_MIN: str(size - 1)}):
+        assert catalog._scan_splits(spark, size) == 1
+        assert catalog._split_path(spark, small_copy, "orders") == (path, False)
+        orders = catalog.load_table(spark, small_copy, "orders")
+        assert orders.rdd.getNumPartitions() == 1
+        agg, ordered = _agg_and_sort(orders)
+        assert "Exchange hashpartitioning" in _plan(agg)
+        assert "Exchange rangepartitioning" in _plan(ordered)
+    with confs_applied(spark, {_MIN: str(size)}):
+        assert catalog._split_path(spark, small_copy, "orders") == (path, True)
+        assert "Exchange" not in _plan(
+            _agg_and_sort(catalog.load_table(spark, small_copy, "orders"))[0])
 
 
 def test_join_with_a_multi_split_side_shuffles_both(spark, small_copy):
